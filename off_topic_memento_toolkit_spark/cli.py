@@ -17,11 +17,11 @@ from pyspark.sql import SparkSession
 from .operators.measures import MEASURE_REGISTRY
 from .plans.checkpoints import CheckpointStore
 from .plans.pipeline import dedup_pipeline, detect_off_topic, story_pipeline
-from .session import get_spark
+from .session import get_spark, pin_for_session, session_pins_scope
 from .sources.sinks import (
-    save_as_csv,
-    save_as_goldstandard,
-    save_as_json,
+    REPORT_WRITERS,
+    detect_report,
+    report_overall,
     save_uri_list,
 )
 
@@ -234,8 +234,7 @@ def main(argv=None, spark=None):
                              "semi-join)")
     detect.add_argument("-o", "--output", required=True)
     detect.add_argument("-ot", "--output-type", default="json",
-                        choices=["json", "csv", "goldstandard",
-                                 "csv-dist", "json-dist"])
+                        choices=list(REPORT_WRITERS))
     detect.add_argument("-tm", "--timemap-measures", default="cosine")
     detect.add_argument("--offtopic-list")
     detect.add_argument("--ontopic-list")
@@ -429,40 +428,26 @@ def main(argv=None, spark=None):
         measures, thresholds = parse_measures(args.timemap_measures)
         pages, access_errors = _read_pages(spark, args.input)
         pages = _apply_consider(spark, pages, args.consider)
-        result = detect_off_topic(pages, measures=measures, thresholds=thresholds)
-        scores = result["scores"]
-        if access_errors is not None:
-            from .operators.measures import with_error_kinds
+        if access_errors is not None and args.consider:
+            # the consideration contract covers error rows too
+            from .operators.curation import consider_only
 
-            if args.consider:
-                # the consideration contract covers error rows too
-                from .operators.curation import consider_only
-
-                access_errors = consider_only(
-                    access_errors, _read_consider(spark, args.consider))
-            scores = with_error_kinds(scores, memento_access=access_errors)
-        if args.output_type == "json":
-            save_as_json(scores, result["overall"], args.output,
-                         meta=result["meta"])
-        elif args.output_type == "csv":
-            save_as_csv(scores, result["overall"], args.output,
-                        meta=result["meta"])
-        elif args.output_type == "csv-dist":
-            from .sources.sinks import save_as_csv_distributed
-
-            save_as_csv_distributed(scores, result["overall"], args.output,
-                                    meta=result["meta"])
-        elif args.output_type == "json-dist":
-            from .sources.sinks import save_as_json_distributed
-
-            save_as_json_distributed(scores, result["overall"], args.output,
-                                     meta=result["meta"])
-        else:
-            save_as_goldstandard(result["overall"], args.output)
-        if args.offtopic_list:
-            save_uri_list(result["overall"], "off-topic", args.offtopic_list)
-        if args.ontopic_list:
-            save_uri_list(result["overall"], "on-topic", args.ontopic_list)
+            access_errors = consider_only(
+                access_errors, _read_consider(spark, args.consider))
+        # score once, write many: every output reads one pinned report
+        # (the measure suite's own pin feeds it), and both pins are
+        # released once the last output is written
+        with session_pins_scope():
+            result = detect_off_topic(pages, measures=measures,
+                                      thresholds=thresholds)
+            report = pin_for_session(detect_report(
+                result["scores"], result["meta"],
+                memento_access=access_errors))
+            REPORT_WRITERS[args.output_type](report, args.output)
+            for status, path in (("off-topic", args.offtopic_list),
+                                 ("on-topic", args.ontopic_list)):
+                if path:
+                    save_uri_list(report_overall(report), status, path)
 
     elif args.command == "dedup":
         pages, _ = _read_pages(spark, args.input)

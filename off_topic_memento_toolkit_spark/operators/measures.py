@@ -245,6 +245,26 @@ def score_timemap_measures(
     Columns: urit, urim, measuretype, measure, comparison_score, tokenized,
     stemmed, removed_boilerplate, topic_status, error_msg.
     """
+    return _scores_and_enrichment(pages, measures, thresholds,
+                                  first_anchor_strategy, metadata=False)[0]
+
+
+def scores_with_metadata(
+    pages: DataFrame,
+    measures=DEFAULT_MEASURES,
+    thresholds: dict | None = None,
+) -> tuple:
+    """(:func:`score_timemap_measures`, :func:`memento_metadata`) projected
+    from ONE enrichment: the metadata columns come from the same pinned
+    frame the measures read, so the extract/tokenize/simhash UDFs run once
+    for both."""
+    scores, enriched = _scores_and_enrichment(pages, measures, thresholds,
+                                              "window", metadata=True)
+    return scores, _metadata_columns(enriched)
+
+
+def _scores_and_enrichment(pages, measures, thresholds, first_anchor_strategy,
+                           metadata):
     measures = list(measures)
     unknown = [m for m in measures if m not in MEASURE_REGISTRY]
     if unknown:
@@ -261,7 +281,7 @@ def score_timemap_measures(
     df = enrich_with_firsts(
         pages,
         need_top20=need_top20,
-        need_raw_simhash="raw_simhash" in pairwise,
+        need_raw_simhash=metadata or "raw_simhash" in pairwise,
         need_tf_simhash="tf_simhash" in pairwise,
         need_lev=bool({"levenshtein", "nlevenshtein"} & set(pairwise)),
         strategy=first_anchor_strategy,
@@ -271,23 +291,27 @@ def score_timemap_measures(
     # projection (identical plan), in the pinned path they let the cache
     # drop the widest arrays below
     df = with_pairwise_scalars(df, pairwise)
-    if pairwise and grouped:
-        # the union fans out into two plan branches; without a persist the
+    if bool(pairwise) + bool(grouped) + metadata > 1:
+        # more than one consumer (pairwise branch, grouped branch, metadata
+        # projection) fans the plan out; without a persist the
         # extract/tokenize UDFs would run once per branch (the reference's
         # 12x-repreprocess bug reborn at plan level — SURVEY §4.1).
         # Registered so long-lived sessions can release between batches
         # (session.release_session_pins).
         #
         # Project BEFORE the pin (guide §2.3): a persist materializes every
-        # column past Catalyst's pruning, and neither branch reads the raw
-        # html payload, the url, the language tag — or, now that the set
-        # algebra is scalarized above, the first-anchor token and top-20
-        # arrays (the widest remaining cached columns; `tokens` itself
-        # stays for the LSI/LDA branch and the row-level null gates).
+        # column past Catalyst's pruning, and no consumer reads the raw
+        # html payload, the url — or, now that the set algebra is
+        # scalarized above, the first-anchor token and top-20 arrays (the
+        # widest remaining cached columns; `tokens` itself stays for the
+        # LSI/LDA branch and the row-level null gates).  `lang` stays for
+        # the metadata projection.
         from ..session import pin_for_session
 
-        droppable = ("html", "url", "lang",
-                     "first_tokens", "top20", "first_top20")
+        droppable = ["html", "url", "first_tokens", "top20", "first_top20"]
+        if "raw_simhash" not in pairwise:
+            # computed for the metadata only; its anchor is never read
+            droppable.append("first_raw_simhash")
         df = pin_for_session(
             df.drop(*[c for c in droppable if c in df.columns]))
 
@@ -333,7 +357,7 @@ def score_timemap_measures(
     for part in long_parts[1:]:
         scores = scores.unionByName(part)
 
-    return label_scores(scores, thresholds)
+    return label_scores(scores, thresholds), df
 
 
 def label_scores(scores: DataFrame, thresholds: dict) -> DataFrame:
@@ -361,21 +385,40 @@ def label_scores(scores: DataFrame, thresholds: dict) -> DataFrame:
     )
 
 
-def overall_status(scores: DataFrame) -> DataFrame:
-    """OR across measures (otmt/measuremodel.py:504-530): off-topic if ANY
-    measure voted off-topic; all-error mementos get no overall status."""
-    return scores.groupBy("urit", "urim").agg(
+def _overall_columns(window=None):
+    """The overall verdict columns, as aggregates (``window=None``) or as
+    the same aggregates over ``window``."""
+    over = (lambda c: c.over(window)) if window is not None else (lambda c: c)
+    return [
         F.when(
-            F.max(F.when(F.col("topic_status") == "off-topic", 1).otherwise(0)) == 1,
+            over(F.max(F.when(F.col("topic_status") == "off-topic", 1)
+                       .otherwise(0))) == 1,
             F.lit("off-topic"),
         )
         .when(
-            F.count(F.col("topic_status")) > 0,
+            over(F.count(F.col("topic_status"))) > 0,
             F.lit("on-topic"),
         )
         .alias("overall_topic_status"),
-        F.max("error_msg").alias("any_error_msg"),
-    )
+        over(F.max("error_msg")).alias("any_error_msg"),
+    ]
+
+
+def overall_status(scores: DataFrame) -> DataFrame:
+    """OR across measures (otmt/measuremodel.py:504-530): off-topic if ANY
+    measure voted off-topic; all-error mementos get no overall status."""
+    return scores.groupBy("urit", "urim").agg(*_overall_columns())
+
+
+def with_overall_status(scores: DataFrame) -> DataFrame:
+    """``scores`` with :func:`overall_status`'s columns on every row —
+    the same values as joining the aggregate back, from ONE read of
+    ``scores`` (a window per memento), so a plan built over it runs the
+    measure suite once."""
+    from pyspark.sql import Window
+
+    return scores.select(
+        "*", *_overall_columns(Window.partitionBy("urit", "urim")))
 
 
 def with_error_kinds(
@@ -498,8 +541,11 @@ def with_error_kinds(
 def memento_metadata(pages: DataFrame) -> DataFrame:
     """Per-memento metadata table (otmt/metadata_calcluations.py): raw simhash
     value, content length, language passthrough, memento datetime."""
-    df = prepare_pages(pages, need_tf_simhash=False)
-    return df.select(
+    return _metadata_columns(prepare_pages(pages, need_tf_simhash=False))
+
+
+def _metadata_columns(enriched: DataFrame) -> DataFrame:
+    return enriched.select(
         "urit", "urim",
         F.col("raw_simhash").alias("simhash"),
         F.col("raw_len").alias("content_length"),

@@ -26,11 +26,7 @@ from ..operators.lsh import (
     minhash_band_table,
     simhash_candidate_pairs,
 )
-from ..operators.measures import (
-    memento_metadata,
-    overall_status,
-    score_timemap_measures,
-)
+from ..operators.measures import overall_status, scores_with_metadata
 from ..operators.timeline import prepare_pages
 from ..operators.verify import verified_pairs_jaccard, verified_pairs_lcs
 
@@ -41,10 +37,11 @@ def detect_off_topic(
     thresholds: dict | None = None,
 ):
     """The flagship query (bin/detect_off_topic): per-memento scores vs the
-    first memento, per-measure labels, and the overall OR."""
-    scores = score_timemap_measures(pages, measures=measures, thresholds=thresholds)
+    first memento, per-measure labels, the overall OR, and the per-memento
+    metadata — scores and metadata from one enrichment."""
+    scores, meta = scores_with_metadata(pages, measures=measures,
+                                        thresholds=thresholds)
     overall = overall_status(scores)
-    meta = memento_metadata(pages)
     return {"scores": scores, "overall": overall, "meta": meta}
 
 

@@ -6,6 +6,7 @@ here assumes single-node execution.
 """
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -37,9 +38,29 @@ _SESSION_PINS: list = []
 
 
 def pin_for_session(df):
-    """Persist ``df`` and register it for :func:`release_session_pins`."""
+    """Persist ``df`` and register it for :func:`release_session_pins`.
+    A plan some other caller already cached is left to that caller: its
+    cache serves ``df`` as it is, and releasing our pins must not drop
+    it."""
+    if df.storageLevel.useMemory or df.storageLevel.useDisk:
+        return df
     _SESSION_PINS.append(df.persist())
     return _SESSION_PINS[-1]
+
+
+@contextmanager
+def session_pins_scope():
+    """Owner-scoped release: every frame pinned by :func:`pin_for_session`
+    inside the ``with`` block is unpersisted on exit, and pins made before
+    the block (other callers') are left alone.  Consume the pinned frames
+    inside the block."""
+    before = {id(df) for df in _SESSION_PINS}
+    try:
+        yield
+    finally:
+        owned = [df for df in _SESSION_PINS if id(df) not in before]
+        _SESSION_PINS[:] = [df for df in _SESSION_PINS if id(df) in before]
+        release_persisted(owned)
 
 
 def release_session_pins() -> int:
@@ -96,9 +117,18 @@ def get_spark(
         builder = builder.config("spark.local.dir", shm)
     except OSError:
         pass
+    # Python workers unpickle the package's UDFs by module path, but only
+    # the driver has the package on sys.path when it was put there at run
+    # time (a script outside the checkout): ship the package's parent
+    # directory to the workers, ahead of any PYTHONPATH they inherit
+    package_parent = os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__)))
+    worker_path = os.pathsep.join(
+        p for p in (package_parent, os.environ.get("PYTHONPATH")) if p)
     # pre-session settings (executor memory/env for local-cluster or a real
-    # cluster manager) must land before getOrCreate
-    for key, value in (extra_conf or {}).items():
+    # cluster manager) must land before getOrCreate; the caller's values win
+    conf = {"spark.executorEnv.PYTHONPATH": worker_path, **(extra_conf or {})}
+    for key, value in conf.items():
         builder = builder.config(key, value)
     if master:
         builder = builder.master(master)

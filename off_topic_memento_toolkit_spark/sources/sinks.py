@@ -21,14 +21,20 @@
 - :func:`save_as_goldstandard` — AlNoamany-style TSV (id, date, URI, label)
   with label 1/0/ERROR (otmt/measuremodel.py:606-672).
 - :func:`save_uri_list` — plain-text URI-M lists (bin/detect_off_topic:275-293).
+- :func:`detect_report` / :data:`REPORT_WRITERS` / :func:`report_overall`
+  — the ``detect`` command's path: the writers above, and the URI-M
+  lists, read one report frame (scores with their overall verdict and
+  metadata) that the caller pins, so the measure suite runs once however
+  many outputs are written.
 """
 
 import csv
 import json
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.measures import with_error_kinds, with_overall_status
 from ..operators.measures_constants import (
     CSV_ERROR_LABELS,
     ERROR_KIND_MEASUREMENT,
@@ -37,24 +43,62 @@ from ..operators.measures_constants import (
 )
 
 
-def _joined(scores: DataFrame, overall: DataFrame,
-            meta: DataFrame | None) -> DataFrame:
-    joined = scores.join(overall, ["urit", "urim"], "left")
+def _with_metadata(rows: DataFrame, meta: DataFrame | None) -> DataFrame:
     if meta is not None:
-        joined = joined.join(meta, ["urit", "urim"], "left")
-    if "error_kind" not in joined.columns:
-        joined = joined.withColumn(
+        rows = rows.join(meta, ["urit", "urim"], "left")
+    if "error_kind" not in rows.columns:
+        rows = rows.withColumn(
             "error_kind",
             F.when(F.col("error_msg").isNotNull(),
                    F.lit(ERROR_KIND_MEASUREMENT)),
         )
-    return joined
+    return rows
+
+
+def _joined(scores: DataFrame, overall: DataFrame,
+            meta: DataFrame | None) -> DataFrame:
+    return _with_metadata(scores.join(overall, ["urit", "urim"], "left"), meta)
+
+
+def detect_report(scores: DataFrame, meta: DataFrame,
+                  memento_access: DataFrame | None = None) -> DataFrame:
+    """The frame every ``detect`` output is written from: the long scores,
+    each row carrying its memento's overall verdict (computed over the same
+    rows, not joined back from a second read), the error taxonomy of
+    :func:`..operators.measures.with_error_kinds` when ``memento_access``
+    is given, and the ``meta`` columns.  Same rows and values as the
+    frame the ``save_as_*`` writers join from (scores, overall, meta).
+    Pin it before writing more than one output from it."""
+    report = with_overall_status(scores)
+    if memento_access is not None:
+        # after the overall columns: the verdicts come from the measured
+        # rows, not from the access errors that replace their messages
+        report = with_error_kinds(report, memento_access=memento_access)
+    return _with_metadata(report, meta)
+
+
+def report_overall(report: DataFrame) -> DataFrame:
+    """The (urit, urim, overall_topic_status) rows of a
+    :func:`detect_report` — one per scored memento, as
+    :func:`..operators.measures.overall_status` gives them (rows made for
+    never-scored access errors have no measure and are left out)."""
+    return (report.filter(F.col("measure").isNotNull())
+            .select("urit", "urim", "overall_topic_status").distinct())
 
 
 def scores_to_nested_dict(scores: DataFrame, overall: DataFrame,
                           meta: DataFrame | None = None) -> dict:
+    return _nested_dict(_joined(scores, overall, meta))
+
+
+def _has_metadata(report: DataFrame) -> bool:
+    return "simhash" in report.columns
+
+
+def _nested_dict(report: DataFrame) -> dict:
+    meta_present = _has_metadata(report)
     out: dict = {}
-    for row in _joined(scores, overall, meta).collect():
+    for row in report.collect():
         kind = row.error_kind
         # access-error mementos whose timemap is unknown (not listed in any
         # loaded timemap) would otherwise nest under a JSON "null" key
@@ -82,7 +126,7 @@ def scores_to_nested_dict(scores: DataFrame, overall: DataFrame,
             mdict["topic status"] = row.topic_status
             # written per non-error measure, exactly as the reference does
             entry["overall topic status"] = row.overall_topic_status
-        if meta is not None:
+        if meta_present:
             # truthiness guards mirror measuremodel.py:556-573
             if row.simhash:
                 entry["raw memento simhash value"] = row.simhash
@@ -98,8 +142,12 @@ def scores_to_nested_dict(scores: DataFrame, overall: DataFrame,
 
 def save_as_json(scores: DataFrame, overall: DataFrame, filename: str,
                  meta: DataFrame | None = None) -> None:
+    _write_json(_joined(scores, overall, meta), filename)
+
+
+def _write_json(report: DataFrame, filename: str) -> None:
     with open(filename, "w") as fh:
-        json.dump(scores_to_nested_dict(scores, overall, meta), fh, indent=4)
+        json.dump(_nested_dict(report), fh, indent=4)
 
 
 CSV_FIELDNAMES = [
@@ -153,12 +201,15 @@ def _csv_records(rows, meta_present: bool):
 
 def save_as_csv(scores: DataFrame, overall: DataFrame, filename: str,
                 meta: DataFrame | None = None) -> None:
-    rows = _joined(scores, overall, meta).orderBy("urit", "urim", "measure") \
-                                         .collect()
+    _write_csv(_joined(scores, overall, meta), filename)
+
+
+def _write_csv(report: DataFrame, filename: str) -> None:
+    rows = report.orderBy("urit", "urim", "measure").collect()
     with open(filename, "w", newline="") as fh:
         writer = csv.DictWriter(fh, fieldnames=CSV_FIELDNAMES)
         writer.writeheader()
-        for record in _csv_records(rows, meta is not None):
+        for record in _csv_records(rows, _has_metadata(report)):
             writer.writerow(record)
 
 
@@ -168,7 +219,11 @@ def save_as_csv_distributed(scores: DataFrame, overall: DataFrame, path: str,
     order, written by the executors (``df.write.csv``) — no driver collect.
     Access-error row collapsing (one row per failed timemap/memento) is done
     relationally with the same exclusivity semantics."""
-    joined = _joined(scores, overall, meta)
+    _write_csv_distributed(_joined(scores, overall, meta), path)
+
+
+def _write_csv_distributed(report: DataFrame, path: str) -> None:
+    meta_present = _has_metadata(report)
     kind = F.col("error_kind")
     is_tm = kind == ERROR_KIND_TIMEMAP_ACCESS
     is_ma = kind == ERROR_KIND_MEMENTO_ACCESS
@@ -176,8 +231,8 @@ def save_as_csv_distributed(scores: DataFrame, overall: DataFrame, path: str,
     is_err = kind.isNotNull()
 
     # collapse access errors to one row per timemap / memento (shared with
-    # the JSON variant); the clean side never shuffles for this
-    ranked = _collapse_access_errors(joined)
+    # the JSON variant)
+    ranked = _collapse_access_errors(report)
 
     error_label = (
         F.when(is_tm, F.lit(CSV_ERROR_LABELS[ERROR_KIND_TIMEMAP_ACCESS]))
@@ -192,10 +247,10 @@ def save_as_csv_distributed(scores: DataFrame, overall: DataFrame, path: str,
         error_label.alias("Error"),
         F.col("error_msg").alias("Error Message"),
         F.when(~is_err, F.col("content_length").cast("string"))
-         .alias("Content Length") if meta is not None
+         .alias("Content Length") if meta_present
         else none_str.alias("Content Length"),
         F.when(~is_err, F.col("simhash").cast("string")).alias("Simhash")
-        if meta is not None else none_str.alias("Simhash"),
+        if meta_present else none_str.alias("Simhash"),
         F.when(is_tm | is_ma, none_str).otherwise(F.col("measuretype"))
          .alias("Measurement Type"),
         F.when(is_tm | is_ma, none_str).otherwise(F.col("measure"))
@@ -216,7 +271,12 @@ def save_as_csv_distributed(scores: DataFrame, overall: DataFrame, path: str,
 def _collapse_access_errors(joined: DataFrame) -> DataFrame:
     """One row per access-errored timemap/memento (instead of one per
     measure), clean rows untouched — shared by both distributed sinks so
-    their record multiplicities agree with the single-file exports."""
+    their record multiplicities agree with the single-file exports.
+
+    Reads ``joined`` ONCE: a row number per (error kind, timemap or memento
+    key) keeps the first row of each access error, and every other row
+    passes whatever its number (a union of a clean and an error branch
+    would run the whole upstream plan twice)."""
     kind = F.col("error_kind")
     is_tm = kind == ERROR_KIND_TIMEMAP_ACCESS
     is_ma = kind == ERROR_KIND_MEMENTO_ACCESS
@@ -224,14 +284,12 @@ def _collapse_access_errors(joined: DataFrame) -> DataFrame:
     # which a filter drops — coalesce to keep them
     is_access = F.coalesce(is_tm | is_ma, F.lit(False))
     dedup_key = F.when(is_tm, F.col("urit")).otherwise(F.col("urim"))
-    clean = joined.filter(~is_access)
-    errors = (
-        joined.filter(is_access)
-        .withColumn("_k", dedup_key)
-        .dropDuplicates(["error_kind", "_k"])
-        .drop("_k")
+    first = Window.partitionBy(kind, dedup_key).orderBy("urim", "measure")
+    return (
+        joined.withColumn("_n", F.row_number().over(first))
+        .filter(~is_access | (F.col("_n") == 1))
+        .drop("_n")
     )
-    return clean.unionByName(errors)
 
 
 def save_as_json_distributed(scores: DataFrame, overall: DataFrame, path: str,
@@ -241,8 +299,11 @@ def save_as_json_distributed(scores: DataFrame, overall: DataFrame, path: str,
     timemap/memento, same as the CSV variant) written by the executors.
     The 4-level nested single-file shape remains the driver-side parity
     export."""
-    _collapse_access_errors(_joined(scores, overall, meta)) \
-        .write.mode("overwrite").json(path)
+    _write_json_distributed(_joined(scores, overall, meta), path)
+
+
+def _write_json_distributed(report: DataFrame, path: str) -> None:
+    _collapse_access_errors(report).write.mode("overwrite").json(path)
 
 
 def save_as_goldstandard(overall: DataFrame, filename: str) -> None:
@@ -278,3 +339,14 @@ def save_uri_list(overall: DataFrame, status: str, path: str) -> None:
         .select("urim")
         .write.mode("overwrite").text(path)
     )
+
+
+# detect's output types (``-ot``), each written from a detect_report
+REPORT_WRITERS = {
+    "json": _write_json,
+    "csv": _write_csv,
+    "goldstandard": lambda report, path: save_as_goldstandard(
+        report_overall(report), path),
+    "csv-dist": _write_csv_distributed,
+    "json-dist": _write_json_distributed,
+}

@@ -1,4 +1,5 @@
-"""north_rule deployment path: the job must run via spark-submit --py-files.
+"""north_rule deployment path: the job must run via spark-submit --py-files,
+and from any working directory.
 
 Builds the reproducible zip artifact (scripts/package_pyfiles.py), then runs
 a REAL ``spark-submit --py-files otmt_spark.zip`` subprocess from an empty
@@ -56,3 +57,32 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     assert len({r["URI-T"] for r in rows}) >= 4
     assert all(r["Overall Topic Status"] in ("on-topic", "off-topic")
                for r in rows)
+
+
+WORKER_IMPORT = """\
+import sys
+sys.path.insert(0, sys.argv[1])
+from off_topic_memento_toolkit_spark.functions.udfs import tokenize_udf
+from off_topic_memento_toolkit_spark.session import get_spark
+spark = get_spark("outside-checkout", master="local[1]", shuffle_partitions=1)
+df = spark.createDataFrame([("Quick brown foxes",)], "text string")
+print(df.select(tokenize_udf("text").alias("t")).first().t)
+spark.stop()
+"""
+
+
+def test_pandas_udf_runs_outside_the_checkout(tmp_path):
+    """A driver that puts the package on sys.path at run time, started from
+    another directory with no PYTHONPATH: the Python workers must still
+    import the package to unpickle its UDFs."""
+    script = tmp_path / "driver.py"
+    script.write_text(WORKER_IMPORT)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, str(script), REPO],
+        capture_output=True, text=True, cwd=str(tmp_path), env=env,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "quick" in proc.stdout
