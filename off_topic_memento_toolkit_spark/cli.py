@@ -423,7 +423,20 @@ def main(argv=None, spark=None):
     owns_session = spark is None
     if owns_session:
         spark = get_spark(f"otmt-spark-{args.command}")
+    # one owner scope per command: every frame the command pins (measure
+    # and report pins, storeless dedup/ingest stages, ranking layouts) is
+    # consumed inside it and released when it returns, so a long-lived
+    # caller's session keeps only its own pins
+    with session_pins_scope():
+        _run(args, spark)
 
+    if owns_session:
+        spark.stop()
+
+
+def _run(args, spark):
+    """Run one Spark-using command; :func:`main` owns the session and the
+    pin scope."""
     if args.command == "detect":
         measures, thresholds = parse_measures(args.timemap_measures)
         pages, access_errors = _read_pages(spark, args.input)
@@ -435,19 +448,16 @@ def main(argv=None, spark=None):
             access_errors = consider_only(
                 access_errors, _read_consider(spark, args.consider))
         # score once, write many: every output reads one pinned report
-        # (the measure suite's own pin feeds it), and both pins are
-        # released once the last output is written
-        with session_pins_scope():
-            result = detect_off_topic(pages, measures=measures,
-                                      thresholds=thresholds)
-            report = pin_for_session(detect_report(
-                result["scores"], result["meta"],
-                memento_access=access_errors))
-            REPORT_WRITERS[args.output_type](report, args.output)
-            for status, path in (("off-topic", args.offtopic_list),
-                                 ("on-topic", args.ontopic_list)):
-                if path:
-                    save_uri_list(report_overall(report), status, path)
+        # (the measure suite's own pin feeds it)
+        result = detect_off_topic(pages, measures=measures,
+                                  thresholds=thresholds)
+        report = pin_for_session(detect_report(
+            result["scores"], result["meta"], memento_access=access_errors))
+        REPORT_WRITERS[args.output_type](report, args.output)
+        for status, path in (("off-topic", args.offtopic_list),
+                             ("on-topic", args.ontopic_list)):
+            if path:
+                save_uri_list(report_overall(report), status, path)
 
     elif args.command == "dedup":
         pages, _ = _read_pages(spark, args.input)
@@ -581,9 +591,6 @@ def main(argv=None, spark=None):
                 for stage_name in ("docs", "bands", "verified_edges",
                                    "clusters"):
                     base.write(frames[stage_name], stage_name)
-        # every consumer of the increment's stage frames has materialized;
-        # release the storeless path's pins (no-op with --checkpoint-dir)
-        result["unpersist"]()
 
     elif args.command == "takedown":
         from pyspark.sql import functions as F
@@ -827,8 +834,6 @@ def main(argv=None, spark=None):
             query = write_signatures_stream(enriched, args.output,
                                             args.checkpoint, once=args.once)
             query.awaitTermination()
-            if owns_session:
-                spark.stop()
             return
         writer = (out.writeStream.format("parquet")
                   .option("path", args.output)
@@ -840,20 +845,11 @@ def main(argv=None, spark=None):
         query.awaitTermination()
 
     elif args.command == "story":
-        from .operators.curation import ranking_pins_scope
         from .operators.measures import memento_metadata
         pages, _ = _read_pages(spark, args.input)
         pages = _apply_consider(spark, pages, args.consider)
-        # build + consume inside one owner scope: the ranking layout pinned
-        # by slice_by_datetime is released once the write materializes, so
-        # a long-lived session running many story batches never accumulates
-        # pinned partitions
-        with ranking_pins_scope():
-            story_pipeline(memento_metadata(pages)) \
-                .write.mode("overwrite").parquet(args.output)
-
-    if owns_session:
-        spark.stop()
+        story_pipeline(memento_metadata(pages)) \
+            .write.mode("overwrite").parquet(args.output)
 
 
 if __name__ == "__main__":

@@ -36,7 +36,8 @@ def score_collection_measures(
     # ONE narrow pinned projection (neither measure needs the simhashes)
     # feeds the global count-distinct branch AND the per-row branch —
     # without the pin each traversal would re-run the extract/tokenize
-    # UDFs over the whole corpus (session.release_session_pins releases)
+    # UDFs over the whole corpus (pinned in the session registry: an
+    # enclosing session_pins_scope or release_session_pins releases it)
     from ..session import pin_for_session
 
     df = pin_for_session(

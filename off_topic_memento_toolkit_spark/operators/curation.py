@@ -21,70 +21,8 @@ Parity quirks preserved deliberately:
   (slice, cluster) with ties broken by descending (score, urim).
 """
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-# registry of with_global_position's pinned range layouts — released by
-# release_global_ranking_caches() or spark.catalog.clearCache(), NEVER
-# eagerly on the next call: a prior ranking may still be un-consumed, and
-# releasing its pin would let the offsets and output branches recompute the
-# range layout independently (divergent boundaries under a nondeterministic
-# upstream row order ⇒ silently wrong positions).  Pipelines that OWN the
-# full build→consume window should use :func:`ranking_pins_scope` instead,
-# which releases its generation's pins on exit and never touches this list.
-_PERSISTED_RANGED: list = []
-
-# stack of active owner scopes; the innermost one adopts new pins
-_ACTIVE_PIN_SCOPES: list = []
-
-
-def _register_ranking_pin(df) -> None:
-    if _ACTIVE_PIN_SCOPES:
-        _ACTIVE_PIN_SCOPES[-1].append(df)
-    else:
-        _PERSISTED_RANGED.append(df)
-
-
-def _release_pins(pins: list) -> int:
-    from ..session import release_persisted
-
-    return release_persisted(pins)
-
-
-@contextmanager
-def ranking_pins_scope():
-    """Owner-scoped release of ranking-layout pins: every layout pinned by
-    :func:`with_global_position` inside the ``with`` block is unpersisted on
-    exit, instead of accumulating in the process-wide registry.  The caller
-    must CONSUME the ranking (run its actions) inside the block — exiting
-    releases the pin, and a later action would rebuild the layout
-    independently per branch (the divergence hazard the pin exists for).
-    Long-lived sessions running one curation batch per iteration hold at
-    most the live generation's pin this way."""
-    pins: list = []
-    _ACTIVE_PIN_SCOPES.append(pins)
-    try:
-        yield pins
-    finally:
-        # remove by IDENTITY, not equality: list.remove() would match the
-        # first scope whose contents compare equal (e.g. two nested empty
-        # scopes) and pop the OUTER one, orphaning this scope on the stack
-        for i in range(len(_ACTIVE_PIN_SCOPES) - 1, -1, -1):
-            if _ACTIVE_PIN_SCOPES[i] is pins:
-                del _ACTIVE_PIN_SCOPES[i]
-                break
-        _release_pins(pins)
-
-
-def release_global_ranking_caches() -> int:
-    """Unpersist every range layout pinned by :func:`with_global_position`
-    outside any :func:`ranking_pins_scope`.  Call between pipeline
-    generations in a long-lived session (or use
-    ``spark.catalog.clearCache()``); returns the number released.  Only safe
-    once the rankings built so far have been consumed."""
-    return _release_pins(_PERSISTED_RANGED)
 
 
 def consider_only(df: DataFrame, consideration: DataFrame, key: str = "urim",
@@ -166,11 +104,11 @@ def with_global_position(df: DataFrame, order_cols,
 
     1. ``repartitionByRange`` on the order key (partition p holds a
        contiguous key range) + ``sortWithinPartitions``; the layout is
-       ``persist``-ed so the offsets side and the output side share one
-       materialization within the first action (and ``clearCache()`` frees
-       it, unlike a localCheckpoint).  Re-computation on cache eviction is
-       safe: range boundaries come from a deterministically-seeded sample of
-       a deterministic input, so every re-execution yields the same layout.
+       pinned (``session.pin_for_session``) so the offsets side and the
+       output side share one materialization within the first action.
+       Re-computation on cache eviction is safe: range boundaries come from
+       a deterministically-seeded sample of a deterministic input, so every
+       re-execution yields the same layout.
     2. ``monotonically_increasing_id()`` over that layout encodes
        ``(partition_id << 33) + local_row_index`` — the per-partition dense
        rank for free, JVM-side, in row order;
@@ -186,46 +124,25 @@ def with_global_position(df: DataFrame, order_cols,
     The order must be unique (here (memento_datetime, urim) — urim breaks
     ties), which makes the rank independent of range boundary placement.
 
-    Mode gate (``spark.otmt.ranking.mode``, default ``distributed``): small
-    collections can set ``single`` to take a plain single-partition
-    ``row_number()`` window instead — no range exchange, no persist pin, no
-    broadcast join, ~2x faster below ~10^5 rows (measured; BENCH.md
-    curation A/B) but an Exchange SinglePartition of the DATA, which is
-    exactly what must never happen at corpus scale.  The default stays the
-    distributed plan; the gate exists for interactive small-collection use
-    and for the A/B harness (scripts/curation_ab.py)."""
-    from pyspark.storagelevel import StorageLevel
-
-    mode = df.sparkSession.conf.get("spark.otmt.ranking.mode", "distributed")
-    if mode == "single":
-        w = Window.orderBy(*order_cols)
-        out = df.withColumn(pos_col, F.row_number().over(w) - 1)
-        if total_col:
-            out = out.withColumn(
-                total_col,
-                F.count("*").over(
-                    w.rowsBetween(Window.unboundedPreceding,
-                                  Window.unboundedFollowing)))
-        return out
+    Pin release follows the session registry's scope contract: inside a
+    ``session.session_pins_scope()`` the layout is released when the block
+    exits, so consume the ranking (run its actions) inside the block; a
+    pin made outside any scope stays until ``release_session_pins()`` or
+    ``clearCache()``.  Building another ranking never releases an earlier
+    one, which may not have been consumed yet."""
+    from ..session import pin_for_session
 
     n_parts = num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    ranged = (
-        df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*order_cols)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # The persist is load-bearing, not an optimization: Catalyst does NOT
-    # reuse the range exchange across the offsets and output branches
-    # (verified: 2 exchanges without it), and two independent executions of
+    # The pin is load-bearing, not an optimization: Catalyst does NOT reuse
+    # the range exchange across the offsets and output branches (verified:
+    # 2 exchanges without it), and two independent executions of
     # repartitionByRange may sample different boundaries when the upstream
     # row order is nondeterministic — the pin is what makes both branches
-    # read ONE layout.  Pins register to the innermost ranking_pins_scope
-    # (owner releases on exit) or, scope-less, to the process-wide registry
-    # (release_global_ranking_caches / clearCache); the registry is
-    # deliberately NOT drained on the next call, since an earlier ranking
-    # may not have been consumed yet.
-    _register_ranking_pin(ranged)
+    # read ONE layout.
+    ranged = pin_for_session(
+        df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
+        .sortWithinPartitions(*order_cols))
     local = F.monotonically_increasing_id()
     with_mid = (
         ranged.withColumn("_pid", F.shiftrightunsigned(local, 33))

@@ -411,33 +411,32 @@ def incremental_dedup_update(
 
     Returns {"docs", "bands", "candidates", "verified", "assignments",
     "unpersist"}; the new stage tables are what the NEXT increment uses as
-    its base (append bands/docs, replace assignments).  ``unpersist()``
-    releases the storeless path's pinned stage frames — call it once the
-    returned assignments have been materialized (a long-lived session doing
-    many increments would otherwise accumulate cached blocks); with a store
-    it is a no-op (stages are disk-backed tables, nothing is pinned)."""
+    its base (append bands/docs, replace assignments).  Without a store the
+    stage frames are pinned in the session registry
+    (``session.pin_for_session``), so they follow its scope contract: a
+    ``session_pins_scope()`` around the call releases them on exit, and
+    ``release_session_pins()`` drains them.  ``unpersist()`` releases just
+    this increment's pins — call it once the returned assignments have been
+    materialized (a long-lived session doing many increments would
+    otherwise accumulate cached blocks); with a store it is a no-op (stages
+    are disk-backed tables, nothing is pinned)."""
     from ..operators.lsh import minhash_band_table
     from ..operators.timeline import prepare_pages
+    from ..session import pin_for_session, release_pins
 
     pinned: list = []
 
     def stage(name, build):
         # with a store, every stage is a committed table (disk-backed reads
-        # downstream); without one, PERSIST each stage result — the merge
+        # downstream); without one, PIN each stage result — the merge
         # traverses the verified edges 3-4 times (endpoint broadcast,
         # contraction join, relabel) and an uncached lineage would re-run
         # the whole delta extract/signature/verify pipeline per traversal
         # (measured 3x slower than a full batch recompute before this pin)
         if store is None:
-            df = build().persist()
-            pinned.append(df)
-            return df
+            pinned.append(pin_for_session(build()))
+            return pinned[-1]
         return store.run_stage(name, build)
-
-    def unpersist():
-        from ..session import release_persisted
-
-        return release_persisted(pinned)
 
     def build_docs():
         # dedupe BEFORE the UDFs: the same page appearing twice in one
@@ -544,7 +543,7 @@ def incremental_dedup_update(
         "candidates": candidates,
         "verified": verified,
         "assignments": assignments,
-        "unpersist": unpersist,
+        "unpersist": lambda: release_pins(pinned),
     }
     if with_delta:
         # the rows a merge-based promote touches: changed base labels + the

@@ -296,8 +296,8 @@ def _scores_and_enrichment(pages, measures, thresholds, first_anchor_strategy,
         # projection) fans the plan out; without a persist the
         # extract/tokenize UDFs would run once per branch (the reference's
         # 12x-repreprocess bug reborn at plan level — SURVEY §4.1).
-        # Registered so long-lived sessions can release between batches
-        # (session.release_session_pins).
+        # Pinned in the session registry so long-lived sessions can release
+        # between batches (session_pins_scope / release_session_pins).
         #
         # Project BEFORE the pin (guide §2.3): a persist materializes every
         # column past Catalyst's pruning, and no consumer reads the raw

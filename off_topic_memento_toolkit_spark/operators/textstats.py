@@ -111,42 +111,24 @@ def fingerprint(df: DataFrame, text_col: str = "text",
 
 
 def exact_duplicates(df: DataFrame, key_cols=("fingerprint",),
-                     order_col: str | None = None,
-                     strategy: str = "agg") -> DataFrame:
+                     order_col: str | None = None) -> DataFrame:
     """Exact dedup: rows annotated with ``dup_group_size`` and
     ``is_canonical``.
 
-    ``strategy="agg"`` (default, the 100 TB shape): count+min are
-    MAP-SIDE-COMBINABLE, so group stats reduce to one row per fingerprint
-    before any data moves, and the join back is AQE-skew-splittable — a
-    boilerplate fingerprint shared by 10^8 rows never lands on a single
-    window task.  Canonical = minimum ``order_col`` (null-safe): EXACTLY one
-    per group when the order column is unique (a doc id); order ties mark
-    every minimal row.
-
-    ``strategy="window"``: ``row_number`` guarantees exactly one canonical
-    even under ties/NULL orders, at the cost of a per-group single-task sort
-    — the collection-scale variant."""
+    count+min are MAP-SIDE-COMBINABLE, so group stats reduce to one row per
+    fingerprint before any data moves, and the join back is
+    AQE-skew-splittable — a boilerplate fingerprint shared by 10^8 rows
+    never lands on a single window task.  Canonical = minimum ``order_col``
+    (null-safe): EXACTLY one per group when the order column is unique (a
+    doc id); order ties mark every minimal row."""
     keys = list(key_cols)
     order = order_col or df.columns[0]
-    if strategy == "window":
-        from pyspark.sql import Window
-
-        group = Window.partitionBy(*keys)
-        ranked = Window.partitionBy(*keys).orderBy(order)
-        return (
-            df.withColumn("dup_group_size", F.count("*").over(group))
-            .withColumn("is_canonical", F.row_number().over(ranked) == 1)
-        )
-    if strategy != "agg":
-        raise ValueError(f"unknown strategy {strategy!r}")
     stats = df.groupBy(*keys).agg(
         F.count("*").alias("dup_group_size"),
         F.min(order).alias("_min_order"),
     )
     # null-SAFE join: groupBy groups NULL keys together, but a plain equi-join
-    # would silently drop those rows (NULL never equi-matches) — the window
-    # formulation kept them
+    # would silently drop those rows (NULL never equi-matches)
     stats = stats.select(
         *[F.col(k).alias(f"_k_{k}") for k in keys],
         "dup_group_size", "_min_order")

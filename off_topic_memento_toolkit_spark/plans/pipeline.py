@@ -172,10 +172,10 @@ def dedup_pipeline(
     if store is None:
         # downstream stages (minhash bands, simhash chunks, verify join) each
         # traverse docs; without the checkpoint table, cache it so the
-        # extract/tokenize/simhash UDF lineage runs once.  Registered in the
-        # session pin registry so long-lived sessions running many storeless
-        # pipelines can drain the cache (session.release_session_pins) —
-        # same contract as the measure/collection operator pins.
+        # extract/tokenize/simhash UDF lineage runs once.  Pinned in the
+        # session registry, the one place package pins live: an enclosing
+        # session_pins_scope releases it on exit, release_session_pins
+        # drains it.
         #
         # Project before the pin (guide §2.3): the jaccard verify path never
         # reads `text`, so caching it would materialize the corpus text for
@@ -244,8 +244,8 @@ def dedup_pipeline(
         # pair join).  With a store that second traversal is a cheap
         # re-read of the committed stage table; without one it would
         # re-run the entire banding/pair-expand lineage — pin the pair
-        # frame (narrow: two longs per row), registered for
-        # session.release_session_pins like the docs pin above.
+        # frame (narrow: two longs per row) in the session registry like
+        # the docs pin above.
         from ..session import pin_for_session
 
         candidates = pin_for_session(candidates)

@@ -14,9 +14,7 @@ from pyspark.sql import SparkSession
 def release_persisted(pins: list) -> int:
     """Drain a list of persisted DataFrames, unpersisting each (non-blocking)
     and swallowing failures from an already-stopped session; returns the
-    number released.  Shared by every owner-scoped pin registry (curation
-    ranking layouts, storeless incremental stage frames) so the release
-    semantics stay in one place."""
+    number released."""
     released = 0
     while pins:
         try:
@@ -27,13 +25,15 @@ def release_persisted(pins: list) -> int:
     return released
 
 
-# process-wide registry of frames persisted by operators whose plans fan
-# out into multiple branches (the enriched frame in score_timemap_measures,
-# the token projection in score_collection_measures): without the persist
-# the extract/tokenize UDF lineage would re-run once per branch, and
-# without the registry a long-lived session would accumulate the cached
-# frames with no release handle (same hazard curation's ranking-pin
-# registry exists for)
+# The one registry of frames the package caches.  Operators pin where a
+# plan fans out into several branches: the enriched frame in
+# score_timemap_measures, the token projection in
+# score_collection_measures, the storeless dedup and incremental stages,
+# and with_global_position's range layout.  Without the pin the UDF lineage
+# (or the range sample) would re-run once per branch; without the registry
+# a long-lived session would accumulate the cached frames with no release
+# handle.  Release is owner-scoped: session_pins_scope frees what its block
+# pinned, release_pins frees a given set, release_session_pins drains all.
 _SESSION_PINS: list = []
 
 
@@ -48,19 +48,29 @@ def pin_for_session(df):
     return _SESSION_PINS[-1]
 
 
+def release_pins(pins) -> int:
+    """Unpersist those of ``pins`` that are still registered (frames
+    :func:`pin_for_session` returned), leaving every other pin and any
+    caller's own cache alone; returns the number released."""
+    ids = {id(df) for df in pins}
+    owned = [df for df in _SESSION_PINS if id(df) in ids]
+    _SESSION_PINS[:] = [df for df in _SESSION_PINS if id(df) not in ids]
+    return release_persisted(owned)
+
+
 @contextmanager
 def session_pins_scope():
     """Owner-scoped release: every frame pinned by :func:`pin_for_session`
     inside the ``with`` block is unpersisted on exit, and pins made before
-    the block (other callers') are left alone.  Consume the pinned frames
-    inside the block."""
-    before = {id(df) for df in _SESSION_PINS}
+    the block (other callers') are left alone, so nested scopes release
+    only their own pins.  Consume the pinned frames inside the block."""
+    # hold the earlier pins, not just their ids: a frame released inside
+    # the block could otherwise free its id for a new pin
+    before = {id(df): df for df in _SESSION_PINS}
     try:
         yield
     finally:
-        owned = [df for df in _SESSION_PINS if id(df) not in before]
-        _SESSION_PINS[:] = [df for df in _SESSION_PINS if id(df) in before]
-        release_persisted(owned)
+        release_pins([df for df in _SESSION_PINS if id(df) not in before])
 
 
 def release_session_pins() -> int:

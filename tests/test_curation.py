@@ -15,6 +15,12 @@ from off_topic_memento_toolkit_spark.operators.curation import (
     quality_score,
     select_representatives,
     slice_by_datetime,
+    with_global_position,
+)
+from off_topic_memento_toolkit_spark.session import (
+    _SESSION_PINS,
+    release_session_pins,
+    session_pins_scope,
 )
 
 META_SCHEMA = T.StructType([
@@ -246,124 +252,93 @@ def test_quality_damage_hook_changes_representative(spark):
     assert undamaged["u1"] == pytest.approx(0.15 * -1.0 + 0.45 * 0.4)
 
 
+def _ranking_frame(spark, n, tag):
+    return spark.range(n).select(
+        F.concat(F.lit(tag), F.format_string("%04d", (F.col("id") * 37) % n))
+        .alias("k"))
+
+
+def _pins_since(earlier):
+    return [df for df in _SESSION_PINS if not any(df is e for e in earlier)]
+
+
 def test_global_position_cache_pool_release(spark):
-    """Pinned range layouts accumulate in an explicit-release pool — a prior
+    """Pinned range layouts accumulate in the session pin registry — a prior
     un-consumed ranking is NEVER released by a later call (premature release
-    would let its two branches recompute divergent layouts); the release
-    helper frees everything and already-built results still compute
+    would let its two branches recompute divergent layouts); draining the
+    registry frees everything and already-built results still compute
     correctly afterwards (persist is not lineage truncation)."""
-    from pyspark.sql import functions as F
-
-    from off_topic_memento_toolkit_spark.operators.curation import (
-        _PERSISTED_RANGED,
-        release_global_ranking_caches,
-        with_global_position,
-    )
-
-    def frame(n, tag):
-        return spark.range(n).select(
-            F.concat(F.lit(tag), F.format_string("%04d", (F.col("id") * 37) % n))
-            .alias("k"))
-
-    release_global_ranking_caches()
-    first = with_global_position(frame(200, "a"), ["k"], pos_col="pos")
-    second = with_global_position(frame(300, "b"), ["k"], pos_col="pos")
-    assert len(_PERSISTED_RANGED) == 2  # nothing released eagerly
+    release_session_pins()
+    first = with_global_position(_ranking_frame(spark, 200, "a"), ["k"],
+                                 pos_col="pos")
+    second = with_global_position(_ranking_frame(spark, 300, "b"), ["k"],
+                                  pos_col="pos")
+    assert len(_SESSION_PINS) == 2  # nothing released eagerly
     # consume BOTH (first after second was built — the hazard case)
     assert sorted(r.pos for r in second.collect()) == list(range(300))
     assert sorted(r.pos for r in first.collect()) == list(range(200))
-    assert release_global_ranking_caches() == 2
-    assert not _PERSISTED_RANGED
+    assert release_session_pins() == 2
+    assert not _SESSION_PINS
     # released results survive (recompute, not truncation)
     assert sorted(r.pos for r in first.collect()) == list(range(200))
 
 
-def test_ranking_pins_scope_owner_release(spark):
-    """Owner-scoped pins: inside ranking_pins_scope, layouts pinned by
-    with_global_position never reach the process-wide registry and are
-    unpersisted on scope exit — repeated curation batches in a long-lived
-    session hold at most the live generation's pin.  Results computed and
-    consumed inside the scope are correct, scopes nest, and the scope-less
-    registry contract is untouched."""
-    from pyspark.sql import functions as F
+def test_session_pins_scope_releases_ranking_pins(spark):
+    """Owner-scoped pins: inside session_pins_scope, the layout pinned by
+    with_global_position is unpersisted on scope exit — repeated curation
+    batches in a long-lived session hold at most the live generation's pin.
+    Results consumed inside the scope are correct, a pin made before the
+    scope survives it, and nested scopes release only their own pins."""
+    jsc = spark.sparkContext._jsc
+    outside = with_global_position(_ranking_frame(spark, 20, "o"), ["k"],
+                                   pos_col="pos")
+    outside.collect()
+    earlier = list(_SESSION_PINS)
+    outside_pin = earlier[-1]
+    # compared as sets of RDD ids (relative: the shared session may hold
+    # other tests' persisted frames, which Spark's cleaner may drop)
+    persisted_before = set(jsc.getPersistentRDDs().keySet())
 
-    from off_topic_memento_toolkit_spark.operators.curation import (
-        _PERSISTED_RANGED,
-        ranking_pins_scope,
-        release_global_ranking_caches,
-        with_global_position,
-    )
-
-    def frame(n, tag):
-        return spark.range(n).select(
-            F.concat(F.lit(tag),
-                     F.format_string("%04d", (F.col("id") * 37) % n))
-            .alias("k"))
-
-    release_global_ranking_caches()
-    jsc = spark.sparkContext._jsc.sc()
-    persisted_before = jsc.getPersistentRDDs().size()
-
-    for i in range(3):
-        with ranking_pins_scope() as pins:
-            out = with_global_position(frame(150, f"g{i}"), ["k"],
-                                       pos_col="pos")
-            # consume INSIDE the scope (the owner contract)
-            assert sorted(r.pos for r in out.collect()) == list(range(150))
-            assert len(pins) == 1  # at most the live generation's pin
-            assert not _PERSISTED_RANGED  # nothing leaked to the registry
-        assert not pins  # released on exit
-    # storage actually freed (relative: the shared session may hold other
-    # tests' persisted frames)
-    assert jsc.getPersistentRDDs().size() == persisted_before
-
-    # nested scopes: the innermost adopts the pin
-    with ranking_pins_scope() as outer:
-        with ranking_pins_scope() as inner:
-            with_global_position(frame(10, "n"), ["k"], pos_col="pos")
-            assert len(inner) == 1 and not outer
-        assert not inner
-    assert not _PERSISTED_RANGED
-
-    # two nested EMPTY scopes: exit must remove by IDENTITY — equality
-    # removal (list.remove) would match the outer empty list first and pop
-    # it, orphaning the inner scope on the stack (later pins would land in
-    # the orphan and leak) and raising ValueError at the outer exit
-    from off_topic_memento_toolkit_spark.operators.curation import (
-        _ACTIVE_PIN_SCOPES,
-    )
-    with ranking_pins_scope() as outer:
-        with ranking_pins_scope():
-            pass
-        # the outer scope is still the active adopter
-        assert _ACTIVE_PIN_SCOPES and _ACTIVE_PIN_SCOPES[-1] is outer
-        with_global_position(frame(10, "e"), ["k"], pos_col="pos")
-        assert len(outer) == 1
-    assert not _ACTIVE_PIN_SCOPES and not _PERSISTED_RANGED
-
-
-def test_ranking_mode_single_equals_distributed(spark):
-    """The spark.otmt.ranking.mode=single fast path (one row_number window,
-    small-scale interactive gate) produces exactly the distributed two-phase
-    ranking's positions and total column."""
-    from pyspark.sql import functions as F
-
-    from off_topic_memento_toolkit_spark.operators.curation import (
-        with_global_position,
-    )
-
-    df = spark.range(500).select(
-        F.format_string("k%04d", (F.col("id") * 73) % 500).alias("k"))
-    want = {(r.k, r.pos, r.n) for r in with_global_position(
-        df, ["k"], pos_col="pos", total_col="n").collect()}
-    spark.conf.set("spark.otmt.ranking.mode", "single")
     try:
-        got_df = with_global_position(df, ["k"], pos_col="pos",
-                                      total_col="n")
-        got = {(r.k, r.pos, r.n) for r in got_df.collect()}
-        plan = got_df._jdf.queryExecution().executedPlan().toString()
+        for i in range(3):
+            with session_pins_scope():
+                out = with_global_position(
+                    _ranking_frame(spark, 150, f"g{i}"), ["k"],
+                    pos_col="pos")
+                # consume INSIDE the scope (the owner contract)
+                assert sorted(r.pos for r in out.collect()) == \
+                    list(range(150))
+                # at most the live generation's pin
+                assert len(_pins_since(earlier)) == 1
+            assert not _pins_since(earlier)  # released on exit
+        # storage actually freed, and the earlier pin is still cached
+        assert set(jsc.getPersistentRDDs().keySet()) <= persisted_before
+        assert outside_pin.storageLevel.useMemory
+        assert any(df is outside_pin for df in _SESSION_PINS)
+
+        # nested scopes: the inner one releases only its own pin
+        with session_pins_scope():
+            with_global_position(_ranking_frame(spark, 10, "n"), ["k"],
+                                 pos_col="pos")
+            outer_pin = _SESSION_PINS[-1]
+            with session_pins_scope():
+                with_global_position(_ranking_frame(spark, 12, "m"), ["k"],
+                                     pos_col="pos")
+                inner_pin = _SESSION_PINS[-1]
+                assert len(_pins_since(earlier)) == 2
+            assert [id(df) for df in _pins_since(earlier)] == [id(outer_pin)]
+            assert not inner_pin.storageLevel.useMemory
+            assert outer_pin.storageLevel.useMemory
+        assert not _pins_since(earlier)
+
+        # an empty nested scope leaves the outer one releasing what it
+        # pins afterwards
+        with session_pins_scope():
+            with session_pins_scope():
+                pass
+            with_global_position(_ranking_frame(spark, 10, "e"), ["k"],
+                                 pos_col="pos")
+            assert len(_pins_since(earlier)) == 1
+        assert not _pins_since(earlier)
     finally:
-        spark.conf.unset("spark.otmt.ranking.mode")
-    assert got == want and len(got) == 500
-    # and it is genuinely the one-window plan: no range exchange
-    assert "rangepartitioning" not in plan.lower()
+        release_session_pins()

@@ -1,7 +1,8 @@
 """``detect`` scores once and writes many: every output it writes reads one
 pinned report, the report's Python work runs once, the outputs equal the
-library writers' over unpinned frames, and the command leaves a
-caller-owned session's storage as it found it."""
+library writers' over unpinned frames, and the command (like ``dedup``,
+``story`` and ``ingest``) leaves a caller-owned session's pins as it found
+them."""
 
 import csv
 import glob
@@ -12,7 +13,7 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql.readwriter import DataFrameWriter
 
-from off_topic_memento_toolkit_spark import cli
+from off_topic_memento_toolkit_spark import cli, session
 from off_topic_memento_toolkit_spark.operators.measures import (
     MEASURE_REGISTRY,
     memento_metadata,
@@ -53,6 +54,40 @@ def _storage_kept(before, after, owned):
     return after <= before and owned <= after
 
 
+def _run_cli(spark, argv):
+    """``cli.main(argv)`` on the caller's session, recording the frames
+    the command added to the session pin registry, which of them are still
+    cached when it returns (checked at once: a later equal plan cached by
+    anyone reads as cached too), and the storage and registry around the
+    call."""
+    made = []
+    pin = session.pin_for_session
+
+    def recording(df):
+        registered = len(_SESSION_PINS)
+        pinned = pin(df)
+        if len(_SESSION_PINS) > registered:
+            made.append(pinned)
+        return pinned
+
+    pins_before = [id(df) for df in _SESSION_PINS]
+    storage_before = _persistent_rdds(spark)
+    with pytest.MonkeyPatch.context() as mp:
+        # operators import the helper when they run; cli at import time
+        mp.setattr(session, "pin_for_session", recording)
+        mp.setattr(cli, "pin_for_session", recording)
+        cli.main(argv, spark=spark)
+    return {
+        "made": made,
+        "still_cached": [df for df in made if df.storageLevel.useMemory
+                         or df.storageLevel.useDisk],
+        "pins_before": pins_before,
+        "pins_after": [id(df) for df in _SESSION_PINS],
+        "storage_before": storage_before,
+        "storage_after": _persistent_rdds(spark),
+    }
+
+
 @pytest.fixture(scope="module")
 def detect_run(spark, tmp_path_factory):
     """One ``detect -ot json-dist`` run with all 12 measures and both URI-M
@@ -69,7 +104,6 @@ def detect_run(spark, tmp_path_factory):
     caller_cache = spark.range(7).selectExpr("id + 1 AS y").persist()
     caller_pin.count()
     caller_cache.count()
-    storage_before = _persistent_rdds(spark)
 
     plans = []
 
@@ -85,16 +119,14 @@ def detect_run(spark, tmp_path_factory):
         for cls, name in ((DataFrameWriter, "json"), (DataFrameWriter, "csv"),
                           (DataFrameWriter, "text"), (DataFrame, "collect")):
             mp.setattr(cls, name, capturing(getattr(cls, name)))
-        cli.main(["detect", "-i", f"pages:{src}", "-o", out["scores"],
-                  "-ot", "json-dist", "-tm", MEASURE_SPEC,
-                  "--ontopic-list", out["on"], "--offtopic-list", out["off"]],
-                 spark=spark)
+        run = _run_cli(spark, [
+            "detect", "-i", f"pages:{src}", "-o", out["scores"],
+            "-ot", "json-dist", "-tm", MEASURE_SPEC,
+            "--ontopic-list", out["on"], "--offtopic-list", out["off"]])
 
     yield {
-        "src": src, "out": out, "plans": plans,
-        "storage_before": storage_before,
-        "storage_after": _persistent_rdds(spark),
-        "caller_rdds": storage_before - unrelated,
+        **run, "root": root, "src": src, "out": out, "plans": plans,
+        "caller_rdds": run["storage_before"] - unrelated,
         "caller_frames": (caller_pin, caller_cache),
     }
     release_session_pins()
@@ -232,12 +264,45 @@ def test_detect_output_types_equal_library_writers(
     assert expected and _read_output(output_type, got) == expected
 
 
-def test_detect_releases_only_its_own_pins(spark, detect_run):
+@pytest.fixture(scope="module")
+def cli_runs(spark, detect_run):
+    """``dedup`` (storeless), ``story`` and ``ingest`` (storeless increment
+    over a checkpointed base) on the drift pages, on the session that
+    still holds ``detect_run``'s caller-owned pins."""
+    root = detect_run["root"]
+    rows = pangram_drift_rows()
+    base, increment = str(root / "base"), str(root / "increment")
+    spark.createDataFrame(rows[:3], schema=PAGES_SCHEMA).write.parquet(base)
+    spark.createDataFrame(rows[3:], schema=PAGES_SCHEMA) \
+        .write.parquet(increment)
+    checkpoint = str(root / "checkpoint")
+    cli.main(["dedup", "-i", f"pages:{base}", "-o", str(root / "base_out"),
+              "--checkpoint-dir", checkpoint], spark=spark)
+    src = f"pages:{detect_run['src']}"
+    return {
+        "dedup": _run_cli(spark, ["dedup", "-i", src,
+                                  "-o", str(root / "dedup")]),
+        "story": _run_cli(spark, ["story", "-i", src,
+                                  "-o", str(root / "story")]),
+        "ingest": _run_cli(spark, [
+            "ingest", "-i", f"pages:{increment}",
+            "--base-checkpoint-dir", checkpoint, "-o", str(root / "ingest")]),
+    }
+
+
+def test_detect_releases_only_its_own_pins(spark, detect_run, cli_runs):
+    """After each command returns, no frame it pinned is still cached or
+    registered, and the caller's pins and caches made before it survive."""
     assert detect_run["caller_rdds"]
-    assert _storage_kept(detect_run["storage_before"],
-                         detect_run["storage_after"],
-                         detect_run["caller_rdds"])
     caller_pin, caller_cache = detect_run["caller_frames"]
+    for command, run in {"detect": detect_run, **cli_runs}.items():
+        assert run["made"] and not run["still_cached"], command
+        assert run["pins_after"] == run["pins_before"], command
+        assert detect_run["caller_rdds"] <= run["storage_after"], command
+        if command in ("detect", "story"):
+            # dedup and ingest also leave the connected-components entry
+            # checkpoint (localCheckpoint: lineage truncation, not a pin)
+            assert run["storage_after"] <= run["storage_before"], command
     assert any(pin is caller_pin for pin in _SESSION_PINS)
     for frame in (caller_pin, caller_cache):
         assert frame.storageLevel.useMemory
