@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .lsh import bucket_pairs
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -266,28 +268,13 @@ def embedding_bucket_table(
     id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, vec, bucket) — the SRP bucket assignment used by the embedding
-    near-dup channel; exposed so callers can run observability queries
-    (:func:`embedding_dropped_bucket_stats`) on the same assignment."""
+    near-dup channel; exposed so callers can count the hot-bucket cap's
+    exclusions (``lsh.dropped_bucket_stats(table, ["bucket"], cap)``) on
+    the same assignment."""
     srp = make_srp_signature_udf(dim, n_planes)
     return df.select(F.col(id_col).alias("id"),
                      _as_double_vec(F.col(vec_col)).alias("vec")) \
              .withColumn("bucket", srp(F.col("vec")))
-
-
-def embedding_dropped_bucket_stats(
-    bucketed: DataFrame, max_bucket_size: int = 64,
-) -> DataFrame:
-    """Observability for the hot-bucket cap (mirror of
-    lsh.dropped_bucket_stats): how many SRP buckets/rows the near-dup pass
-    excluded — the cap must never be a silent recall loss."""
-    return (
-        bucketed.groupBy("bucket").count()
-        .filter(F.col("count") > max_bucket_size)
-        .agg(
-            F.count("*").alias("dropped_buckets"),
-            F.coalesce(F.sum("count"), F.lit(0)).alias("dropped_rows"),
-        )
-    )
 
 
 def embedding_near_duplicates(
@@ -297,23 +284,14 @@ def embedding_near_duplicates(
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (a < b) within SRP buckets.
 
-    Same one-shuffle collect_list+expand shape as lsh.py (no self-join, so the
-    SRP UDF lineage evaluates ONCE) and the same hot-bucket cap: one
-    degenerate bucket (all-zero / boilerplate embeddings) would otherwise
-    expand to B²/2 pairs.  Exclusions are observable via
-    :func:`embedding_dropped_bucket_stats` over the same bucket table."""
-    sides = embedding_bucket_table(df, dim, n_planes, id_col, vec_col)
-    # spill-safe size gate BEFORE the unspillable collect_list (see lsh.py)
-    counted = sides.withColumn(
-        "_n", F.count("*").over(Window.partitionBy("bucket")))
-    bounded_rows = counted.filter(
-        (F.col("_n") >= 2) & (F.col("_n") <= max_bucket_size)).drop("_n")
-    buckets = bounded_rows.groupBy("bucket").agg(
-        F.collect_list(F.struct("id", "vec")).alias("members"))
-    from .lsh import pair_expand_expr
-
-    pairs = buckets.select(
-        F.explode(F.expr(pair_expand_expr("members"))).alias("p"))
+    The :func:`lsh.bucket_pairs` kernel over the SRP bucket table (no
+    self-join, so the SRP UDF lineage evaluates ONCE), with its hot-bucket
+    cap: one degenerate bucket (all-zero / boilerplate embeddings) would
+    otherwise expand to B²/2 pairs.  Exclusions are observable via
+    ``lsh.dropped_bucket_stats`` over :func:`embedding_bucket_table`."""
+    pairs = bucket_pairs(
+        embedding_bucket_table(df, dim, n_planes, id_col, vec_col),
+        ["bucket"], F.struct("id", "vec"), max_bucket_size)
     return (
         pairs.withColumn(
             "cosine", cosine_similarity_col(F.col("p.u.vec"), F.col("p.v.vec")))

@@ -48,10 +48,48 @@ Scale shape (10^12 corpus, 10^9 delta):
   write can be a partition-level upsert/MERGE in the Iceberg store).
 """
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .components import connected_components
+from .lsh import (
+    bucket_pairs,
+    chunks_for_hamming,
+    minhash_band_table,
+    simhash_chunk_table,
+)
+from .verify import prune_docs_to_pair_endpoints, verified_pairs_jaccard
+
+
+def delta_bucket_rows(
+    base_rows: DataFrame,
+    new_rows: DataFrame,
+    key_cols: list,
+) -> DataFrame:
+    """The rows a delta-touched bucket holds over base ∪ new: rows are
+    (id, *key_cols, *payload); the result adds ``is_new``.
+
+    The base table is pruned to the buckets the delta touches with a
+    broadcast semi-join on the delta's bucket keys, so it is scanned once,
+    map-side, and everything outside the delta's key space is discarded
+    before any shuffle.  Pruning keeps EVERY member of every delta-touched
+    bucket, so a bucket count over these rows — the pairing gate's and
+    :func:`lsh.dropped_bucket_stats`'s — is identical to a full base ∪ new
+    run."""
+    new_keys = F.broadcast(new_rows.select(*key_cols).distinct())
+    pruned_base = base_rows.join(new_keys, key_cols, "left_semi")
+    # a RE-INGESTED id (present in both tables) must count ONCE per bucket:
+    # its base rows are dropped entirely (the new rows represent the doc
+    # now), otherwise the doubled membership inflates the bucket count and
+    # a bucket at the cap boundary is spuriously dropped — silent candidate
+    # loss on re-ingest batches.  Delta-sized id set, broadcast like the
+    # bucket-key prune.
+    new_ids = F.broadcast(new_rows.select("id").distinct())
+    pruned_base = pruned_base.join(new_ids, "id", "left_anti")
+    return (
+        pruned_base.withColumn("is_new", F.lit(False))
+        .unionByName(new_rows.withColumn("is_new", F.lit(True)))
+    )
 
 
 def _delta_touching_pairs(
@@ -60,71 +98,32 @@ def _delta_touching_pairs(
     key_cols: list,
     max_bucket_size: int,
     payload_cols: list = (),
-    broadcast_new_keys: bool = True,
 ) -> DataFrame:
-    """Generic bucket-table delta pairing: rows are (id, *key_cols,
-    *payload_cols); returns (p) pair structs {u, v} (each carrying id +
-    payloads) where at least one endpoint is new.
-
-    The hot-bucket cap is a window count over base ∪ new — the same
-    spill-safe gate-BEFORE-collect order as the batch path (lsh.py:70-76),
-    and because pruning keeps EVERY member of every delta-touched bucket,
-    the count each bucket sees is identical to a full base ∪ new run."""
-    new_keys = new_rows.select(*key_cols).distinct()
-    if broadcast_new_keys:
-        new_keys = F.broadcast(new_keys)
-    pruned_base = base_rows.join(new_keys, key_cols, "left_semi")
-    # a RE-INGESTED id (present in both tables) must count ONCE per bucket:
-    # its base rows are dropped entirely (the new rows represent the doc
-    # now), otherwise the doubled membership inflates the window count and
-    # a bucket at the cap boundary is spuriously dropped — silent candidate
-    # loss on re-ingest batches.  Delta-sized key set, same broadcast rule
-    # as the bucket-key prune.
-    new_ids = new_rows.select("id").distinct()
-    if broadcast_new_keys:
-        new_ids = F.broadcast(new_ids)
-    pruned_base = pruned_base.join(new_ids, "id", "left_anti")
-
+    """Pair structs ``p: {u, v}`` (each carrying id, is_new and payloads)
+    of the delta-touched buckets where at least one endpoint is new — the
+    :func:`lsh.bucket_pairs` kernel over :func:`delta_bucket_rows`."""
     member = F.struct(F.col("id"), F.col("is_new"),
                       *[F.col(c) for c in payload_cols])
-    rows = (
-        pruned_base.withColumn("is_new", F.lit(False))
-        .unionByName(new_rows.withColumn("is_new", F.lit(True)))
-    )
-    counted = rows.withColumn(
-        "_n", F.count("*").over(Window.partitionBy(*key_cols)))
-    bounded = counted.filter(
-        (F.col("_n") >= 2) & (F.col("_n") <= max_bucket_size)).drop("_n")
-    buckets = bounded.groupBy(*key_cols).agg(
-        F.collect_list(member).alias("members"))
-    from ..operators.lsh import pair_expand_expr
-
-    return (
-        buckets.select(F.explode(F.expr(pair_expand_expr("members")))
-                       .alias("p"))
-        .filter(F.col("p.u.is_new") | F.col("p.v.is_new"))
-    )
+    return bucket_pairs(
+        delta_bucket_rows(base_rows, new_rows, key_cols), key_cols, member,
+        max_bucket_size,
+    ).filter(F.col("p.u.is_new") | F.col("p.v.is_new"))
 
 
 def incremental_candidate_pairs(
     base_bands: DataFrame,
     new_bands: DataFrame,
     max_bucket_size: int = 64,
-    broadcast_new_keys: bool = True,
 ) -> DataFrame:
     """MinHash-LSH candidate pairs with ≥1 endpoint in the new batch.
 
     ``base_bands`` / ``new_bands``: (id, band, band_hash) as produced by
     lsh.py::minhash_band_table — the base side read back from the
-    checkpointed ``bands`` stage table, NOT recomputed.
-
-    Set ``broadcast_new_keys=False`` when the delta itself is huge (its
-    distinct bucket keys no longer fit a broadcast) — the prune then runs
-    as a shuffle semi-join, still touching only bucket keys, never texts."""
+    checkpointed ``bands`` stage table, NOT recomputed.  The cap's
+    exclusions are counted by ``lsh.dropped_bucket_stats`` over
+    ``delta_bucket_rows(base_bands, new_bands, ["band", "band_hash"])``."""
     pairs = _delta_touching_pairs(
-        base_bands, new_bands, ["band", "band_hash"], max_bucket_size,
-        broadcast_new_keys=broadcast_new_keys,
-    )
+        base_bands, new_bands, ["band", "band_hash"], max_bucket_size)
     return (
         pairs.select(
             F.least("p.u.id", "p.v.id").alias("id_a"),
@@ -136,43 +135,11 @@ def incremental_candidate_pairs(
     )
 
 
-def incremental_dropped_bucket_stats(
-    base_bands: DataFrame,
-    new_bands: DataFrame,
-    max_bucket_size: int = 64,
-    broadcast_new_keys: bool = True,
-) -> DataFrame:
-    """Observability for the delta path's hot-bucket cap (symmetric with
-    lsh.py::dropped_bucket_stats): how many delta-touched buckets — counted
-    over base ∪ new membership, exactly as the pairing gate counts — were
-    excluded, and how many member rows they held."""
-    new_keys = new_bands.select("band", "band_hash").distinct()
-    if broadcast_new_keys:
-        new_keys = F.broadcast(new_keys)
-    pruned_base = base_bands.join(new_keys, ["band", "band_hash"], "left_semi")
-    # mirror the pairing gate's re-ingest rule: base rows of delta ids drop
-    new_ids = new_bands.select("id").distinct()
-    if broadcast_new_keys:
-        new_ids = F.broadcast(new_ids)
-    pruned_base = pruned_base.join(new_ids, "id", "left_anti")
-    rows = pruned_base.select("id", "band", "band_hash").unionByName(
-        new_bands.select("id", "band", "band_hash"))
-    return (
-        rows.groupBy("band", "band_hash").count()
-        .filter(F.col("count") > max_bucket_size)
-        .agg(
-            F.count("*").alias("dropped_buckets"),
-            F.coalesce(F.sum("count"), F.lit(0)).alias("dropped_rows"),
-        )
-    )
-
-
 def incremental_simhash_pairs(
     base_chunks: DataFrame,
     new_chunks: DataFrame,
     max_hamming: int = 3,
     max_bucket_size: int = 64,
-    broadcast_new_keys: bool = True,
 ) -> DataFrame:
     """SimHash Hamming-ball pairs with ≥1 endpoint in the new batch.
 
@@ -183,7 +150,7 @@ def incremental_simhash_pairs(
     JVM-side on the expanded pairs, exactly like the batch path."""
     pairs = _delta_touching_pairs(
         base_chunks, new_chunks, ["chunk", "chunk_value"], max_bucket_size,
-        payload_cols=["simhash"], broadcast_new_keys=broadcast_new_keys,
+        payload_cols=["simhash"],
     )
     return (
         pairs.filter(
@@ -395,7 +362,6 @@ def incremental_dedup_update(
     max_hamming: int = 3,
     use_simhash_channel: bool = True,
     max_bucket_size: int = 64,
-    broadcast_new_keys: bool = True,
     input_scan_expensive: bool = False,
     with_delta: bool = False,
 ) -> dict:
@@ -420,8 +386,7 @@ def incremental_dedup_update(
     materialized (a long-lived session doing many increments would
     otherwise accumulate cached blocks); with a store it is a no-op (stages
     are disk-backed tables, nothing is pinned)."""
-    from ..operators.lsh import minhash_band_table
-    from ..operators.timeline import prepare_pages
+    from ..plans.pipeline import dedup_docs
     from ..session import pin_for_session, release_pins
 
     pinned: list = []
@@ -438,24 +403,11 @@ def incremental_dedup_update(
             return pinned[-1]
         return store.run_stage(name, build)
 
-    def build_docs():
-        # dedupe BEFORE the UDFs: the same page appearing twice in one
-        # batch (overlapping WARC globs, a re-crawled segment) must count
-        # ONCE — duplicate nid rows would double-count in every
-        # bucket-size cap downstream and permanently duplicate docs/bands
-        # on promote.  urim ≡ (url, warc_ts); dedupe_pages never shuffles
-        # the html payload (dup-key-targeted collapse).
-        from ..plans.pipeline import dedupe_pages
-
-        return prepare_pages(
-            dedupe_pages(new_pages, expensive_scan=input_scan_expensive),
-            need_tf_simhash=False,
-        ).select(
-            F.xxhash64("urim").alias("nid"),
-            "urim", "text", "tokens", "raw_simhash",
-        )
-
-    new_docs = stage("inc_docs", build_docs)
+    # the batch docs stage over the increment: dedupe_pages collapses a
+    # page listed twice in one batch BEFORE the UDFs, so it counts once in
+    # every bucket-size cap and never duplicates docs/bands on promote
+    new_docs = stage("inc_docs",
+                     lambda: dedup_docs(new_pages, input_scan_expensive))
 
     def build_bands():
         return minhash_band_table(
@@ -466,60 +418,43 @@ def incremental_dedup_update(
 
     def build_candidates():
         minhash_pairs = incremental_candidate_pairs(
-            base_bands, new_bands, max_bucket_size=max_bucket_size,
-            broadcast_new_keys=broadcast_new_keys)
+            base_bands, new_bands, max_bucket_size=max_bucket_size)
         if not use_simhash_channel:
             return minhash_pairs
         # the simhash chunk table is cheap column math over the stored
         # raw_simhash — derived on the fly from the docs tables (map-only;
         # the broadcast semi-join prune then discards everything outside the
         # delta's chunk-key space before any shuffle), matching the batch
-        # pipeline's dual-channel candidates
-        from ..operators.lsh import chunks_for_hamming, simhash_chunk_table
-
-        # pigeonhole precondition: ≥ max_hamming+1 slices, same derivation
-        # as the batch channel (silent recall loss otherwise)
+        # pipeline's dual-channel candidates.  Pigeonhole precondition:
+        # ≥ max_hamming+1 slices, same derivation as the batch channel
+        # (silent recall loss otherwise)
         n_chunks = chunks_for_hamming(max_hamming)
         simhash_pairs = incremental_simhash_pairs(
             simhash_chunk_table(base_docs, id_col="nid",
                                 simhash_col="raw_simhash", chunks=n_chunks),
             simhash_chunk_table(new_docs, id_col="nid",
                                 simhash_col="raw_simhash", chunks=n_chunks),
-            max_hamming=max_hamming, max_bucket_size=max_bucket_size,
-            broadcast_new_keys=broadcast_new_keys)
+            max_hamming=max_hamming, max_bucket_size=max_bucket_size)
         return minhash_pairs.union(simhash_pairs).distinct()
 
     candidates = stage("inc_candidates", build_candidates)
 
     def build_verified():
-        from ..operators.verify import verified_pairs_jaccard
-
-        # prune the docs side to the pair endpoints BEFORE the payload
-        # joins: endpoints are delta-sized (≤ 2·|candidates|), so a
-        # broadcast semi-join keeps the corpus docs scan map-only instead
-        # of shuffling every token array through the verify join
-        endpoints = (
-            candidates.select(F.col("id_a").alias("nid"))
-            .unionByName(candidates.select(F.col("id_b").alias("nid")))
-            .distinct()
-        )
-        if broadcast_new_keys:
-            endpoints = F.broadcast(endpoints)
-        # re-ingest rule, same as the candidate stage (_delta_touching_pairs):
+        # re-ingest rule, same as the candidate stage (delta_bucket_rows):
         # a nid present in BOTH tables is represented by its NEW row only.
         # Without the anti-join the union carries two token rows per
         # re-ingested nid, and the verify equi-join fans every such pair out
         # — duplicate verified rows (which a promote would insert into the
         # evidence table) and verdicts computed against the STALE base tokens.
-        batch_ids = new_docs.select("nid").distinct()
-        if broadcast_new_keys:
-            batch_ids = F.broadcast(batch_ids)
+        batch_ids = F.broadcast(new_docs.select("nid").distinct())
         all_docs = (
             base_docs.select("nid", "tokens")
             .join(batch_ids, "nid", "left_anti")
             .unionByName(new_docs.select("nid", "tokens"))
-            .join(endpoints, "nid", "left_semi")
         )
+        # the batch prune: candidates is a pinned/committed stage here, so
+        # the endpoint traversal is a cheap re-read
+        all_docs = prune_docs_to_pair_endpoints(candidates, all_docs, "nid")
         return verified_pairs_jaccard(
             candidates, all_docs, id_col="nid", tokens_col="tokens",
             min_jaccard=min_jaccard,

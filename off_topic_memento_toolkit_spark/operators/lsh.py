@@ -6,12 +6,13 @@ that connected components (components.py) resolves into duplicate clusters.
 Scale design:
 - LSH bucket join is an equi-join on (band_index, band_hash) — shuffle on the
   band key only; no O(n²) anywhere.
-- Hot buckets (boilerplate-heavy shingles, viral hosts) are CAPPED at
-  ``max_bucket_size`` before pair expansion — a bucket of B rows expands to
-  B² /2 pairs, so one mega-bucket can dominate the job; the cap bounds the
-  blowup and the dropped-bucket count is observable in the returned metrics
-  accumulator column (no silent truncation: callers can count
-  ``dropped_buckets``).
+- :func:`bucket_pairs` is the one bucket → pair kernel every channel uses
+  (MinHash bands, SimHash chunks, the incremental delta buckets, SRP
+  embedding buckets).  Hot buckets (boilerplate-heavy shingles, viral
+  hosts) are CAPPED at ``max_bucket_size`` before pair expansion — a bucket
+  of B rows expands to B²/2 pairs, so one mega-bucket can dominate the job;
+  the cap bounds the blowup and :func:`dropped_bucket_stats` counts the
+  exclusions (no silent truncation).
 - SimHash channel: split the 64-bit value into ``chunks`` equal bit-slices;
   by pigeonhole any pair with hamming ≤ chunks-1 collides on at least one
   slice, so an equi-join per slice finds all candidates for distance
@@ -19,7 +20,7 @@ Scale design:
   JVM-side after the join.
 """
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.udfs import make_minhash_bands_udf
@@ -51,11 +52,9 @@ def minhash_band_table(
     )
 
 
-def pair_expand_expr(col: str) -> str:
+def _pair_expand_expr(col: str) -> str:
     """SQL expression expanding a (sorted) array column into its unordered
-    element pairs as struct(u, v) — shared by every collect+expand candidate
-    path (minhash buckets, simhash buckets, incremental delta buckets) so
-    the 1-based ``slice`` arithmetic lives in exactly one place."""
+    element pairs as struct(u, v)."""
     return (
         f"flatten(transform({col}, (x, i) -> "
         f"transform(slice({col}, i + 2, size({col}) - i - 1), "
@@ -63,20 +62,22 @@ def pair_expand_expr(col: str) -> str:
     )
 
 
-_PAIR_EXPAND = pair_expand_expr("ids")
-
-
-def candidate_pairs_from_buckets(
-    bucketed: DataFrame,
-    max_bucket_size: int = 64,
-    distinct_pairs: bool = True,
+def bucket_pairs(
+    rows: DataFrame,
+    key_cols: list,
+    member,
+    max_bucket_size: int,
 ) -> DataFrame:
-    """Equal buckets → (id_a < id_b) candidate pairs.
+    """The one bucket-table → candidate-pair kernel: every channel (MinHash
+    bands, SimHash chunks, delta buckets, SRP embedding buckets) groups its
+    rows on ``key_cols`` and expands each bucket's ``member`` values into a
+    ``p: struct<u, v>`` column, one row per unordered member pair.  Callers
+    keep only their own filters and the id projection.
 
-    ONE shuffle: group each bucket's ids with ``collect_list`` and expand the
-    pairs JVM-side (``transform``/``flatten``/``explode``) — no self-join (a
-    self-join would evaluate the signature-UDF lineage twice and shuffle the
-    band table two more times).
+    ONE shuffle: group each bucket's members with ``collect_list`` and
+    expand the pairs JVM-side (``transform``/``flatten``/``explode``) — no
+    self-join (a self-join would evaluate the signature-UDF lineage twice
+    and shuffle the bucket table two more times).
 
     Buckets larger than ``max_bucket_size`` are dropped (their members are
     near-certainly caught by other bands; a bucket of B rows expands to B²/2
@@ -89,7 +90,7 @@ def candidate_pairs_from_buckets(
     array, so filtering after the collect would let a single degenerate
     10^7-member bucket OOM its reducer at 100 TB.  The window and the groupBy
     share the same hash partitioning, so this still compiles to ONE exchange
-    on the band table (enforced by tests/test_plan_shape.py).
+    on the bucket table (enforced by tests/test_plan_shape.py).
 
     Expand-late: a true near-dup pair collides in MANY bands (a jaccard-0.9
     pair hits ~half of 32 bands), so the same member set reappears as a
@@ -98,12 +99,55 @@ def candidate_pairs_from_buckets(
     factor (measured ~29x on a clique corpus: 79M expanded rows for 2.7M
     distinct pairs).  Instead the member LISTS are sorted and deduped first
     — one exchange over #buckets short-array rows, strictly smaller than
-    the band table itself — and only distinct member sets expand to pairs.
-    The produced pair set is identical (pairs of a bucket depend only on
-    its member set); the final pair-distinct still collapses overlapping
-    but non-identical buckets.  Measured 8→32-thread efficiency of the
-    dedup stage on the adversarial all-clique corpus: 0.14 → ≥0.5 raw
-    (BENCH.md mechanism section).
+    the bucket table itself — and only distinct member sets expand to
+    pairs.  The produced pair set is identical (pairs of a bucket depend
+    only on its member set); overlapping but non-identical buckets still
+    emit a pair once per set, so callers that need a pair SET distinct it.
+    Measured 8→32-thread efficiency of the dedup stage on the adversarial
+    all-clique corpus: 0.14 → ≥0.5 raw (BENCH.md mechanism section)."""
+    counted = rows.withColumn(
+        "_n", F.count("*").over(Window.partitionBy(*key_cols)))
+    bounded_rows = counted.filter(
+        (F.col("_n") >= 2) & (F.col("_n") <= max_bucket_size)).drop("_n")
+    member_sets = (
+        bounded_rows.groupBy(*key_cols)
+        .agg(F.collect_list(member).alias("members"))
+        .select(F.array_sort("members").alias("members"))
+        .distinct()
+    )
+    return member_sets.select(
+        F.explode(F.expr(_pair_expand_expr("members"))).alias("p"))
+
+
+def overflowing_buckets(
+    rows: DataFrame, key_cols: list, max_bucket_size: int,
+) -> DataFrame:
+    """(*key_cols, count) of every bucket over the cap — the buckets
+    :func:`bucket_pairs` drops."""
+    return (rows.groupBy(*key_cols).count()
+            .filter(F.col("count") > max_bucket_size))
+
+
+def dropped_bucket_stats(
+    rows: DataFrame, key_cols: list, max_bucket_size: int = 64,
+) -> DataFrame:
+    """Observability for the cap: how many buckets/rows were excluded.
+    Run it over the same rows the channel pairs — the band or chunk table,
+    an incremental channel's ``delta_bucket_rows``, or the SRP bucket
+    table."""
+    return overflowing_buckets(rows, key_cols, max_bucket_size).agg(
+        F.count("*").alias("dropped_buckets"),
+        F.coalesce(F.sum("count"), F.lit(0)).alias("dropped_rows"),
+    )
+
+
+def candidate_pairs_from_buckets(
+    bucketed: DataFrame,
+    max_bucket_size: int = 64,
+    distinct_pairs: bool = True,
+) -> DataFrame:
+    """Equal (band, band_hash) buckets → (id_a < id_b) candidate pairs, via
+    :func:`bucket_pairs`.
 
     ``distinct_pairs=False``: emit the expanded pairs without the final
     pair-level ``distinct()`` — for callers that union several candidate
@@ -112,35 +156,13 @@ def candidate_pairs_from_buckets(
     scale.  Multiset differs (overlapping member sets emit a pair once per
     set); the SET of pairs is identical.
     """
-    from pyspark.sql import Window
-
-    counted = bucketed.withColumn(
-        "_n", F.count("*").over(Window.partitionBy("band", "band_hash")))
-    bounded_rows = counted.filter(
-        (F.col("_n") >= 2) & (F.col("_n") <= max_bucket_size)).drop("_n")
-    buckets = bounded_rows.groupBy("band", "band_hash").agg(
-        F.collect_list("id").alias("ids"))
-    member_sets = buckets.select(F.array_sort("ids").alias("ids")).distinct()
-    pairs = (
-        member_sets.select(F.explode(F.expr(_PAIR_EXPAND)).alias("p"))
-        .select(
-            F.least("p.u", "p.v").alias("id_a"),
-            F.greatest("p.u", "p.v").alias("id_b"),
-        )
+    pairs = bucket_pairs(
+        bucketed, ["band", "band_hash"], F.col("id"), max_bucket_size,
+    ).select(
+        F.least("p.u", "p.v").alias("id_a"),
+        F.greatest("p.u", "p.v").alias("id_b"),
     )
     return pairs.distinct() if distinct_pairs else pairs
-
-
-def dropped_bucket_stats(bucketed: DataFrame, max_bucket_size: int = 64) -> DataFrame:
-    """Observability for the cap: how many buckets/rows were excluded."""
-    return (
-        bucketed.groupBy("band", "band_hash").count()
-        .filter(F.col("count") > max_bucket_size)
-        .agg(
-            F.count("*").alias("dropped_buckets"),
-            F.coalesce(F.sum("count"), F.lit(0)).alias("dropped_rows"),
-        )
-    )
 
 
 def minhash_candidate_pairs(
@@ -221,30 +243,18 @@ def simhash_candidate_pairs(
     """All pairs with hamming(simhash) ≤ max_hamming, found via chunk-bucket
     grouping (exhaustive when max_hamming ≤ chunks-1 by pigeonhole).
 
-    Same one-shuffle collect+expand shape as the MinHash path (incl. the
-    spill-safe window-count size gate BEFORE the collect, and the same
-    expand-late member-set dedup — a pair within hamming ≤ chunks-1 can
-    collide on up to ``chunks`` slices, so deduping the sorted member lists
-    before expansion divides the expanded row count by that duplication);
+    Same :func:`bucket_pairs` kernel as the MinHash path (a pair within
+    hamming ≤ chunks-1 can collide on up to ``chunks`` slices, so the
+    member-set dedup divides the expanded row count by that duplication);
     the exact ``bit_count`` verify runs on the expanded pairs, all
     JVM-side."""
-    from pyspark.sql import Window
-
     # the contract is ALL pairs ≤ max_hamming: widen the slice count when
     # the caller's max_hamming outgrows it (pigeonhole needs ≥ h+1 slices)
     chunks = chunks_for_hamming(max_hamming, chunks)
     table = simhash_chunk_table(df, id_col, simhash_col, chunks)
-    counted = table.withColumn(
-        "_n", F.count("*").over(Window.partitionBy("chunk", "chunk_value")))
-    bounded_rows = counted.filter(
-        (F.col("_n") >= 2) & (F.col("_n") <= max_bucket_size)).drop("_n")
-    buckets = bounded_rows.groupBy("chunk", "chunk_value").agg(
-        F.collect_list(F.struct("id", "simhash")).alias("members"))
-    buckets = buckets.select(
-        F.array_sort("members").alias("members")).distinct()
     pairs = (
-        buckets.select(F.explode(F.expr(pair_expand_expr("members")))
-                       .alias("p"))
+        bucket_pairs(table, ["chunk", "chunk_value"],
+                     F.struct("id", "simhash"), max_bucket_size)
         .filter(
             F.bit_count(
                 F.col("p.u.simhash").bitwiseXOR(F.col("p.v.simhash"))

@@ -178,7 +178,6 @@ def enrich_with_firsts(
     need_raw_simhash: bool = True,
     need_tf_simhash: bool = True,
     need_lev: bool = False,
-    strategy: str = "window",
 ) -> DataFrame:
     """prepare_pages + first-memento anchor columns.
 
@@ -186,14 +185,8 @@ def enrich_with_firsts(
     Python UDF columns aren't free, and persist() downstream would
     materialize them past Catalyst's pruning.
 
-    ``strategy``:
-    - ``"window"`` (default): one hash shuffle on urit + per-group sort —
-      optimal when timelines are balanced.
-    - ``"join"``: skew path — derive each timeline's first row with a
-      ``min_by``-style struct aggregation (map-side partial agg, so a viral
-      host's 10^6 mementos never sort in one task) and hash-join it back;
-      AQE's skew-join splitting then handles the join side.  Same result,
-      verified by tests.
+    The anchors are running-frame window values over the timeline: one
+    hash shuffle on urit + per-group sort.
     """
     df = prepare_pages(pages, need_raw_simhash=need_raw_simhash,
                        need_tf_simhash=need_tf_simhash)
@@ -207,26 +200,13 @@ def enrich_with_firsts(
     if need_top20:
         first_columns.append("top20")
 
-    if strategy == "window":
-        # one withColumns call: each chained withColumn re-analyzes the
-        # whole (already large) plan, and the first-anchor loop was six of
-        # them — the columns are independent, so a single Project is
-        # identical and cuts plan-build time
-        df = df.withColumns({
-            f"first_{column}": first_over_timeline(column)
-            for column in first_columns
-        })
-    elif strategy == "join":
-        ordering = F.struct(F.col("warc_ts"), F.col("urim"))
-        firsts = df.groupBy("urit").agg(
-            *[
-                F.min_by(column, ordering).alias(f"first_{column}")
-                for column in first_columns
-            ]
-        )
-        df = df.join(firsts, "urit")
-    else:
-        raise ValueError(f"unknown first-anchor strategy {strategy!r}")
+    # one withColumns call: each chained withColumn re-analyzes the whole
+    # (already large) plan; the columns are independent, so a single
+    # Project is identical and cuts plan-build time
+    df = df.withColumns({
+        f"first_{column}": first_over_timeline(column)
+        for column in first_columns
+    })
 
     if need_lev:
         df = df.withColumn(
@@ -238,7 +218,6 @@ def score_timemap_measures(
     pages: DataFrame,
     measures=DEFAULT_MEASURES,
     thresholds: dict | None = None,
-    first_anchor_strategy: str = "window",
 ) -> DataFrame:
     """Long-format scores: one row per (urit, urim, measure).
 
@@ -246,7 +225,7 @@ def score_timemap_measures(
     stemmed, removed_boilerplate, topic_status, error_msg.
     """
     return _scores_and_enrichment(pages, measures, thresholds,
-                                  first_anchor_strategy, metadata=False)[0]
+                                  metadata=False)[0]
 
 
 def scores_with_metadata(
@@ -259,12 +238,11 @@ def scores_with_metadata(
     frame the measures read, so the extract/tokenize/simhash UDFs run once
     for both."""
     scores, enriched = _scores_and_enrichment(pages, measures, thresholds,
-                                              "window", metadata=True)
+                                              metadata=True)
     return scores, _metadata_columns(enriched)
 
 
-def _scores_and_enrichment(pages, measures, thresholds, first_anchor_strategy,
-                           metadata):
+def _scores_and_enrichment(pages, measures, thresholds, metadata):
     measures = list(measures)
     unknown = [m for m in measures if m not in MEASURE_REGISTRY]
     if unknown:
@@ -284,7 +262,6 @@ def _scores_and_enrichment(pages, measures, thresholds, first_anchor_strategy,
         need_raw_simhash=metadata or "raw_simhash" in pairwise,
         need_tf_simhash="tf_simhash" in pairwise,
         need_lev=bool({"levenshtein", "nlevenshtein"} & set(pairwise)),
-        strategy=first_anchor_strategy,
     )
     # fold the pairwise array algebra into scalar columns BEFORE any pin —
     # in the unpinned path Catalyst collapses these into the same

@@ -53,7 +53,6 @@ def first_over_timeline(column: str) -> Column:
 
 def prepare_pages(
     pages: DataFrame,
-    recompute_text: bool = False,
     need_raw_simhash: bool = True,
     need_tf_simhash: bool = True,
 ) -> DataFrame:
@@ -104,7 +103,7 @@ def prepare_pages(
         if est_bytes < shuffle_n * max_pb and not already_wide:
             df = df.repartition(shuffle_n)
 
-    if recompute_text or "text" not in df.columns:
+    if "text" not in df.columns:
         df = df.withColumn("text", extract_text_udf(F.col("html")))
     else:
         # fill missing text from html (the reference's lazy derive+memoize,

@@ -107,6 +107,37 @@ def dedupe_pages(pages: DataFrame, id_cols=("url", "warc_ts"),
     return unique_part.unionByName(collapsed)
 
 
+def dedup_docs(pages: DataFrame,
+               input_scan_expensive: bool = False) -> DataFrame:
+    """The dedup ``docs`` stage, (nid, urim, text, tokens, raw_simhash) —
+    built the same way for the batch pipeline and for an ingest increment
+    (operators/incremental.py).
+
+    ``nid`` is a deterministic 64-bit surrogate id used through every
+    shuffle-heavy stage: pair expansion and CC move 16-byte long pairs
+    instead of two ~60-char urim strings (~7x fewer shuffle bytes).  At
+    10^12 docs a 64-bit hash collides (birthday ≈ n²/2^65) — swap in the
+    128-bit variant (two xxhash64 salts) when deploying at that scale;
+    collisions only ever MERGE clusters, never split them.
+
+    Pages are deduped BEFORE the UDFs: a page listed twice (overlapping
+    WARC globs, a re-crawled segment) must count once — in every
+    bucket-size cap downstream — and must not be extracted/tokenized
+    twice.  urim ≡ (url, warc_ts), so this is the nid-dedupe."""
+    return prepare_pages(
+        dedupe_pages(pages, expensive_scan=input_scan_expensive),
+        need_tf_simhash=False,
+    ).select(
+        F.xxhash64("urim").alias("nid"),
+        "urim", "text", "tokens", "raw_simhash",
+    )
+
+
+# storeless dedup_pipeline fills its docs pin eagerly at or above this
+# optimizer size estimate (see the comment at the fill)
+_EAGER_FILL_MIN_BYTES = 2 * 1024 * 1024
+
+
 def dedup_pipeline(
     pages: DataFrame,
     store=None,
@@ -150,25 +181,7 @@ def dedup_pipeline(
                                bucket_by=bucket_specs.get(name),
                                num_buckets=state_buckets)
 
-    def build_docs():
-        # `nid` — deterministic 64-bit surrogate id used through every
-        # shuffle-heavy stage: pair expansion and CC move 16-byte long pairs
-        # instead of two ~60-char urim strings (~7x fewer shuffle bytes).
-        # At 10^12 docs a 64-bit hash collides (birthday ≈ n²/2^65) — swap in
-        # the 128-bit variant (two xxhash64 salts) when deploying at that
-        # scale; collisions only ever MERGE clusters, never split them.
-        # dedupe BEFORE the UDFs: a page listed twice (overlapping WARC
-        # globs) must count once — and must not be extracted/tokenized
-        # twice.  urim ≡ (url, warc_ts), so this is the nid-dedupe.
-        return prepare_pages(
-            dedupe_pages(pages, expensive_scan=input_scan_expensive),
-            need_tf_simhash=False,
-        ).select(
-            F.xxhash64("urim").alias("nid"),
-            "urim", "text", "tokens", "raw_simhash",
-        )
-
-    docs = stage("docs", build_docs)
+    docs = stage("docs", lambda: dedup_docs(pages, input_scan_expensive))
     if store is None:
         # downstream stages (minhash bands, simhash chunks, verify join) each
         # traverse docs; without the checkpoint table, cache it so the
@@ -204,11 +217,9 @@ def dedup_pipeline(
         # needs no fill: its branches are separated by an exchange
         # barrier, so the first reader always finishes before the second
         # starts.)
-        min_fill = int(pages.sparkSession.conf.get(
-            "spark.otmt.dedup.eagerFillMinBytes", str(2 * 1024 * 1024)))
         est = int(str(docs._jdf.queryExecution().optimizedPlan()
                       .stats().sizeInBytes()))
-        if est >= min_fill:
+        if est >= _EAGER_FILL_MIN_BYTES:
             docs.count()
 
     def build_bands():

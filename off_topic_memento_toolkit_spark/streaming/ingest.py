@@ -267,11 +267,12 @@ def streaming_incremental_candidates(
     # lifetime; each micro-batch then drops them with a map-side broadcast
     # anti-join.  The base is a committed checkpoint stage (immutable until
     # the next promote rebuilds the stream), so caching it is sound.
+    from ..operators.lsh import overflowing_buckets
     from ..session import pin_for_session
 
     hot_keys = pin_for_session(
-        base_bands.groupBy("band", "band_hash").count()
-        .filter(F.col("count") > max_bucket_size)
+        overflowing_buckets(base_bands, ["band", "band_hash"],
+                            max_bucket_size)
         .select("band", "band_hash")
     )
     bounded_base = (

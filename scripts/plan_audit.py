@@ -125,7 +125,9 @@ def main():
         "incremental_lsh_pairs": (
             "delta-batch candidates: base band table pruned to delta-touched "
             "buckets by a broadcast SEMI-join before any shuffle; then the "
-            "same one-exchange gate+collect+expand as the batch path."),
+            "batch path's lsh.bucket_pairs kernel (gate+collect share one "
+            "exchange, the member-set dedup adds one) and the pair "
+            "distinct."),
         "incremental_dedup_merge": (
             "contraction CC: prior assignments pruned to edge endpoints "
             "(broadcast semi-join), contracted edges resolved by the hybrid "
@@ -143,7 +145,9 @@ def main():
         "verified_dup_pairs": (
             "LSH candidates -> Arrow Jaccard verify on pair payload joins."),
         "embedding_near_dups": (
-            "SRP buckets, spill-safe size gate, collect+expand, no self-join."),
+            "SRP buckets through lsh.bucket_pairs: spill-safe size gate and "
+            "collect share one exchange, the member-set dedup adds one, the "
+            "pair distinct the third; no self-join."),
         "multimodal_bmp_topk": (
             "BMP synth+decode+feature in partition-preserving mapInPandas "
             "(no exchange until the ANN join); brute top-k = deliberate "
@@ -202,7 +206,8 @@ def main():
         "Invariants enforced by tests/test_plan_shape.py: the pairwise "
         "measure suite = exactly one keyed exchange / one fused "
         "ArrowEvalPython / one sort on wide input; LSH candidate generation "
-        "is join-free with the size gate below the collect; scans prune "
+        "is join-free with the size gate below the collect, and only "
+        "operators/lsh.py builds it; scans prune "
         "columns; bucketed-table joins are Exchange-free "
         "(tests/test_bucketing.py); detect's writers run no Python node "
         "outside the one pinned report, which runs each once "

@@ -12,6 +12,7 @@ from off_topic_memento_toolkit_spark.operators.components import (
     connected_components,
 )
 from off_topic_memento_toolkit_spark.operators.incremental import (
+    delta_bucket_rows,
     incremental_candidate_pairs,
     incremental_components,
     incremental_dedup_update,
@@ -19,6 +20,7 @@ from off_topic_memento_toolkit_spark.operators.incremental import (
 )
 from off_topic_memento_toolkit_spark.operators.lsh import (
     candidate_pairs_from_buckets,
+    dropped_bucket_stats,
     minhash_band_table,
     simhash_candidate_pairs,
     simhash_chunk_table,
@@ -98,27 +100,25 @@ def test_incremental_pairs_reingested_id_counts_once(spark):
     assert got == {(1, 3), (2, 3), (1, 4), (2, 4), (3, 4)}
 
 
+def _delta_dropped_stats(base, new, cap):
+    """lsh.dropped_bucket_stats over the rows the delta pairing gate counts."""
+    return dropped_bucket_stats(
+        delta_bucket_rows(base, new, ["band", "band_hash"]),
+        ["band", "band_hash"], max_bucket_size=cap).first()
+
+
 def test_incremental_dropped_stats_reingest_not_double_counted(spark):
     """The observability counter applies the same superseding rule: the
     4-distinct-member bucket is NOT reported dropped at cap=4."""
-    from off_topic_memento_toolkit_spark.operators.incremental import (
-        incremental_dropped_bucket_stats,
-    )
-
     base = _band_rows(spark, [(1, 0, 100), (2, 0, 100), (3, 0, 100)])
     new = _band_rows(spark, [(3, 0, 100), (4, 0, 100)])
-    row = incremental_dropped_bucket_stats(base, new, max_bucket_size=4) \
-        .first()
+    row = _delta_dropped_stats(base, new, cap=4)
     assert row.dropped_buckets == 0 and row.dropped_rows == 0
 
 
 def test_incremental_dropped_bucket_stats(spark):
     """The cap's exclusions are observable, counted over base ∪ new
     membership, and only for delta-touched buckets."""
-    from off_topic_memento_toolkit_spark.operators.incremental import (
-        incremental_dropped_bucket_stats,
-    )
-
     base = _band_rows(spark, [
         (1, 0, 100), (2, 0, 100), (3, 0, 100),      # +2 new = 5 > 4
         (10, 0, 200), (11, 0, 200),                 # +1 new = 3 ≤ 4
@@ -126,8 +126,7 @@ def test_incremental_dropped_bucket_stats(spark):
         (23, 0, 300), (24, 0, 300),                 # over cap but ALL-BASE
     ])
     new = _band_rows(spark, [(4, 0, 100), (5, 0, 100), (12, 0, 200)])
-    row = incremental_dropped_bucket_stats(base, new, max_bucket_size=4) \
-        .first()
+    row = _delta_dropped_stats(base, new, cap=4)
     assert row.dropped_buckets == 1 and row.dropped_rows == 5
 
 

@@ -8,11 +8,15 @@
   round-robin BEFORE the Python UDFs, so enrichment parallelizes — that adds
   exactly one round-robin exchange and nothing else;
 - the parquet scan prunes to the columns the query needs;
-- LSH candidate generation contains no join (collect+expand shape).
+- LSH candidate generation contains no join (collect+expand shape), and
+  operators/lsh.py is the only module that builds that shape or applies
+  the hot-bucket cap.
 """
 
+import pathlib
 import re
 
+import off_topic_memento_toolkit_spark as package
 from off_topic_memento_toolkit_spark.operators.lsh import (
     candidate_pairs_from_buckets,
     minhash_band_table,
@@ -89,6 +93,24 @@ def test_lsh_candidates_no_join(spark):
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 3
     # the spill-safe gate sits BEFORE the collect: Window below HashAggregate
     assert plan.index("HashAggregate") < plan.index("Window")  # printed top-down
+
+
+def test_only_lsh_turns_buckets_into_pairs():
+    """Every candidate channel (MinHash, SimHash, incremental, streaming,
+    embedding) goes through lsh.bucket_pairs / lsh.overflowing_buckets: the
+    bucket gate's collect_list, the pair-expand expression and the
+    over-the-cap comparison appear in no other module."""
+    root = pathlib.Path(package.__file__).parent
+    pattern = re.compile(
+        r"collect_list\(|pair_expand|flatten\(transform\(|> max_bucket_size")
+    sites = [
+        f"{path.relative_to(root)}:{n}"
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "operators" / "lsh.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not sites, sites
 
 
 def test_slice_by_datetime_no_single_partition_sort(spark):

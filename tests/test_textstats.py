@@ -119,11 +119,53 @@ def test_embedding_near_duplicates_hot_bucket_capped(spark):
     # the cap is observable, not a silent recall loss
     from off_topic_memento_toolkit_spark.operators.ann import (
         embedding_bucket_table,
-        embedding_dropped_bucket_stats,
+    )
+    from off_topic_memento_toolkit_spark.operators.lsh import (
+        dropped_bucket_stats,
     )
     bucketed = embedding_bucket_table(df, dim=4, n_planes=4)
-    stats = embedding_dropped_bucket_stats(bucketed, max_bucket_size=32).collect()[0]
+    stats = dropped_bucket_stats(
+        bucketed, ["bucket"], max_bucket_size=32).collect()[0]
     assert stats.dropped_buckets == 1 and stats.dropped_rows == 200
+
+
+def _python_nodes_per_side(plan):
+    """(build side, probe side) Python eval node counts of a plan with one
+    BroadcastExchange: the build side is that node's subtree, read off the
+    tree-string indentation."""
+    lines = plan.splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    start = next(i for i, line in enumerate(lines)
+                 if "BroadcastExchange" in line)
+    end = next((i for i in range(start + 1, len(lines))
+                if depth(lines[i]) <= depth(lines[start])), len(lines))
+    build = "\n".join(lines[start:end])
+    probe = "\n".join(lines[:start] + lines[end:])
+    return (build.count("ArrowEvalPython"), probe.count("ArrowEvalPython"))
+
+
+def test_ann_bucket_joins_evaluate_each_udf_once_per_side(spark, embeddings):
+    """The ANN bucket UDFs are marked asNondeterministic() only as a
+    planner hint: it stops the bucket join's inferred isnotnull filter from
+    being pushed below the UDF projection, which would evaluate the UDF a
+    second time on each side.  Pin the effect, so a Spark upgrade that
+    treats the hint differently fails here instead of doubling the UDF
+    work."""
+    from off_topic_memento_toolkit_spark.operators.ann import (
+        ivf_cosine_topk,
+        train_ivf_centroids,
+    )
+
+    queries = embeddings.filter(F.col("vec_id") < 2)
+    lsh = lsh_cosine_topk(embeddings, queries, k=3, dim=8, n_planes=4)
+    centroids = train_ivf_centroids(embeddings, n_centroids=4, dim=8)
+    ivf = ivf_cosine_topk(embeddings, queries, centroids, k=3, nprobe=2)
+    for df in (lsh, ivf):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert _python_nodes_per_side(plan) == (1, 1), plan
 
 
 def test_ivf_training_sample_spans_partitions(spark):
