@@ -55,7 +55,7 @@ def _read_pages(spark: SparkSession, spec: str):
     if kind == "warc":
         # the reference's flagship input (bin/detect_off_topic -i warc=...,
         # otmt/input_types.py:655-678); text is derived from html downstream
-        # by prepare_pages' extract_text, exactly the reference's lazy
+        # by the enrichment's text extraction, exactly the reference's lazy
         # justext derive (otmt/collectionmodel.py:440-469)
         from pyspark.sql import functions as F
 
@@ -722,13 +722,12 @@ def _run(args, spark):
             quality_features,
             token_counts,
         )
-        from .operators.timeline import prepare_pages
+        from .operators.timeline import enrich_pages
 
         pages, _ = _read_pages(spark, args.input)
         pages = _apply_consider(spark, pages, args.consider)
-        enriched = prepare_pages(pages, need_raw_simhash=False,
-                                 need_tf_simhash=False)
-        docs = enriched.select("urim", "url", "warc_ts", "text")
+        docs = enrich_pages(pages, ["text"]).select(
+            "urim", "url", "warc_ts", "text")
         annotated = exact_duplicates(
             fingerprint(token_counts(quality_features(language_id(docs)))),
             order_col="urim",
@@ -751,7 +750,7 @@ def _run(args, spark):
         pages = _apply_consider(spark, pages, args.consider)
         if "text" not in pages.columns:
             # warc: frames carry (url, warc_ts, html, lang) only — text is
-            # derived lazily from html by prepare_pages; align to the
+            # derived lazily from html by enrich_pages; align to the
             # input_hint shape so the selects below resolve on every input
             from pyspark.sql import functions as F
 
@@ -764,11 +763,9 @@ def _run(args, spark):
             # extracted text — mirroring the reference's detected-language
             # select (bin/select_by_language reads langdetect output)
             from .operators.textstats import language_id
-            from .operators.timeline import prepare_pages
+            from .operators.timeline import enrich_pages
 
-            enriched = prepare_pages(pages, need_raw_simhash=False,
-                                     need_tf_simhash=False)
-            tagged = language_id(enriched)
+            tagged = language_id(enrich_pages(pages, ["text"]))
             pages = tagged.withColumn(
                 "lang", F.coalesce(F.col("lang"), F.col("lang_pred")))
             pages = select_by_language(pages, args.language)
@@ -787,6 +784,7 @@ def _run(args, spark):
 
     elif args.command == "stream":
         from .streaming.ingest import (
+            MODE_OUTPUTS,
             build_streaming_enrichment,
             streaming_crawl_rates,
             streaming_sequential_dedup,
@@ -794,7 +792,8 @@ def _run(args, spark):
         )
 
         enriched = build_streaming_enrichment(
-            spark, args.input, watermark=args.watermark)
+            spark, args.input, watermark=args.watermark,
+            outputs=MODE_OUTPUTS[args.mode])
         if args.mode == "candidates":
             from .streaming.ingest import streaming_incremental_candidates
 

@@ -8,7 +8,8 @@ reference gets from nltk / justext / simhash / distance / sklearn:
 - :mod:`.stopwords`  — frozen English stopword list + punctuation
 - :mod:`.textprep`   — ``full_tokenize`` / ``extract_text`` pipelines
                        (reference: otmt/timemap_measures.py:45-62,
-                        otmt/collectionmodel.py:456-463)
+                        otmt/collectionmodel.py:456-463) and
+                       ``enrich_document``, one document's enrichment
 - :mod:`.simhash64`  — 64-bit md5 SimHash (simhash lib semantics)
 - :mod:`.minhash`    — MinHash signatures over word shingles (new, north_rule)
 - :mod:`.seqdist`    — token-sequence Levenshtein / normalized Levenshtein

@@ -42,9 +42,11 @@ list + punctuation.
 """
 
 import re
+from collections import Counter
 from html.parser import HTMLParser
 
 from .porter import porter_stem
+from .simhash64 import simhash_raw_bytes, simhash_tokens, to_signed64
 from .stopwords import STOPSET
 from .treebank import word_tokenize
 
@@ -275,3 +277,44 @@ def full_tokenize(text, stemming: bool = True) -> list:
     if stemming:
         tokens = [porter_stem(token) for token in tokens]
     return [token for token in tokens if token not in STOPSET]
+
+
+def top20_terms(tokens) -> list:
+    """Top-20 TF terms with the reference's exact tie-break: descending sort
+    of (count, token) tuples (otmt/timemap_measures.py:474-516)."""
+    ranked = sorted(((c, t) for t, c in Counter(tokens).items()),
+                    reverse=True)
+    return [t for _, t in ranked[:20]]
+
+
+_TOKEN_OUTPUTS = frozenset({"tokens", "tf_simhash", "top20"})
+# enrichment outputs read from the text, given or extracted
+TEXT_OUTPUTS = _TOKEN_OUTPUTS | {"text", "tokens_cos"}
+
+
+def enrich_document(html, text, outputs) -> dict:
+    """One document's enrichment ``outputs`` (a set of names), under the
+    per-output contracts of :mod:`.udfs`; the dict may hold more keys."""
+    out = {"raw_simhash": None if html is None or "raw_simhash" not in outputs
+           else to_signed64(simhash_raw_bytes(html))}
+    if not outputs & TEXT_OUTPUTS:
+        return out
+    if text is None and html is not None:
+        try:
+            text = extract_text(html)
+        except EmptyDocumentError:
+            pass
+    tokens = (None if text is None or not outputs & _TOKEN_OUTPUTS
+              else full_tokenize(text))
+    has_tokens = tokens is not None
+    out.update(
+        text=text,
+        tokens=tokens,
+        tf_simhash=to_signed64(simhash_tokens(tokens))
+        if has_tokens and "tf_simhash" in outputs else None,
+        top20=top20_terms(tokens)
+        if has_tokens and "top20" in outputs else None,
+        tokens_cos=full_tokenize(text.lower())
+        if text is not None and "tokens_cos" in outputs else None,
+    )
+    return out

@@ -1,15 +1,21 @@
 """Arrow-batched pandas UDFs wrapping the pure-Python kernels.
 
-These are the ONLY places Python touches row data; everything else in the
-engine is JVM-side column algebra.  Each UDF is vectorized at the transfer
-layer (Arrow batches) and the kernels are memoized (md5/stem caches), which is
-the practical optimum for inherently per-document algorithms like simhash.
+Every per-document text kernel runs in ONE enrichment UDF
+(:func:`make_enrich_udf`): a row crosses into Python once and is extracted
+and tokenized at most once.  The token Levenshtein reads its tokens after
+the anchor window; the MinHash bands read pinned tokens, or the whole
+enrichment struct, which Spark chains into the enrichment's own node.
 
-Null/empty contracts (mirroring the reference's error semantics,
+Per-output contracts (the reference's error semantics,
 otmt/timemap_measures.py:157-176, otmt/collectionmodel.py:465-466):
-- ``extract_text_udf`` maps null/empty html → null (callers emit error rows);
-- ``tokenize_udf`` maps null text → null, "" → empty array;
-- simhash UDFs map null → null.
+- ``text``: the given text, else extracted from html; null/empty html →
+  null (callers emit error rows);
+- ``tokens``: ``full_tokenize(text)``; null text → null, "" → [];
+- ``raw_simhash``: of html, never of the given text, incl. the reference's
+  str(bytes) quirk (otmt/metadata_calcluations.py:56-58); null html → null;
+- ``tf_simhash`` / ``top20``: over ``tokens``; null tokens → null;
+- ``tokens_cos``: ``full_tokenize(text.lower())`` (sklearn lowercases
+  first, otmt/timemap_measures.py:680-681); null text → null.
 """
 
 import pandas as pd
@@ -24,55 +30,37 @@ from .minhash import (
     minhash_signature,
 )
 from .seqdist import levenshtein_np as _levenshtein
-from .simhash64 import (
-    simhash_raw_bytes,
-    simhash_tokens,
-    to_signed64,
-)
-from .textprep import EmptyDocumentError, extract_text, full_tokenize
+from .textprep import enrich_document
+
+# the enrichment's outputs (textprep.enrich_document), in struct-field order
+ENRICH_OUTPUTS = {
+    "text": T.StringType(),
+    "tokens": T.ArrayType(T.StringType()),
+    "raw_simhash": T.LongType(),
+    "tf_simhash": T.LongType(),
+    "top20": T.ArrayType(T.StringType()),
+    "tokens_cos": T.ArrayType(T.StringType()),
+}
 
 
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    def _extract(value):
-        if value is None:
-            return None
-        try:
-            return extract_text(value)
-        except EmptyDocumentError:
-            return None
+def make_enrich_udf(outputs):
+    """Pandas UDF ``(html, text)`` → struct of ``outputs`` (keys of
+    :data:`ENRICH_OUTPUTS`).  Pass a null text column when there is none."""
+    names = [name for name in ENRICH_OUTPUTS if name in outputs]
+    if not names or len(names) != len(set(outputs)):
+        raise ValueError(f"bad enrichment outputs: {outputs}")
+    wanted = frozenset(names)
 
-    return html.map(_extract)
+    @F.pandas_udf(T.StructType(
+        [T.StructField(name, ENRICH_OUTPUTS[name]) for name in names]))
+    def enrich_udf(html: pd.Series, text: pd.Series) -> pd.DataFrame:
+        rows = [enrich_document(h, t, wanted) for h, t in zip(html, text)]
+        # object columns: a null among longs must not make them floats
+        return pd.DataFrame({
+            name: pd.Series([row[name] for row in rows], dtype=object)
+            for name in names})
 
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def tokenize_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda value: None if value is None else full_tokenize(value))
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def tokenize_lower_udf(text: pd.Series) -> pd.Series:
-    """Cosine-path tokens: sklearn's TfidfVectorizer lowercases before the
-    tokenizer (otmt/timemap_measures.py:680-681)."""
-    return text.map(
-        lambda value: None if value is None else full_tokenize(value.lower())
-    )
-
-
-@F.pandas_udf(T.LongType())
-def simhash_raw_udf(html: pd.Series) -> pd.Series:
-    """Raw-mode simhash incl. the reference's str(bytes) repr quirk
-    (otmt/timemap_measures.py:240-245, otmt/metadata_calcluations.py:56-58)."""
-    return html.map(
-        lambda value: None if value is None else to_signed64(simhash_raw_bytes(value))
-    )
-
-
-@F.pandas_udf(T.LongType())
-def simhash_tokens_udf(tokens: pd.Series) -> pd.Series:
-    return tokens.map(
-        lambda value: None if value is None else to_signed64(simhash_tokens(list(value)))
-    )
+    return enrich_udf
 
 
 @F.pandas_udf(T.IntegerType())
@@ -92,18 +80,18 @@ def make_minhash_bands_udf(
     bands: int = DEFAULT_BANDS,
     seed: int = 1234567,
 ):
-    """array<long> of ``bands`` band-hashes per document (LSH keys).
+    """array<long> of ``bands`` band-hashes per document (LSH keys), from
+    token arrays or from the enrichment struct (its ``tokens``).
 
-    Empty token lists yield NULL (not the EMPTY_SLOT sentinel bands): a
-    downstream ``posexplode`` then drops those rows by itself, so band-table
-    builders need no post-UDF null/size filter — a filter on a UDF output is
-    exactly what the optimizer pushes below the enrichment exchange,
-    re-evaluating the whole extract→tokenize→minhash chain a second time on
-    the narrow pre-shuffle side (guide §4.4 duplication; measured 2.9 s of
-    single-task Python per bench run before this change)."""
+    Empty token lists yield NULL, not the EMPTY_SLOT sentinel bands, so a
+    downstream ``posexplode`` drops them and band-table builders need no
+    filter on a UDF output (which the optimizer would push below the
+    enrichment exchange, evaluating the enrichment twice)."""
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def minhash_bands_udf(tokens: pd.Series) -> pd.Series:
+        if isinstance(tokens, pd.DataFrame):
+            tokens = tokens["tokens"]
         def _bands(value):
             if value is None or len(value) == 0:
                 return None

@@ -34,8 +34,10 @@ def consider_only(df: DataFrame, consideration: DataFrame, key: str = "urim",
     (thousands to millions of urims).  Pass ``broadcast=False`` when the
     list is corpus-sized (e.g. a full on-topic partition of a 10^12-doc
     table): the semi-join then shuffles on the key like any equi-join and
-    AQE may still choose to broadcast if the list turns out small."""
-    keys = consideration.select(key).distinct()
+    AQE may still choose to broadcast if the list turns out small.  A
+    semi-join keeps each row once however often its key repeats on the
+    list side, so the list is not deduplicated first."""
+    keys = consideration.select(key)
     if broadcast:
         keys = F.broadcast(keys)
     return df.join(keys, key, "left_semi")

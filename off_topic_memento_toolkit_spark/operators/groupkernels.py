@@ -179,9 +179,9 @@ def make_group_kernel(measures, num_topics_overrides=None,
             bad_urims = pdf.loc[~(ok_mask | capped_mask), "urim"].tolist()
             capped_urims = pdf.loc[capped_mask, "urim"].tolist()
 
-            # tokens were computed ONCE upstream (prepare_pages /
-            # tokenize_lower_udf) — the kernel consumes arrays, it never
-            # re-runs treebank+porter (the reference's 12x-reprocess bug)
+            # tokens were computed ONCE upstream (enrich_pages) — the kernel
+            # consumes arrays, it never re-runs treebank+porter (the
+            # reference's 12x-reprocess bug)
             column = "tokens_cos" if measure == "cosine" else "tokens"
             docs = [list(v) for v in pdf.loc[ok_mask, column]]
 
@@ -219,24 +219,20 @@ def score_group_measures(
     max_docs_per_timeline=DEFAULT_MAX_DOCS_PER_TIMELINE,
 ) -> DataFrame:
     """Run the grouped kernels; input must carry urit, urim, warc_ts, text
-    and tokens (LSI/LDA consume the shared ``tokens`` column; cosine gets a
-    ``tokens_cos`` column — sklearn lowercases before tokenizing, so its
-    token stream genuinely differs)."""
+    and tokens (LSI/LDA consume the shared ``tokens`` column), and for
+    cosine ``tokens_cos`` — sklearn lowercases before tokenizing, so its
+    token stream genuinely differs (``enrich_pages`` computes it in the
+    same Python pass as ``tokens``)."""
     measures = list(measures)
     kernel = make_group_kernel(measures, num_topics_overrides,
                                max_docs_per_timeline)
+    none = F.lit(None).cast("array<string>")
     cols = [F.col("urit"), F.col("urim"), F.col("warc_ts"),
-            F.length("text").alias("text_len")]
-    if any(m != "cosine" for m in measures):
-        cols.append(F.col("tokens"))
-    else:
-        cols.append(F.lit(None).cast("array<string>").alias("tokens"))
-    if "cosine" in measures:
-        from ..functions.udfs import tokenize_lower_udf
-
-        cols.append(tokenize_lower_udf(F.col("text")).alias("tokens_cos"))
-    else:
-        cols.append(F.lit(None).cast("array<string>").alias("tokens_cos"))
+            F.length("text").alias("text_len"),
+            F.col("tokens") if any(m != "cosine" for m in measures)
+            else none.alias("tokens"),
+            F.col("tokens_cos") if "cosine" in measures
+            else none.alias("tokens_cos")]
     return (
         enriched.select(*cols)
         .groupBy("urit")

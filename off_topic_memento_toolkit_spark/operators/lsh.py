@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.udfs import make_minhash_bands_udf
+from .timeline import ENRICHMENT_STRUCT
 
 
 def minhash_band_table(
@@ -43,11 +44,16 @@ def minhash_band_table(
     and re-run the whole tokenize/minhash chain on the narrow pre-shuffle
     side (guide §4.4) — the Generate-based drop leaves nothing for the
     optimizer to push (InferFiltersFromGenerate is excluded in session.py
-    for the same reason)."""
+    for the same reason).
+
+    Over an unpinned ``timeline.prepare_pages`` frame the UDF reads the
+    enrichment struct rather than its tokens field, so Spark chains it onto
+    the enrichment UDF: one Python node, one pass per document."""
     udf = make_minhash_bands_udf(num_perm, shingle_words, bands, seed)
+    source = (ENRICHMENT_STRUCT if tokens_col == "tokens"
+              and ENRICHMENT_STRUCT in df.columns else tokens_col)
     return (
-        df.select(F.col(id_col).alias("id"), F.col(tokens_col).alias("_tokens"))
-        .withColumn("_bands", udf(F.col("_tokens")))
+        df.select(F.col(id_col).alias("id"), udf(F.col(source)).alias("_bands"))
         .select("id", F.posexplode("_bands").alias("band", "band_hash"))
     )
 

@@ -3,10 +3,11 @@
 Each memento is scored against the FIRST memento of its timeline
 (otmt/timemap_measures.py:105-232).  The reference re-fetches and re-tokenizes
 every document once per measure; here the enrichment is computed once
-(:func:`..operators.timeline.prepare_pages`), the first-memento anchor comes
+(:func:`..operators.timeline.enrich_pages`: one Python UDF call per row,
+top-20 terms and the cosine tokens included), the first-memento anchor comes
 from a single window pass, and every cheap kernel is pure JVM column algebra —
-the only Python in the per-measure path is the token-sequence Levenshtein and
-per-row top-20 term extraction, both Arrow-batched.
+the only other Python in the per-measure path is the token-sequence
+Levenshtein over the anchor window, Arrow-batched.
 
 Physical shape: one shuffle (hash on ``urit`` for the window); all measure
 columns pipeline in the same stage; the long format is an ``explode`` of a
@@ -19,11 +20,9 @@ otmt/timemap_measures.py:895-970.
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-import pandas as pd
 
 from ..functions.udfs import token_levenshtein_udf
-from .timeline import first_over_timeline, prepare_pages
+from .timeline import enrich_pages, first_over_timeline
 
 # otmt/timemap_measures.py:895-970; preproc flags per compute_* wrappers
 MEASURE_REGISTRY = {
@@ -48,23 +47,6 @@ from .measures_constants import FIRST_BP_ERROR_MSG, FIRST_EMPTY_MSG  # noqa: E40
 ROW_BP_ERROR_MSG = "Boilerplate could not be removed from memento"
 
 _GROUP_KERNELS = ("cosine", "gensim_lsi", "gensim_lda")
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def _top20_terms_udf(tokens: pd.Series) -> pd.Series:
-    """Top-20 TF terms with the reference's exact tie-break: descending sort
-    of (count, token) tuples (otmt/timemap_measures.py:474-516)."""
-
-    def _top(value):
-        if value is None:
-            return None
-        counts = {}
-        for token in value:
-            counts[token] = counts.get(token, 0) + 1
-        ranked = sorted(((c, t) for t, c in counts.items()), reverse=True)
-        return [t for _, t in ranked[:20]]
-
-    return tokens.map(_top)
 
 
 _SCALARIZED = ("_set_inter", "_set_union", "_set_a_n", "_set_b_n",
@@ -178,20 +160,23 @@ def enrich_with_firsts(
     need_raw_simhash: bool = True,
     need_tf_simhash: bool = True,
     need_lev: bool = False,
+    need_tokens_cos: bool = False,
 ) -> DataFrame:
-    """prepare_pages + first-memento anchor columns.
+    """enrich_pages + first-memento anchor columns.
 
     Only the columns a requested measure actually consumes are computed —
-    Python UDF columns aren't free, and persist() downstream would
-    materialize them past Catalyst's pruning.
+    Python UDF outputs aren't free, and persist() downstream would
+    materialize them past Catalyst's pruning.  ``tokens_cos`` (the cosine
+    kernel's tokens) gets no anchor column: the group kernel reads it.
 
     The anchors are running-frame window values over the timeline: one
     hash shuffle on urit + per-group sort.
     """
-    df = prepare_pages(pages, need_raw_simhash=need_raw_simhash,
-                       need_tf_simhash=need_tf_simhash)
-    if need_top20:
-        df = df.withColumn("top20", _top20_terms_udf(F.col("tokens")))
+    optional = {"raw_simhash": need_raw_simhash,
+                "tf_simhash": need_tf_simhash, "top20": need_top20,
+                "tokens_cos": need_tokens_cos}
+    df = enrich_pages(pages, ["text", "tokens"] + [
+        name for name, needed in optional.items() if needed])
     first_columns = ["raw_len", "tokens", "n_tokens"]
     if need_raw_simhash:
         first_columns.append("raw_simhash")
@@ -262,6 +247,7 @@ def _scores_and_enrichment(pages, measures, thresholds, metadata):
         need_raw_simhash=metadata or "raw_simhash" in pairwise,
         need_tf_simhash="tf_simhash" in pairwise,
         need_lev=bool({"levenshtein", "nlevenshtein"} & set(pairwise)),
+        need_tokens_cos="cosine" in grouped,
     )
     # fold the pairwise array algebra into scalar columns BEFORE any pin —
     # in the unpinned path Catalyst collapses these into the same
@@ -517,8 +503,9 @@ def with_error_kinds(
 
 def memento_metadata(pages: DataFrame) -> DataFrame:
     """Per-memento metadata table (otmt/metadata_calcluations.py): raw simhash
-    value, content length, language passthrough, memento datetime."""
-    return _metadata_columns(prepare_pages(pages, need_tf_simhash=False))
+    value, content length, language passthrough, memento datetime.  Its one
+    Python UDF computes the raw simhash alone: no text, no tokens."""
+    return _metadata_columns(enrich_pages(pages, ["raw_simhash"]))
 
 
 def _metadata_columns(enriched: DataFrame) -> DataFrame:

@@ -14,12 +14,8 @@ URI synthesis (otmt/input_types.py:105-108,160-162):
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.udfs import (
-    extract_text_udf,
-    simhash_raw_udf,
-    simhash_tokens_udf,
-    tokenize_udf,
-)
+from ..functions.textprep import TEXT_OUTPUTS
+from ..functions.udfs import make_enrich_udf
 
 
 def with_memento_identity(pages: DataFrame) -> DataFrame:
@@ -51,20 +47,46 @@ def first_over_timeline(column: str) -> Column:
     return F.first(column, ignorenulls=False).over(window)
 
 
+# the enrichment struct a :func:`prepare_pages` frame carries beside its
+# flattened columns; :func:`..operators.lsh.minhash_band_table` is its reader
+ENRICHMENT_STRUCT = "_enrichment"
+
+
 def prepare_pages(
     pages: DataFrame,
     need_raw_simhash: bool = True,
     need_tf_simhash: bool = True,
 ) -> DataFrame:
+    """:func:`enrich_pages` with text, tokens and the simhashes on demand,
+    plus the outputs' struct as the :data:`ENRICHMENT_STRUCT` column.
+
+    Spark runs a Python UDF in the node of the UDF it reads only when it
+    takes that UDF's whole output, so a per-document kernel that takes the
+    struct (the MinHash band table) adds no Python pass.  The struct holds
+    every output a second time: select columns before a pin or a write."""
+    optional = {"raw_simhash": need_raw_simhash,
+                "tf_simhash": need_tf_simhash}
+    return _enrich(pages, ["text", "tokens"] + [
+        name for name, needed in optional.items() if needed])
+
+
+def enrich_pages(pages: DataFrame, outputs) -> DataFrame:
     """One-pass enrichment computed ONCE and shared by every measure — the
     structural win over the reference, which re-reads and re-tokenizes each
     memento per measure (otmt/timemap_measures.py:194-197; SURVEY §4.1).
 
-    Adds: urim, urit, text (extracted from html when null/absent),
-    raw_len, tokens, n_tokens, and (on demand) raw_simhash / tf_simhash.
-    The simhash flags exist because a later ``persist`` defeats Catalyst's
-    column pruning — don't burn Python time on columns the caller won't use.
+    Adds urim, urit, raw_len and one column per name in ``outputs`` (the
+    enrichment outputs of :mod:`..functions.udfs`, all from ONE Python UDF
+    call per row), plus n_tokens with ``tokens``.  ``text`` fills a null or
+    absent text column from html (the reference's lazy derive+memoize,
+    otmt/collectionmodel.py:440-469).  Ask only for what the caller reads:
+    a later ``persist`` defeats Catalyst's column pruning, and the UDF
+    computes every output it is asked for.
     """
+    return _enrich(pages, outputs).drop(ENRICHMENT_STRUCT)
+
+
+def _enrich(pages: DataFrame, outputs) -> DataFrame:
     df = with_memento_identity(pages)
 
     # Python enrichment cost tracks ROWS, not bytes: a narrow parquet scan
@@ -103,23 +125,16 @@ def prepare_pages(
         if est_bytes < shuffle_n * max_pb and not already_wide:
             df = df.repartition(shuffle_n)
 
-    if "text" not in df.columns:
-        df = df.withColumn("text", extract_text_udf(F.col("html")))
-    else:
-        # fill missing text from html (the reference's lazy derive+memoize,
-        # otmt/collectionmodel.py:440-469)
-        df = df.withColumn(
-            "text",
-            F.coalesce(F.col("text"), extract_text_udf(F.col("html"))),
-        )
-
-    df = df.withColumns({
-        "raw_len": F.octet_length("html"),
-        "tokens": tokenize_udf(F.col("text")),
-    })
-    extra = {"n_tokens": F.size("tokens")}
-    if need_raw_simhash:
-        extra["raw_simhash"] = simhash_raw_udf(F.col("html"))
-    if need_tf_simhash:
-        extra["tf_simhash"] = simhash_tokens_udf(F.col("tokens"))
-    return df.withColumns(extra)
+    has_text = "text" in df.columns and TEXT_OUTPUTS & set(outputs)
+    enriched = make_enrich_udf(outputs)(
+        F.col("html"),
+        F.col("text") if has_text else F.lit(None).cast("string"))
+    field = F.col(ENRICHMENT_STRUCT).getField
+    columns = {"text": field("text")} if "text" in outputs else {}
+    columns["raw_len"] = F.octet_length("html")
+    if "tokens" in outputs:
+        columns.update(tokens=field("tokens"), n_tokens=F.size(field("tokens")))
+    for name in ("raw_simhash", "tf_simhash", "top20", "tokens_cos"):
+        if name in outputs:
+            columns[name] = field(name)
+    return df.withColumn(ENRICHMENT_STRUCT, enriched).withColumns(columns)

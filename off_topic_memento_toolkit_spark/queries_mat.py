@@ -157,14 +157,15 @@ def q_streaming_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the custom stateful operator is hash-checked against DuckDB."""
     import shutil
 
-    from .operators.timeline import prepare_pages
+    from .operators.timeline import enrich_pages
     from .streaming.ingest import (
+        MODE_OUTPUTS,
         build_streaming_enrichment,
         streaming_sequential_dedup,
     )
 
     pages = _pages(spark, sf_dir)
-    enriched = prepare_pages(pages, need_tf_simhash=False)
+    enriched = enrich_pages(pages, ["raw_simhash"])
     _materialize(
         enriched.select("url", "warc_ts", "urim", "raw_simhash"),
         "stateful_pages",
@@ -176,7 +177,8 @@ def q_streaming_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     workdir = f"{MAT_ROOT}/stateful_work"
     shutil.rmtree(workdir, ignore_errors=True)
     pages.write.mode("overwrite").parquet(f"{workdir}/src")
-    stream = build_streaming_enrichment(spark, f"{workdir}/src")
+    stream = build_streaming_enrichment(spark, f"{workdir}/src",
+                                        outputs=MODE_OUTPUTS["dedup"])
     query = (
         streaming_sequential_dedup(stream, threshold=0.2)
         .writeStream.format("parquet")
@@ -251,6 +253,7 @@ def q_streaming_incremental_pairs(spark: SparkSession, sf_dir: str
     from .operators.lsh import minhash_band_table
     from .operators.timeline import prepare_pages
     from .streaming.ingest import (
+        MODE_OUTPUTS,
         build_streaming_enrichment,
         streaming_incremental_candidates,
     )
@@ -272,7 +275,8 @@ def q_streaming_incremental_pairs(spark: SparkSession, sf_dir: str
     workdir = f"{MAT_ROOT}/inc_stream_work"
     shutil.rmtree(workdir, ignore_errors=True)
     new_pages.write.mode("overwrite").parquet(f"{workdir}/src")
-    stream = build_streaming_enrichment(spark, f"{workdir}/src")
+    stream = build_streaming_enrichment(spark, f"{workdir}/src",
+                                        outputs=MODE_OUTPUTS["candidates"])
     query = (
         streaming_incremental_candidates(stream, base_bands)
         .writeStream.format("parquet")
@@ -492,9 +496,9 @@ FROM survivors s LEFT JOIN comp c ON s.id = c.src"""
 
 def q_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.lsh import simhash_candidate_pairs
-    from .operators.timeline import prepare_pages
+    from .operators.timeline import enrich_pages
 
-    docs = prepare_pages(_pages(spark, sf_dir), need_tf_simhash=False)
+    docs = enrich_pages(_pages(spark, sf_dir), ["raw_simhash"])
     vals = docs.select(F.col("urim").alias("id"),
                        F.col("raw_simhash").alias("simhash"))
     vals = _materialize(vals, "simhash_values")
@@ -1006,6 +1010,9 @@ SELECT urit, urim, slice_id, cluster_id, round(quality, 6) AS quality FROM (
 
 # ------------------------------------------------- offtopic_measures_core
 
+# the enrichment outputs the measure-input readback materialises
+MEASURE_INPUT_OUTPUTS = ("text", "tokens", "raw_simhash", "tf_simhash",
+                         "tokens_cos")
 CORE_MEASURES = ("bytecount", "wordcount", "jaccard", "sorensen",
                  "tfintersection", "raw_simhash", "tf_simhash", "cosine")
 
@@ -1015,17 +1022,16 @@ def q_offtopic_measures_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the iterative gensim kernels stay rows-only in the full query) —
     including the K10 TF-IDF cosine end-to-end against a plain-SQL rendition
     of sklearn's smoothed-idf + l2-norm formula."""
-    from .functions.udfs import tokenize_lower_udf
     from .operators.measures import score_timemap_measures
-    from .operators.timeline import prepare_pages
+    from .operators.timeline import enrich_pages
 
     pages = _pages(spark, sf_dir)
-    enriched = prepare_pages(pages)
+    enriched = enrich_pages(pages, MEASURE_INPUT_OUTPUTS)
     inputs = _materialize(
         enriched.select(
             "urit", "urim", "warc_ts", "raw_len", "tokens", "n_tokens",
             "raw_simhash", "tf_simhash",
-            tokenize_lower_udf(F.col("text")).alias("tokens_cos"),
+            "tokens_cos",
             F.length("text").alias("text_len"),
         ),
         "measure_inputs",
@@ -1383,17 +1389,16 @@ def q_offtopic_measures_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME materialized readback the component oracles use.  The oracle is
     the three component SQLs composed by UNION ALL.  At sf0.01 every domain
     covers the whole corpus, so the entire suite is value-checked."""
-    from .functions.udfs import tokenize_lower_udf
     from .operators.measures import score_timemap_measures
-    from .operators.timeline import first_over_timeline, prepare_pages
+    from .operators.timeline import enrich_pages, first_over_timeline
 
     pages = _pages(spark, sf_dir)
-    enriched = prepare_pages(pages)
+    enriched = enrich_pages(pages, MEASURE_INPUT_OUTPUTS)
     inputs = _materialize(
         enriched.select(
             "urit", "urim", "warc_ts", "raw_len", "tokens", "n_tokens",
             "raw_simhash", "tf_simhash",
-            tokenize_lower_udf(F.col("text")).alias("tokens_cos"),
+            "tokens_cos",
             F.length("text").alias("text_len"),
         ),
         "measure_inputs",

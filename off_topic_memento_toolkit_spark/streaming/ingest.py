@@ -24,21 +24,34 @@ plan; the streaming wiring is exercised with a memory-sink smoke test).
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.timeline import prepare_pages
+from ..operators.timeline import enrich_pages
 from ..sources.datagen import PAGES_SCHEMA
+
+# the enrichment outputs each ``stream --mode`` reads: the one enrichment
+# UDF computes every output it is asked for, read or not
+MODE_OUTPUTS = {
+    "signatures": ("tokens", "raw_simhash", "tf_simhash"),
+    "candidates": ("tokens",),
+    "dedup": ("raw_simhash",),
+    "rates": ("raw_simhash",),
+}
+# the batch enrichment's columns (timeline.prepare_pages)
+PAGE_OUTPUTS = ("text", "tokens", "raw_simhash", "tf_simhash")
 
 
 def build_streaming_enrichment(
     spark: SparkSession,
     input_path: str,
     watermark: str = "1 hour",
+    outputs=PAGE_OUTPUTS,
 ) -> DataFrame:
-    """readStream over a pages parquet directory → enriched stream."""
+    """readStream over a pages parquet directory → stream enriched with
+    ``outputs`` (see :data:`MODE_OUTPUTS`)."""
     stream = (
         spark.readStream.schema(PAGES_SCHEMA).parquet(input_path)
         .withWatermark("warc_ts", watermark)
     )
-    return prepare_pages(stream)
+    return enrich_pages(stream, outputs)
 
 
 def streaming_near_dup_suppression(enriched: DataFrame) -> DataFrame:
@@ -187,11 +200,13 @@ def streaming_sequential_dedup(
     timeout = (GroupStateTimeout.EventTimeTimeout if ttl_ms is not None
                else GroupStateTimeout.NoTimeout)
     return (
-        enriched.select("url", "warc_ts", "urim", "raw_simhash")
-        # error rows (null simhash: unparseable/absent content) carry no
-        # dedup signal and would crash the int() in the kernel — same
-        # exclusion the batch D1 operator's window semantics imply
-        .filter(F.col("raw_simhash").isNotNull())
+        # error rows (null simhash: absent content) carry no dedup signal
+        # and would crash the int() in the kernel — same exclusion the
+        # batch D1 operator's window semantics imply.  The gate tests html,
+        # as in streaming_near_dup_suppression: a filter on the UDF output
+        # would evaluate the UDF a second time below the projection.
+        enriched.filter(F.col("html").isNotNull())
+        .select("url", "warc_ts", "urim", "raw_simhash")
         .groupBy("url")
         .applyInPandasWithState(
             dedup_fn, DEDUP_OUT_SCHEMA, DEDUP_STATE_SCHEMA,
@@ -205,13 +220,13 @@ def streaming_exact_dedup_batch_equivalent(pages: DataFrame) -> DataFrame:
     expressed on a batch frame — used for correctness checks."""
     from pyspark.sql import Window
 
-    enriched = prepare_pages(pages)
+    enriched = enrich_pages(pages, PAGE_OUTPUTS)
     window = Window.partitionBy("url", "raw_simhash").orderBy("warc_ts", "urim")
     # html gate, not raw_simhash — see streaming_near_dup_suppression: the
     # simhash UDF is null-preserving, so the gates are equivalent, and the
     # input-column filter pushes to the scan instead of duplicating the UDF
     # below the widen exchange (guide §4.4; this plan showed two
-    # simhash_raw_udf evaluations, one single-threaded, before the change)
+    # raw-simhash evaluations, one single-threaded, before the change)
     return (
         enriched.filter(F.col("html").isNotNull())
         .withColumn("_occ", F.row_number().over(window))

@@ -14,14 +14,24 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.01"
 
 
+PYTHON_NODE = re.compile(
+    r"ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas")
+# a Python UDF call prints as ``name(args)#id`` (a built-in has no ``#id``),
+# so a UDF chained over another counts once per call
+PYTHON_UDF_CALL = re.compile(r"\)#\d+")
+
+
 def summarize(plan: str) -> dict:
+    python_lines = [line for line in plan.splitlines()
+                    if PYTHON_NODE.search(line)]
     return {
         "hash_exchanges": len(re.findall(r"Exchange hashpartitioning", plan)),
         "roundrobin_exchanges": len(
             re.findall(r"Exchange RoundRobinPartitioning", plan)),
         "broadcast_exchanges": len(re.findall(r"BroadcastExchange", plan)),
-        "python_nodes": len(re.findall(
-            r"ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas", plan)),
+        "python_nodes": len(python_lines),
+        "python_udfs": sum(len(PYTHON_UDF_CALL.findall(line))
+                           for line in python_lines),
         "sortmerge_joins": len(re.findall(r"SortMergeJoin", plan)),
         "broadcast_joins": len(re.findall(r"BroadcastHashJoin", plan)),
         "cartesian": len(re.findall(r"CartesianProduct", plan)),
@@ -113,11 +123,17 @@ def main():
     notes = {
         "offtopic_measures_full": (
             "12 measures, one keyed shuffle (the timeline window); narrow "
-            "local scan adds the round-robin widen below the UDFs; the union "
-            "branch for the grouped kernels reads the persisted enrichment."),
+            "local scan adds the round-robin widen below the UDFs; the "
+            "persisted enrichment is ONE struct UDF per row (text, tokens, "
+            "both simhashes, top-20, cosine tokens), Levenshtein reads it "
+            "after the window, the union branch for the grouped kernels "
+            "reads the pin. The per-column UDF chain it replaced made 24 "
+            "UDF calls in 6 Python nodes here: every chained consumer of "
+            "the tokens re-ran extract and tokenize."),
         "offtopic_measures_core": "8 relational measures, same shape.",
         "minhash_lsh_pairs": (
-            "signature UDF map-side; spill-safe window size gate and the "
+            "signature UDF chained onto the enrichment struct: one Python "
+            "node, one pass per document; spill-safe window size gate and the "
             "collect_list share ONE hash exchange; expand-late member-set "
             "dedup adds one over short-array rows (strictly smaller than "
             "the band table); pair distinct is the third; no joins "
@@ -143,7 +159,9 @@ def main():
         "ann_ivf_topk": "nprobe bucket equi-join, queries broadcast.",
         "streaming_dedup_batch": "url+simhash first-occurrence window.",
         "verified_dup_pairs": (
-            "LSH candidates -> Arrow Jaccard verify on pair payload joins."),
+            "LSH candidates -> Arrow Jaccard verify on pair payload joins. "
+            "The docs select drops the enrichment struct, so the band UDF "
+            "reads its tokens field in a Python node of its own."),
         "embedding_near_dups": (
             "SRP buckets through lsh.bucket_pairs: spill-safe size gate and "
             "collect share one exchange, the member-set dedup adds one, the "
@@ -158,9 +176,9 @@ def main():
             "one materialisation; Python nodes per action. Counts cover "
             "what this writer runs above the pinned detect report; the "
             "report (12 measures, filled once by the first writer) holds "
-            "the suite's Python nodes once: the enrichment UDFs, "
-            "Levenshtein and top-20 in the measure pin, tokenize_lower + "
-            "the group kernel above it. The writer itself adds one hash "
+            "the suite's Python nodes once: the one enrichment UDF and "
+            "Levenshtein in the measure pin, the group kernel above it. "
+            "The writer itself adds one hash "
             "exchange and the row-number window that collapses "
             "access-error rows in a single read."),
         "detect_ontopic_list": (
@@ -173,11 +191,15 @@ def main():
              f"Captured from `executedPlan` at sf0.01, local[8], 8 shuffle "
              f"partitions, materialization off (scripts/plan_audit.py). "
              f"Counts are plan-node occurrences; the detect_* rows count "
-             f"what each writer runs above the pinned report.",
+             f"what each writer runs above the pinned report. `python UDFs` "
+             f"counts the UDF calls the Python nodes evaluate, a UDF chained "
+             f"over another counted once per call: each call is its own "
+             f"pass over the rows.",
              "",
              "| query | hash exch | RR exch | bcast exch | python nodes | "
-             "SMJ | BHJ | cartesian | NLJ | sorts | windows | scans |",
-             "|---|---|---|---|---|---|---|---|---|---|---|---|"]
+             "python UDFs | SMJ | BHJ | cartesian | NLJ | sorts | windows "
+             "| scans |",
+             "|---|---|---|---|---|---|---|---|---|---|---|---|---|"]
     plans = {name: fn(spark, SF_DIR)._jdf.queryExecution().executedPlan()
              .toString() for name, fn in targets.items()}
     plans.update({name: above_cache(plan) for name, plan in
@@ -197,7 +219,7 @@ def main():
         lines.append(
             f"| {name} | {s['hash_exchanges']} | {s['roundrobin_exchanges']} "
             f"| {s['broadcast_exchanges']} | {s['python_nodes']} "
-            f"| {s['sortmerge_joins']} | {s['broadcast_joins']} "
+            f"| {s['python_udfs']} | {s['sortmerge_joins']} | {s['broadcast_joins']} "
             f"| {s['cartesian']} | {s['nested_loop']} | {s['sorts']} "
             f"| {s['windows']} | {s['scans']} |")
         details.append(f"- **{name}** — {notes[name]}")
@@ -209,8 +231,10 @@ def main():
         "is join-free with the size gate below the collect, and only "
         "operators/lsh.py builds it; scans prune "
         "columns; bucketed-table joins are Exchange-free "
-        "(tests/test_bucketing.py); detect's writers run no Python node "
-        "outside the one pinned report, which runs each once "
+        "(tests/test_bucketing.py); no Python UDF runs over another's "
+        "output in the detect report, story's metadata or the dedup docs "
+        "stage (tests/test_plan_shape.py); detect's writers run no Python "
+        "node outside the one pinned report, which runs each once "
         "(tests/test_detect_report.py).",
     ]
     with open(os.path.join(REPO, "PLANS.md"), "w") as fh:

@@ -11,6 +11,7 @@ from pyspark.sql import types as T
 
 from off_topic_memento_toolkit_spark.operators.curation import (
     cluster_by_simhash,
+    consider_only,
     exclude_duplicates,
     quality_score,
     select_representatives,
@@ -342,3 +343,22 @@ def test_session_pins_scope_releases_ranking_pins(spark):
         assert not _pins_since(earlier)
     finally:
         release_session_pins()
+
+
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_consider_only_duplicate_keys_need_no_aggregate(spark, broadcast):
+    """A key listed several times keeps its row once: the semi-join needs
+    no distinct over the list, so the plan has no aggregate on that side."""
+    rows = spark.range(20).select(
+        F.format_string("m%02d", "id").alias("urim"), F.col("id"))
+    listed = ["m01", "m03", "m03", "m07", "m07", "m07", "m99"]
+    duplicated = spark.createDataFrame([(u,) for u in listed], "urim string")
+    unique = spark.createDataFrame([(u,) for u in sorted(set(listed))],
+                                   "urim string")
+
+    got = consider_only(rows, duplicated, broadcast=broadcast)
+    assert sorted(got.collect()) == sorted(
+        consider_only(rows, unique, broadcast=broadcast).collect())
+    assert sorted(r.urim for r in got.collect()) == ["m01", "m03", "m07"]
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" not in plan, plan

@@ -192,9 +192,7 @@ def test_detect_writers_read_one_report_with_python_once(detect_run):
     # initial and final plans)
     nodes = _python_nodes(_report_split(plans[0])[1][1:], set())
     assert sum("FlatMapGroupsInPandas" in n for n in nodes) == 1, nodes
-    for udf in ("simhash_raw_udf", "extract_text_udf", "tokenize_udf",
-                "tokenize_lower_udf", "simhash_tokens_udf",
-                "_top20_terms_udf", "token_levenshtein_udf"):
+    for udf in ("enrich_udf", "token_levenshtein_udf"):
         assert sum(f"{udf}(" in n for n in nodes) == 1, (udf, nodes)
 
 

@@ -10,7 +10,7 @@ from off_topic_memento_toolkit_spark.functions.seqdist import (
     jaccard, levenshtein, nlevenshtein, sorensen,
 )
 from off_topic_memento_toolkit_spark.functions.simhash64 import (
-    hamming64, simhash_raw_bytes, simhash_tokens,
+    hamming64, simhash_raw_bytes, simhash_tokens, to_signed64,
 )
 from off_topic_memento_toolkit_spark.functions.textprep import (
     EmptyDocumentError, extract_text, full_tokenize,
@@ -182,3 +182,61 @@ def test_porter_short_word_case_preserved():
     # dropped by the stopset
     assert "Is" in toks and "It" in toks and "We" in toks
     assert "is" not in toks and "this" not in toks
+
+
+def _expected_enrichment(html, text):
+    """Each enrichment output from the standalone kernels."""
+    if text is None and html is not None:
+        try:
+            text = extract_text(html)
+        except EmptyDocumentError:
+            text = None
+    tokens = None if text is None else full_tokenize(text)
+    top20 = None if tokens is None else [
+        t for _, t in sorted(((tokens.count(t), t) for t in set(tokens)),
+                             reverse=True)[:20]]
+    return {
+        "text": text,
+        "tokens": tokens,
+        "raw_simhash": None if html is None
+        else to_signed64(simhash_raw_bytes(html)),
+        "tf_simhash": None if tokens is None
+        else to_signed64(simhash_tokens(tokens)),
+        "top20": top20,
+        "tokens_cos": None if text is None else full_tokenize(text.lower()),
+    }
+
+
+def test_enrichment_udf_equals_standalone_kernels(spark):
+    """One Arrow batch holding every null/empty case beside ordinary pages:
+    each output of the struct UDF, for every subset asked for, equals its
+    standalone kernel row by row (and a null elsewhere in the batch leaves
+    the 64-bit simhashes exact)."""
+    from off_topic_memento_toolkit_spark.functions.udfs import (
+        ENRICH_OUTPUTS,
+        make_enrich_udf,
+    )
+
+    many = " ".join(f"Word{i % 23} term{i % 7} The" for i in range(60))
+    rows = [
+        (None, None),                                  # null html
+        (CONTENTS["memento12"], None),                 # text from html
+        (CONTENTS["memento13"], "Given TEXT, not html"),  # given text
+        (b"", None),                                   # empty document
+        (b"   ", None),                                # whitespace only
+        (b"<html><body>x</body></html>", ""),          # "" text -> []
+        (None, "Text without html"),
+        (bytes(f"<html><body><p>{many}</p></body></html>", "utf8"), None),
+    ]
+    pages = spark.createDataFrame(rows, "html binary, text string") \
+        .coalesce(1)
+    expected = [_expected_enrichment(h, t) for h, t in rows]
+    assert expected[3]["text"] is None and expected[3]["tokens"] is None
+    assert expected[5]["tokens"] == []
+    for outputs in (tuple(ENRICH_OUTPUTS), ("raw_simhash",), ("text",),
+                    ("tokens_cos", "top20")):
+        got = pages.select(
+            make_enrich_udf(outputs)("html", "text").alias("e")).collect()
+        assert [row.e.asDict() for row in got] == [
+            {name: want[name] for name in ENRICH_OUTPUTS if name in outputs}
+            for want in expected], outputs

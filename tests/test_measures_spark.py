@@ -145,7 +145,7 @@ def test_group_kernel_timeline_cap(spark):
         CAP_ERROR_MSG,
         score_group_measures,
     )
-    from off_topic_memento_toolkit_spark.operators.timeline import prepare_pages
+    from off_topic_memento_toolkit_spark.operators.timeline import enrich_pages
     from off_topic_memento_toolkit_spark.sources.datagen import (
         PAGES_SCHEMA,
         generate_pages,
@@ -153,8 +153,7 @@ def test_group_kernel_timeline_cap(spark):
 
     pages = generate_pages(spark, n_urls=2, mementos_per_url=6, skew=False,
                            error_rows=False)
-    enriched = prepare_pages(pages, need_raw_simhash=False,
-                             need_tf_simhash=False)
+    enriched = enrich_pages(pages, ["text", "tokens_cos"])
     scores = score_group_measures(enriched, ["cosine"],
                                   max_docs_per_timeline=4).collect()
     by_urit = {}

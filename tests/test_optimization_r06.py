@@ -6,7 +6,8 @@ What changed and what is pinned here:
 - minhash_band_table drops empty/null-token docs via NULL band arrays
   (posexplode), not a post-UDF filter → same rows, and the plan must not
   evaluate the tokenize/minhash chain twice (no Python node below the widen
-  exchange).
+  exchange); over an unpinned enrichment the band UDF chained onto the
+  enrichment struct gives the same rows as over the token arrays.
 - candidate channels' ``distinct_pairs=False`` emits the same pair SET.
 - connected_components(assume_distinct=True) labels equal the default.
 - prepare_pages' widen probe is plan-only: building the frame over a
@@ -68,6 +69,27 @@ def test_band_table_no_python_below_widen_exchange(spark):
     # executed-plan strings print consumers first: everything after the
     # round-robin exchange line is BELOW it in the plan
     assert "ArrowEvalPython" not in plan[rr:]
+
+
+def test_band_table_from_enrichment_struct_equals_tokens(spark):
+    """Over an unpinned prepare_pages frame the band UDF reads the
+    enrichment struct (chained into the enrichment's node); the rows equal
+    those built from the plain token arrays."""
+    from off_topic_memento_toolkit_spark.operators.timeline import (
+        prepare_pages,
+    )
+    from off_topic_memento_toolkit_spark.sources.datagen import generate_pages
+
+    pages = generate_pages(spark, n_urls=4, mementos_per_url=3, skew=False,
+                           error_rows=True)
+    docs = prepare_pages(pages, need_raw_simhash=False, need_tf_simhash=False)
+    chained = minhash_band_table(docs, id_col="urim", tokens_col="tokens")
+    assert "minhash_bands_udf(enrich_udf(" in _executed(chained)
+    plain = minhash_band_table(docs.select("urim", "tokens"), id_col="urim",
+                               tokens_col="tokens")
+    assert "minhash_bands_udf(pythonUDF" in _executed(plain)
+    got = sorted(chained.collect())
+    assert got and got == sorted(plain.collect())
 
 
 def test_distinct_pairs_flag_same_pair_set(spark):

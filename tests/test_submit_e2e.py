@@ -62,11 +62,13 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
 WORKER_IMPORT = """\
 import sys
 sys.path.insert(0, sys.argv[1])
-from off_topic_memento_toolkit_spark.functions.udfs import tokenize_udf
+from off_topic_memento_toolkit_spark.functions.udfs import make_enrich_udf
 from off_topic_memento_toolkit_spark.session import get_spark
 spark = get_spark("outside-checkout", master="local[1]", shuffle_partitions=1)
-df = spark.createDataFrame([("Quick brown foxes",)], "text string")
-print(df.select(tokenize_udf("text").alias("t")).first().t)
+df = spark.createDataFrame([(None, "Quick brown foxes")],
+                           "html binary, text string")
+tokenize = make_enrich_udf(["tokens"])
+print(df.select(tokenize("html", "text").tokens.alias("t")).first().t)
 spark.stop()
 """
 
@@ -74,7 +76,7 @@ spark.stop()
 def test_pandas_udf_runs_outside_the_checkout(tmp_path):
     """A driver that puts the package on sys.path at run time, started from
     another directory with no PYTHONPATH: the Python workers must still
-    import the package to unpickle its UDFs."""
+    import the package to unpickle its UDFs, a closure-built one here."""
     script = tmp_path / "driver.py"
     script.write_text(WORKER_IMPORT)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
