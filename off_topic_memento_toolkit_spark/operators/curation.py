@@ -214,27 +214,42 @@ def slice_by_datetime(meta: DataFrame) -> DataFrame:
 
 def cluster_by_simhash(sliced: DataFrame) -> DataFrame:
     """D3 — adds ``cluster_id`` per slice: equal-simhash groups of ≥2 get
-    dense ids in order of first appearance; singletons get -1."""
-    group_window = Window.partitionBy("slice_id", "simhash")
-    with_group = sliced.withColumn("_group_size", F.count("*").over(group_window)) \
-                       .withColumn("_first_pos", F.min("global_position").over(group_window))
+    dense ids in order of first appearance; singletons get -1.
 
-    clusters = (
-        with_group.filter(F.col("_group_size") >= 2)
-        .select("slice_id", "simhash", "_first_pos")
-        .distinct()
-        .withColumn(
-            "cluster_id",
-            F.row_number().over(
-                Window.partitionBy("slice_id").orderBy("_first_pos")
-            ) - 1,
-        )
-        .drop("_first_pos")
-    )
+    Windows only, over ONE ``slice_id`` shuffle: the group size and first
+    position per ``(slice_id, simhash)``, then ``cluster_id`` as the
+    ``dense_rank`` of the group's first position among the slice's groups
+    of ≥2 (every other group ranks after them and gets -1).  Every window
+    keyed on ``slice_id`` plus more — these, and
+    :func:`select_representatives`' ``(slice_id, cluster_id)`` pick — reads
+    the explicit ``repartition("slice_id")`` below without another
+    exchange, and the ranked layout is read once (a self-join back onto
+    the rows would plan the ranking twice).
+
+    Parallelism of this stage is bounded by the slice count, at most
+    28 + ⌊log10 N⌋ partitions hold rows.  The slices are equal-sized by
+    construction (N div slice_count rows each), so those partitions are
+    balanced, not skewed; the cluster numbering needs the whole slice in
+    one partition anyway.
+
+    Columns: ``slice_id``, ``simhash``, the other input columns in order,
+    then ``cluster_id``."""
+    group_window = Window.partitionBy("slice_id", "simhash")
+    in_cluster = F.count("*").over(group_window) >= 2
+    first_pos = F.min("global_position").over(group_window)
+    # groups of ≥2 rank 1..k by first position; singletons sort after
+    # them (NULL last) and are overwritten with -1
+    numbering = Window.partitionBy("slice_id").orderBy(
+        F.col("_cluster_pos").asc_nulls_last())
+    rest = [c for c in sliced.columns if c not in ("slice_id", "simhash")]
     return (
-        with_group.join(clusters, ["slice_id", "simhash"], "left")
-        .withColumn("cluster_id", F.coalesce(F.col("cluster_id"), F.lit(-1)))
-        .drop("_group_size", "_first_pos")
+        sliced.repartition("slice_id")
+        .withColumn("_cluster_pos", F.when(in_cluster, first_pos))
+        .select(
+            "slice_id", "simhash", *rest,
+            F.when(F.col("_cluster_pos").isNotNull(),
+                   F.dense_rank().over(numbering) - 1)
+            .otherwise(-1).alias("cluster_id"))
     )
 
 

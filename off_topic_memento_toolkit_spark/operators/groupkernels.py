@@ -219,8 +219,8 @@ def score_group_measures(
     max_docs_per_timeline=DEFAULT_MAX_DOCS_PER_TIMELINE,
 ) -> DataFrame:
     """Run the grouped kernels; input must carry urit, urim, warc_ts, text
-    and tokens (LSI/LDA consume the shared ``tokens`` column), and for
-    cosine ``tokens_cos`` — sklearn lowercases before tokenizing, so its
+    (or its length as ``text_len``) and tokens (LSI/LDA consume the shared
+    ``tokens`` column), and for cosine ``tokens_cos`` — sklearn lowercases before tokenizing, so its
     token stream genuinely differs (``enrich_pages`` computes it in the
     same Python pass as ``tokens``)."""
     measures = list(measures)
@@ -228,7 +228,8 @@ def score_group_measures(
                                max_docs_per_timeline)
     none = F.lit(None).cast("array<string>")
     cols = [F.col("urit"), F.col("urim"), F.col("warc_ts"),
-            F.length("text").alias("text_len"),
+            F.col("text_len") if "text_len" in enriched.columns
+            else F.length("text").alias("text_len"),
             F.col("tokens") if any(m != "cosine" for m in measures)
             else none.alias("tokens"),
             F.col("tokens_cos") if "cosine" in measures

@@ -9,10 +9,15 @@ from a single window pass, and every cheap kernel is pure JVM column algebra —
 the only other Python in the per-measure path is the token-sequence
 Levenshtein over the anchor window, Arrow-batched.
 
-Physical shape: one shuffle (hash on ``urit`` for the window); all measure
-columns pipeline in the same stage; the long format is an ``explode`` of a
-struct array (no extra shuffle); labels and the overall OR reuse the
-``urit``-clustered layout.
+Physical shape: one shuffle (hash on ``urit``).  With one consumer it is the
+anchor window's own exchange.  When the suite fans out (pairwise and grouped
+measures, or scores plus metadata) it is the explicit ``repartition("urit")``
+of the enrichment pin, which every reader takes as it is: the anchor window
+(then Levenshtein and the scalar measure columns), the group kernels'
+``groupBy("urit")`` and the metadata projection run in the stage above the
+pin with no exchange of their own (AQE learns the pin's layout once it is
+filled and drops the exchanges it first planned there).  The long format is
+an ``explode`` of a struct array (no extra shuffle); labels pipeline on top.
 
 Registry (names, directions, default thresholds) mirrors
 otmt/timemap_measures.py:895-970.
@@ -56,14 +61,13 @@ _SCALARIZED = ("_set_inter", "_set_union", "_set_a_n", "_set_b_n",
 def with_pairwise_scalars(df: DataFrame, pairwise) -> DataFrame:
     """Reduce the per-row array algebra of the pairwise measures to scalar
     columns (set-intersection/union sizes, the top-20 overlap count, the
-    first-anchor null flag) in ONE projection over the enriched frame.
+    first-anchor null flag) in ONE projection over the anchored frame.
 
-    The score expressions then reference only these scalars, so the persist
-    pin in :func:`score_timemap_measures` can DROP the wide token/top-20
-    arrays instead of caching them per row (guide §2.3 — cache the decision
-    bytes, not the payload).  Pure column renaming of the identical
-    expressions: NULL propagation (size/array_intersect of NULL → NULL) is
-    unchanged, which the *_vs_first oracles hash-check."""
+    The score expressions then reference only these scalars, so the set
+    algebra jaccard and sorensen share is computed once per row.  Pure
+    column renaming of the identical expressions: NULL propagation
+    (size/array_intersect of NULL → NULL) is unchanged, which the
+    *_vs_first oracles hash-check."""
     cols = {}
     if {"jaccard", "sorensen"} & set(pairwise):
         set_a = F.array_distinct("first_tokens")
@@ -157,42 +161,43 @@ def _pairwise_score_column(name):
 def enrich_with_firsts(
     pages: DataFrame,
     need_top20: bool = False,
-    need_raw_simhash: bool = True,
-    need_tf_simhash: bool = True,
     need_lev: bool = False,
-    need_tokens_cos: bool = False,
 ) -> DataFrame:
-    """enrich_pages + first-memento anchor columns.
-
-    Only the columns a requested measure actually consumes are computed —
-    Python UDF outputs aren't free, and persist() downstream would
-    materialize them past Catalyst's pruning.  ``tokens_cos`` (the cosine
-    kernel's tokens) gets no anchor column: the group kernel reads it.
+    """enrich_pages (text, tokens, both simhashes, and ``top20`` when asked)
+    + first-memento anchor columns, and the token Levenshtein to the first
+    memento as ``_lev`` when asked.
 
     The anchors are running-frame window values over the timeline: one
-    hash shuffle on urit + per-group sort.
+    hash shuffle on urit + per-group sort.  The measure suite builds its
+    own enrichment with only the columns its measures read and anchors it
+    with the same window.
     """
-    optional = {"raw_simhash": need_raw_simhash,
-                "tf_simhash": need_tf_simhash, "top20": need_top20,
-                "tokens_cos": need_tokens_cos}
-    df = enrich_pages(pages, ["text", "tokens"] + [
-        name for name, needed in optional.items() if needed])
-    first_columns = ["raw_len", "tokens", "n_tokens"]
-    if need_raw_simhash:
-        first_columns.append("raw_simhash")
-    if need_tf_simhash:
-        first_columns.append("tf_simhash")
-    if need_top20:
-        first_columns.append("top20")
+    df = enrich_pages(pages, ["text", "tokens", "raw_simhash", "tf_simhash"]
+                      + (["top20"] if need_top20 else []))
+    return _with_anchors(
+        df, _anchored_columns(raw_simhash=True, tf_simhash=True,
+                              top20=need_top20), need_lev)
 
+
+def _anchored_columns(raw_simhash, tf_simhash, top20):
+    """The enrichment columns the pairwise measures compare with the first
+    memento's."""
+    return ["raw_len", "tokens", "n_tokens"] + [
+        name for name, needed in (("raw_simhash", raw_simhash),
+                                  ("tf_simhash", tf_simhash),
+                                  ("top20", top20)) if needed]
+
+
+def _with_anchors(enriched: DataFrame, first_columns, need_lev) -> DataFrame:
+    """``first_<column>`` for each of ``first_columns`` (the timeline
+    window), plus the token Levenshtein to the first memento as ``_lev``."""
     # one withColumns call: each chained withColumn re-analyzes the whole
     # (already large) plan; the columns are independent, so a single
     # Project is identical and cuts plan-build time
-    df = df.withColumns({
+    df = enriched.withColumns({
         f"first_{column}": first_over_timeline(column)
         for column in first_columns
     })
-
     if need_lev:
         df = df.withColumn(
             "_lev", token_levenshtein_udf(F.col("first_tokens"), F.col("tokens")))
@@ -208,6 +213,12 @@ def score_timemap_measures(
 
     Columns: urit, urim, measuretype, measure, comparison_score, tokenized,
     stemmed, removed_boilerplate, topic_status, error_msg.
+
+    The frame is a plan: Spark computes the anchors, Levenshtein and the
+    group kernels above the enrichment pin on every action that reads it.
+    A caller that reads the scores more than once (say, writes them next
+    to :func:`overall_status` of them, or joins the two) pins them first,
+    as the CLI's ``detect`` pins its report.
     """
     return _scores_and_enrichment(pages, measures, thresholds,
                                   metadata=False)[0]
@@ -240,43 +251,39 @@ def _scores_and_enrichment(pages, measures, thresholds, metadata):
     pairwise = [m for m in measures if m not in _GROUP_KERNELS]
     grouped = [m for m in measures if m in _GROUP_KERNELS]
 
-    need_top20 = "tfintersection" in pairwise
-    df = enrich_with_firsts(
-        pages,
-        need_top20=need_top20,
-        need_raw_simhash=metadata or "raw_simhash" in pairwise,
-        need_tf_simhash="tf_simhash" in pairwise,
-        need_lev=bool({"levenshtein", "nlevenshtein"} & set(pairwise)),
-        need_tokens_cos="cosine" in grouped,
-    )
-    # fold the pairwise array algebra into scalar columns BEFORE any pin —
-    # in the unpinned path Catalyst collapses these into the same
-    # projection (identical plan), in the pinned path they let the cache
-    # drop the widest arrays below
-    df = with_pairwise_scalars(df, pairwise)
+    need = {"raw_simhash": metadata or "raw_simhash" in pairwise,
+            "tf_simhash": "tf_simhash" in pairwise,
+            "top20": "tfintersection" in pairwise,
+            "tokens_cos": "cosine" in grouped}
+    optional = [name for name, needed in need.items() if needed]
+    df = enrich_pages(pages, ["text", "tokens"] + optional)
     if bool(pairwise) + bool(grouped) + metadata > 1:
         # more than one consumer (pairwise branch, grouped branch, metadata
-        # projection) fans the plan out; without a persist the
-        # extract/tokenize UDFs would run once per branch (the reference's
+        # projection) fans the plan out; without a persist the enrichment
+        # UDF would run once per branch (the reference's
         # 12x-repreprocess bug reborn at plan level — SURVEY §4.1).
         # Pinned in the session registry so long-lived sessions can release
         # between batches (session_pins_scope / release_session_pins).
         #
-        # Project BEFORE the pin (guide §2.3): a persist materializes every
-        # column past Catalyst's pruning, and no consumer reads the raw
-        # html payload, the url — or, now that the set algebra is
-        # scalarized above, the first-anchor token and top-20 arrays (the
-        # widest remaining cached columns; `tokens` itself stays for the
-        # LSI/LDA branch and the row-level null gates).  `lang` stays for
-        # the metadata projection.
+        # The pin holds the enrichment keyed by timeline: the columns its
+        # readers read (guide §2.3 — a persist materializes every column
+        # past Catalyst's pruning; no reader wants the html payload or the
+        # url), hash-partitioned on urit.  The anchor window, the group
+        # kernels' groupBy and the metadata projection all read that
+        # layout with no exchange of their own once the pin is filled (AQE
+        # then knows its partitioning), so the urit shuffle runs once and
+        # the Levenshtein UDF and the group kernels run side by side in the
+        # stage above the pin.
         from ..session import pin_for_session
 
-        droppable = ["html", "url", "first_tokens", "top20", "first_top20"]
-        if "raw_simhash" not in pairwise:
-            # computed for the metadata only; its anchor is never read
-            droppable.append("first_raw_simhash")
-        df = pin_for_session(
-            df.drop(*[c for c in droppable if c in df.columns]))
+        columns = ["urit", "urim", "warc_ts", "raw_len", "tokens",
+                   "n_tokens"] + optional
+        if grouped:
+            # the group kernels read the text's length only
+            columns.append(F.length("text").alias("text_len"))
+        if metadata:
+            columns.append("lang")
+        df = pin_for_session(df.select(*columns).repartition("urit"))
 
     entries = []
     for name in pairwise:
@@ -294,9 +301,13 @@ def _scores_and_enrichment(pages, measures, thresholds, metadata):
         )
 
     long_parts = []
-    if entries:
+    if pairwise:
+        anchored = _with_anchors(
+            df, _anchored_columns("raw_simhash" in pairwise,
+                                  "tf_simhash" in pairwise, need["top20"]),
+            need_lev=bool({"levenshtein", "nlevenshtein"} & set(pairwise)))
         long_parts.append(
-            df.select(
+            with_pairwise_scalars(anchored, pairwise).select(
                 "urit", "urim",
                 F.explode(F.array(*entries)).alias("entry"),
             ).select(
@@ -401,6 +412,16 @@ def with_error_kinds(
       every memento of that timemap unless a memento-level access error
       exists there (measuremodel.py:315-336).
     """
+    return _with_error_kinds(scores, scores, memento_access, timemap_access)
+
+
+def _with_error_kinds(scores, scored, memento_access=None,
+                      timemap_access=None):
+    """:func:`with_error_kinds`, taking the scored mementos from the
+    ``urim`` column of ``scored`` (one or more rows per scored memento).
+    A caller whose scores run Python (the group kernels) passes a frame
+    that does not, so finding the never-scored mementos does not run the
+    measures a second time."""
     from pyspark.sql import Window
 
     from .measures_constants import (
@@ -460,7 +481,7 @@ def with_error_kinds(
         )
         # mementos that failed to download never produced score rows at all —
         # they must still surface as one access-error row each
-        missing = ma.join(scores.select("urim").distinct(), "urim",
+        missing = ma.join(scored.select("urim").distinct(), "urim",
                           "left_anti")
         df = df.unionByName(
             _synthetic_rows(missing, ERROR_KIND_MEMENTO_ACCESS))

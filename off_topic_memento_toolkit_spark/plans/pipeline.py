@@ -38,7 +38,13 @@ def detect_off_topic(
 ):
     """The flagship query (bin/detect_off_topic): per-memento scores vs the
     first memento, per-measure labels, the overall OR, and the per-memento
-    metadata — scores and metadata from one enrichment."""
+    metadata — scores and metadata from one enrichment.
+
+    ``overall`` reads ``scores``, and each action recomputes the scores
+    above the enrichment pin (Levenshtein, the group kernels): a caller
+    that reads them more than once, or joins scores with overall, pins
+    ``scores`` first (``session.pin_for_session``), as the CLI does with
+    its report."""
     scores, meta = scores_with_metadata(pages, measures=measures,
                                         thresholds=thresholds)
     overall = overall_status(scores)

@@ -16,8 +16,9 @@
   implies.
 - :func:`save_as_csv_distributed` / :func:`save_as_json_distributed` —
   the 100 TB path: ``df.write`` with the same 14-column order / flat record
-  shape, no driver collect.  The single-file writers above stay for
-  collection-scale parity exports.
+  shape, no driver collect; access errors collapse to one record per failed
+  timemap/memento (:func:`_collapse_access_errors`).  The single-file
+  writers above stay for collection-scale parity exports.
 - :func:`save_as_goldstandard` — AlNoamany-style TSV (id, date, URI, label)
   with label 1/0/ERROR (otmt/measuremodel.py:606-672).
 - :func:`save_uri_list` — plain-text URI-M lists (bin/detect_off_topic:275-293).
@@ -25,7 +26,10 @@
   — the ``detect`` command's path: the writers above, and the URI-M
   lists, read one report frame (scores with their overall verdict and
   metadata) that the caller pins, so the measure suite runs once however
-  many outputs are written.
+  many outputs are written.  The report collapses its access errors
+  itself, and only when it has them (a ``memento_access`` frame): its
+  distributed writers write it as it is, so a ``pages:`` report's write
+  adds no window or exchange over the report rows.
 """
 
 import csv
@@ -34,7 +38,7 @@ import json
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators.measures import with_error_kinds, with_overall_status
+from ..operators.measures import _with_error_kinds, with_overall_status
 from ..operators.measures_constants import (
     CSV_ERROR_LABELS,
     ERROR_KIND_MEASUREMENT,
@@ -67,14 +71,22 @@ def detect_report(scores: DataFrame, meta: DataFrame,
     rows, not joined back from a second read), the error taxonomy of
     :func:`..operators.measures.with_error_kinds` when ``memento_access``
     is given, and the ``meta`` columns.  Same rows and values as the
-    frame the ``save_as_*`` writers join from (scores, overall, meta).
-    Pin it before writing more than one output from it."""
+    frame the ``save_as_*`` writers join from (scores, overall, meta),
+    except that with ``memento_access`` the access errors are already
+    collapsed to one row per memento, as the distributed writers want
+    them (the single-file writers dedupe them anyway).  Pin it before
+    writing more than one output from it."""
     report = with_overall_status(scores)
-    if memento_access is not None:
-        # after the overall columns: the verdicts come from the measured
-        # rows, not from the access errors that replace their messages
-        report = with_error_kinds(report, memento_access=memento_access)
-    return _with_metadata(report, meta)
+    if memento_access is None:
+        # no access errors, so no access-error rows to collapse
+        return _with_metadata(report, meta)
+    # after the overall columns: the verdicts come from the measured
+    # rows, not from the access errors that replace their messages.  The
+    # scored mementos are the metadata's rows (one per enriched memento,
+    # each of which gets score rows): reading them, not the scores, keeps
+    # the group kernels from running a second time for the anti-join
+    report = _with_error_kinds(report, meta, memento_access=memento_access)
+    return _collapse_access_errors(_with_metadata(report, meta))
 
 
 def report_overall(report: DataFrame) -> DataFrame:
@@ -219,7 +231,8 @@ def save_as_csv_distributed(scores: DataFrame, overall: DataFrame, path: str,
     order, written by the executors (``df.write.csv``) — no driver collect.
     Access-error row collapsing (one row per failed timemap/memento) is done
     relationally with the same exclusivity semantics."""
-    _write_csv_distributed(_joined(scores, overall, meta), path)
+    _write_csv_distributed(
+        _collapse_access_errors(_joined(scores, overall, meta)), path)
 
 
 def _write_csv_distributed(report: DataFrame, path: str) -> None:
@@ -230,10 +243,6 @@ def _write_csv_distributed(report: DataFrame, path: str) -> None:
     is_me = kind == ERROR_KIND_MEASUREMENT
     is_err = kind.isNotNull()
 
-    # collapse access errors to one row per timemap / memento (shared with
-    # the JSON variant)
-    ranked = _collapse_access_errors(report)
-
     error_label = (
         F.when(is_tm, F.lit(CSV_ERROR_LABELS[ERROR_KIND_TIMEMAP_ACCESS]))
         .when(is_ma, F.lit(CSV_ERROR_LABELS[ERROR_KIND_MEMENTO_ACCESS]))
@@ -241,7 +250,7 @@ def _write_csv_distributed(report: DataFrame, path: str) -> None:
     )
     none_str = F.lit(None).cast("string")
     bool_str = lambda c: F.when(F.col(c), "True").when(~F.col(c), "False")  # noqa: E731
-    out = ranked.select(
+    out = report.select(
         F.col("urit").alias("URI-T"),
         F.when(is_tm, none_str).otherwise(F.col("urim")).alias("URI-M"),
         error_label.alias("Error"),
@@ -270,8 +279,9 @@ def _write_csv_distributed(report: DataFrame, path: str) -> None:
 
 def _collapse_access_errors(joined: DataFrame) -> DataFrame:
     """One row per access-errored timemap/memento (instead of one per
-    measure), clean rows untouched — shared by both distributed sinks so
-    their record multiplicities agree with the single-file exports.
+    measure), clean rows untouched — applied by both distributed sinks'
+    ``save_as_*`` wrappers and by :func:`detect_report` when it has access
+    errors, so record multiplicities agree with the single-file exports.
 
     Reads ``joined`` ONCE: a row number per (error kind, timemap or memento
     key) keeps the first row of each access error, and every other row
@@ -299,11 +309,12 @@ def save_as_json_distributed(scores: DataFrame, overall: DataFrame, path: str,
     timemap/memento, same as the CSV variant) written by the executors.
     The 4-level nested single-file shape remains the driver-side parity
     export."""
-    _write_json_distributed(_joined(scores, overall, meta), path)
+    _write_json_distributed(
+        _collapse_access_errors(_joined(scores, overall, meta)), path)
 
 
 def _write_json_distributed(report: DataFrame, path: str) -> None:
-    _collapse_access_errors(report).write.mode("overwrite").json(path)
+    report.write.mode("overwrite").json(path)
 
 
 def save_as_goldstandard(overall: DataFrame, filename: str) -> None:

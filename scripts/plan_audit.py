@@ -51,10 +51,22 @@ def above_cache(plan: str) -> str:
     return "\n".join(lines[:cut])
 
 
+def count_jobs(spark, group: str, action) -> int:
+    """The Spark jobs ``action()`` runs, counted under a job group of its
+    own (``statusTracker().getJobIdsForGroup``)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def detect_writer_plans(spark, sf_dir: str) -> dict:
     """Executed plans of the frames one ``detect -ot json-dist
     --ontopic-list`` run with all 12 measures hands its writers, taken as
-    each write starts."""
+    each write starts, and the Spark jobs each write runs."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from off_topic_memento_toolkit_spark import cli
@@ -63,7 +75,7 @@ def detect_writer_plans(spark, sf_dir: str) -> dict:
         pages_from_documents,
     )
 
-    plans = {}
+    plans, jobs = {}, {}
     originals = {name: getattr(DataFrameWriter, name)
                  for name in ("json", "text")}
 
@@ -71,7 +83,9 @@ def detect_writer_plans(spark, sf_dir: str) -> dict:
         def write(self, *args, **kwargs):
             plans[name] = \
                 self._df._jdf.queryExecution().executedPlan().toString()
-            return originals[name](self, *args, **kwargs)
+            jobs[name] = count_jobs(
+                spark, f"plan-audit-detect-{name}",
+                lambda: originals[name](self, *args, **kwargs))
         return write
 
     with tempfile.TemporaryDirectory() as tmp:
@@ -88,8 +102,8 @@ def detect_writer_plans(spark, sf_dir: str) -> dict:
         finally:
             for name, method in originals.items():
                 setattr(DataFrameWriter, name, method)
-    return {"detect_json_dist": plans["json"],
-            "detect_ontopic_list": plans["text"]}
+    return {"detect_json_dist": (plans["json"], jobs["json"]),
+            "detect_ontopic_list": (plans["text"], jobs["text"])}
 
 
 def main():
@@ -98,7 +112,10 @@ def main():
         make_sql_query,
     )
     from off_topic_memento_toolkit_spark.queries_mat import mat_queries
-    from off_topic_memento_toolkit_spark.session import get_spark
+    from off_topic_memento_toolkit_spark.session import (
+        get_spark,
+        session_pins_scope,
+    )
 
     spark = get_spark("plan-audit", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
@@ -122,15 +139,21 @@ def main():
     }
     notes = {
         "offtopic_measures_full": (
-            "12 measures, one keyed shuffle (the timeline window); narrow "
-            "local scan adds the round-robin widen below the UDFs; the "
-            "persisted enrichment is ONE struct UDF per row (text, tokens, "
-            "both simhashes, top-20, cosine tokens), Levenshtein reads it "
-            "after the window, the union branch for the grouped kernels "
-            "reads the pin. The per-column UDF chain it replaced made 24 "
-            "UDF calls in 6 Python nodes here: every chained consumer of "
-            "the tokens re-ran extract and tokenize."),
-        "offtopic_measures_core": "8 relational measures, same shape.",
+            "12 measures, one keyed shuffle: the enrichment pin's "
+            "repartition on urit (printed once per read of the pin). The "
+            "pinned enrichment is ONE struct UDF per row (text, tokens, both "
+            "simhashes, top-20, cosine tokens); a narrow local scan adds the "
+            "round-robin widen below it. The anchor window (then "
+            "Levenshtein) and the group kernels' groupBy read the pin; the "
+            "plan is taken before it runs, when the pin's layout is not "
+            "known yet, so their two urit exchanges still show. AQE drops "
+            "both once the pin is filled (tests/test_plan_shape.py checks "
+            "the executed plan), and Levenshtein and the kernels then run "
+            "in one stage. The per-column UDF chain the struct UDF replaced "
+            "made 24 UDF calls in 6 Python nodes here."),
+        "offtopic_measures_core": (
+            "8 relational measures (cosine among them), same shape; the "
+            "oracle's clean-timeline filter adds the broadcast join."),
         "minhash_lsh_pairs": (
             "signature UDF chained onto the enrichment struct: one Python "
             "node, one pass per document; spill-safe window size gate and the "
@@ -154,7 +177,10 @@ def main():
             "W3 global order via the lazy two-phase ranking: range "
             "repartition + per-partition mono-id, offsets from the "
             "coalesce(1) agg side broadcast back — no Exchange "
-            "SinglePartition anywhere (enforced by test_plan_shape)."),
+            "SinglePartition anywhere. D3 and D5 are windows over ONE "
+            "explicit slice_id exchange, so the ranked layout is read once: "
+            "one offsets aggregate and broadcast, no self-join back onto "
+            "the clusters. Both enforced by test_plan_shape."),
         "ann_lsh_topk": "SRP bucket equi-join, queries broadcast.",
         "ann_ivf_topk": "nprobe bucket equi-join, queries broadcast.",
         "streaming_dedup_batch": "url+simhash first-occurrence window.",
@@ -176,11 +202,11 @@ def main():
             "one materialisation; Python nodes per action. Counts cover "
             "what this writer runs above the pinned detect report; the "
             "report (12 measures, filled once by the first writer) holds "
-            "the suite's Python nodes once: the one enrichment UDF and "
-            "Levenshtein in the measure pin, the group kernel above it. "
-            "The writer itself adds one hash "
-            "exchange and the row-number window that collapses "
-            "access-error rows in a single read."),
+            "the suite's Python nodes once: the one enrichment UDF in the "
+            "enrichment pin, Levenshtein and the group kernel above it. A "
+            "pages: input has no access errors, so the writer writes the "
+            "report as it is: no exchange, no window (a collection: report "
+            "with access errors collapses them itself)."),
         "detect_ontopic_list": (
             "one materialisation; Python nodes per action. Same report; "
             "the list is a distinct over its overall verdicts."),
@@ -190,20 +216,33 @@ def main():
              "",
              f"Captured from `executedPlan` at sf0.01, local[8], 8 shuffle "
              f"partitions, materialization off (scripts/plan_audit.py). "
-             f"Counts are plan-node occurrences; the detect_* rows count "
-             f"what each writer runs above the pinned report. `python UDFs` "
+             f"Counts are plan-node occurrences in the plan taken before "
+             f"the query runs; the detect_* rows count what each writer runs "
+             f"above the pinned report. `python UDFs` "
              f"counts the UDF calls the Python nodes evaluate, a UDF chained "
              f"over another counted once per call: each call is its own "
-             f"pass over the rows.",
+             f"pass over the rows. `jobs` counts the Spark jobs one build and "
+             f"one execution of the query runs (a `noop` write; for the "
+             f"detect_* rows, that writer's write), under a job group of "
+             f"their own; AQE's stage timing can move a count by one between "
+             f"runs (verified_dup_pairs reads 8 or 9).",
              "",
              "| query | hash exch | RR exch | bcast exch | python nodes | "
              "python UDFs | SMJ | BHJ | cartesian | NLJ | sorts | windows "
-             "| scans |",
-             "|---|---|---|---|---|---|---|---|---|---|---|---|---|"]
-    plans = {name: fn(spark, SF_DIR)._jdf.queryExecution().executedPlan()
-             .toString() for name, fn in targets.items()}
-    plans.update({name: above_cache(plan) for name, plan in
-                  detect_writer_plans(spark, SF_DIR).items()})
+             "| scans | jobs |",
+             "|---|---|---|---|---|---|---|---|---|---|---|---|---|---|"]
+    plans, jobs = {}, {}
+    for name, fn in targets.items():
+        def build_and_run():
+            df = fn(spark, SF_DIR)
+            plans[name] = df._jdf.queryExecution().executedPlan().toString()
+            df.write.format("noop").mode("overwrite").save()
+
+        with session_pins_scope():
+            jobs[name] = count_jobs(spark, f"plan-audit-{name}",
+                                    build_and_run)
+    for name, (plan, n_jobs) in detect_writer_plans(spark, SF_DIR).items():
+        plans[name], jobs[name] = above_cache(plan), n_jobs
     details = []
     for name, plan in plans.items():
         s = summarize(plan)
@@ -221,7 +260,7 @@ def main():
             f"| {s['broadcast_exchanges']} | {s['python_nodes']} "
             f"| {s['python_udfs']} | {s['sortmerge_joins']} | {s['broadcast_joins']} "
             f"| {s['cartesian']} | {s['nested_loop']} | {s['sorts']} "
-            f"| {s['windows']} | {s['scans']} |")
+            f"| {s['windows']} | {s['scans']} | {jobs[name]} |")
         details.append(f"- **{name}** — {notes[name]}")
     lines += ["", "## Shape notes", ""] + details + [
         "",
@@ -233,8 +272,11 @@ def main():
         "columns; bucketed-table joins are Exchange-free "
         "(tests/test_bucketing.py); no Python UDF runs over another's "
         "output in the detect report, story's metadata or the dedup docs "
-        "stage (tests/test_plan_shape.py); detect's writers run no Python "
-        "node outside the one pinned report, which runs each once "
+        "stage (tests/test_plan_shape.py); the executed detect report "
+        "shuffles on urit once, into its enrichment pin, whose readers "
+        "take it with no exchange, and story clusters over one slice_id "
+        "exchange (tests/test_plan_shape.py); detect's writers run no "
+        "Python node outside the one pinned report, which runs each once "
         "(tests/test_detect_report.py).",
     ]
     with open(os.path.join(REPO, "PLANS.md"), "w") as fh:

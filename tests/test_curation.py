@@ -3,7 +3,10 @@ scripts' arithmetic (bin/exclude_duplicates, bin/slice_by_datetime,
 bin/cluster_by_simhash, bin/select_high_quality) run on the same rows."""
 
 import math
+import random
+import re
 from datetime import datetime, timedelta
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +21,7 @@ from off_topic_memento_toolkit_spark.operators.curation import (
     slice_by_datetime,
     with_global_position,
 )
+from off_topic_memento_toolkit_spark.plans.pipeline import story_pipeline
 from off_topic_memento_toolkit_spark.session import (
     _SESSION_PINS,
     release_session_pins,
@@ -152,6 +156,102 @@ def test_slice_and_cluster(spark, meta):
     sliced = slice_by_datetime(meta)
     clustered = cluster_by_simhash(sliced)
     got = {r.urim: (r.slice_id, r.cluster_id) for r in clustered.collect()}
+    assert got == expected
+
+
+def _clustered_rows(n_timelines=100, per_timeline=4, seed=7):
+    """A few hundred mementos whose simhashes come from a pool of five far
+    apart values: every slice holds several clusters, each simhash recurs
+    across slices, and a timeline repeating its last value is a
+    duplicate.  The urims share three hosts and one path depth, so many
+    qualities tie and the urim decides the pick."""
+    rng = random.Random(seed)
+    pool = [rng.getrandbits(62) for _ in range(5)]
+    hosts = ["news.example", "blog.example", "plain.example"]
+    base = datetime(2016, 1, 1)
+    rows = []
+    for tl in range(n_timelines):
+        for m in range(per_timeline):
+            when = base + timedelta(minutes=rng.randrange(500_000))
+            rows.append((
+                f"urit{tl}",
+                f"from-warc::{when:%Y%m%d%H%M%S}::"
+                f"http://{hosts[tl % 3]}/a/p{tl}-{m}",
+                rng.choice(pool),
+                when,
+            ))
+    return rows
+
+
+# bin/select_high_quality:44-79, its unescaped patterns in its order
+_CATEGORIES = [
+    (("twitter", "t.co", "redd.it", "facebook", "fb.me", "plus.google",
+      "wiki", "globalvoicesonline", "fbcdn"), 0.5),
+    (("cnn", "bbc", "news", "rosaonline", "aljazeera", "guardian",
+      "USATODAY", "nytimes", "abc", "foxnews", "allvoices",
+      "huffingtonpost"), 0.7),
+    (("dailymotion", "youtube", "youtu.be"), 0.7),
+    (("wordpress", "blog"), 0.4),
+    (("flickr", "flic.kr", "instagram", "twitpic"), 0.6),
+]
+
+
+def _reference_quality(urim):
+    """bin/select_high_quality:44-126 with the damage service absent."""
+    host = urlparse(urim[urim.find("http", 10):]).hostname
+    category = -1.0 if host is None else next(
+        (weight for patterns, weight in _CATEGORIES
+         if any(re.search(p, host) for p in patterns)), 0.0)
+    stripped = urim[:-1] if urim.endswith("/") else urim
+    depth = stripped[stripped.find("http", 10) + 7:-1].count("/") / 10.0
+    return -0.40 * 0.0 + 0.15 * category + 0.45 * depth
+
+
+def _reference_picks(clusters):
+    """bin/select_high_quality's pick: per (slice, cluster), the top of
+    sorted((score, urim), reverse=True)."""
+    members = {}
+    for urim, key in clusters.items():
+        members.setdefault(key, []).append((_reference_quality(urim), urim))
+    return {key: sorted(found, reverse=True)
+            for key, found in members.items()}
+
+
+def test_cluster_by_simhash_many_clusters_per_slice(spark):
+    rows = _clustered_rows()
+    _, _, expected = _oracle(rows)
+    per_slice, slices_of = {}, {}
+    shash = {urim: h for _, urim, h, _ in rows}
+    for urim, (s, c) in expected.items():
+        if c >= 0:
+            per_slice.setdefault(s, set()).add(c)
+            slices_of.setdefault(shash[urim], set()).add(s)
+    # the fixture is what it claims: several clusters in most slices, and
+    # clustered simhashes that recur across slices
+    assert sum(len(ids) >= 3 for ids in per_slice.values()) >= 10
+    assert max(len(s) for s in slices_of.values()) >= 10
+
+    meta = spark.createDataFrame(rows, schema=META_SCHEMA)
+    clustered = cluster_by_simhash(slice_by_datetime(meta))
+    got = {r.urim: (r.slice_id, r.cluster_id) for r in clustered.collect()}
+    assert got == expected
+
+
+def test_story_representatives_match_reference_pick(spark):
+    rows = _clustered_rows()
+    nondup, _, _ = _oracle(rows)
+    kept = [row for row in rows if row[1] in nondup]
+    assert 0 < len(kept) < len(rows)
+    _, _, clusters = _oracle(kept)
+    ranked = _reference_picks(clusters)
+    # urim decides several picks: the best two qualities tie
+    assert sum(len(found) > 1 and found[0][0] == found[1][0]
+               for found in ranked.values()) >= 10
+    expected = {key: found[0][1] for key, found in ranked.items()}
+
+    meta = spark.createDataFrame(rows, schema=META_SCHEMA)
+    got = {(r.slice_id, r.cluster_id): r.urim
+           for r in story_pipeline(meta).collect()}
     assert got == expected
 
 

@@ -344,3 +344,97 @@ def test_collapse_access_errors_reads_its_input_once(spark):
     got = sorted((r.urim, r.measure) for r in collapsed.collect())
     assert got == [("m1", "a"), ("m1", "b"), ("m2", "a"), ("m3", "a"),
                    ("m5", "a"), ("m5", "b")]
+
+
+def _write_collection(root, rows, failed_urim):
+    """A reference working directory (otmt/collectionmodel.py:143-234)
+    holding ``rows`` as downloaded mementos of their timemaps, plus
+    ``failed_urim``, listed in the first timemap but never downloaded."""
+    import hashlib
+    import os
+
+    def digest(uri):
+        return hashlib.sha256(uri.encode()).hexdigest()
+
+    for sub in ("timemaps", "mementos", "memento_errors"):
+        os.makedirs(os.path.join(root, sub))
+    listings, mementos = {}, []
+    for url, warc_ts, html, _, _ in rows:
+        urim = f"http://archive.example/web/{warc_ts:%Y%m%d%H%M%S}/{url}"
+        listings.setdefault(url, []).append(
+            {"uri": urim, "datetime": warc_ts.strftime("%Y-%m-%dT%H:%M:%S")})
+        mementos.append((urim, html))
+    first_url = next(iter(listings))
+    listings[first_url].append(
+        {"uri": failed_urim, "datetime": "2019-01-21T15:45:06"})
+
+    def write(path, content, mode="w"):
+        with open(os.path.join(root, path), mode) as fh:
+            fh.write(content)
+
+    write("timemaps/metadata.csv", "".join(
+        f"timemap:{url},{digest(url)}\n" for url in listings))
+    for url, listed in listings.items():
+        write(f"timemaps/{digest(url)}.json", json.dumps(
+            {"original_uri": url, "mementos": {"list": listed}}))
+    write("mementos/metadata.csv", "".join(
+        f"{urim},{digest(urim)}\n" for urim, _ in mementos))
+    for urim, html in mementos:
+        write(f"mementos/{digest(urim)}.orig", bytes(html), "wb")
+        write(f"mementos/{digest(urim)}_headers.json", "{}")
+    write("memento_errors/metadata.csv",
+          f"{failed_urim},{digest(failed_urim)}\n")
+    write(f"memento_errors/{digest(failed_urim)}_error_info.txt",
+          "HTTP 503 from the archive")
+
+
+def test_collection_access_error_report_runs_kernels_once(spark, tmp_path):
+    """A never-downloaded memento of a ``collection:`` input surfaces as
+    one access-error record, and finding it does not re-run the group
+    kernels: the report runs FlatMapGroupsInPandas once.  The output
+    equals the library writer's over the error-kinded scores."""
+    from off_topic_memento_toolkit_spark.operators.measures import (
+        with_error_kinds,
+    )
+    from off_topic_memento_toolkit_spark.sources.collection_dir import (
+        read_reference_collection,
+    )
+
+    root = str(tmp_path / "collection")
+    failed = "http://archive.example/web/20190121154506/failed"
+    _write_collection(root, pangram_drift_rows(), failed)
+    got = str(tmp_path / "got")
+    plans = []
+    write_json = DataFrameWriter.json
+
+    def capturing(self, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return write_json(self, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrameWriter, "json", capturing)
+        cli.main(["detect", "-i", f"collection:{root}", "-o", got,
+                  "-ot", "json-dist", "-tm", "wordcount,cosine"],
+                 spark=spark)
+    nodes = _python_nodes(_report_split(plans[0])[1][1:], set())
+    assert sum("FlatMapGroupsInPandas" in n for n in nodes) == 1, nodes
+
+    store = read_reference_collection(spark, root)
+    pages = store["pages"]
+    scores = score_timemap_measures(pages, measures=("wordcount", "cosine"))
+    want = str(tmp_path / "want")
+    sinks.save_as_json_distributed(
+        with_error_kinds(scores, memento_access=store["errors"]),
+        overall_status(scores), want, meta=memento_metadata(pages))
+    def records(path):
+        # an access-error record has NULL fields, which do not sort
+        # among floats: compare the records' JSON texts
+        return sorted(
+            json.dumps({k: round(v, 9) if isinstance(v, float) else v
+                        for k, v in row.asDict().items()}, sort_keys=True)
+            for row in spark.read.json(path).collect())
+
+    assert records(got) == records(want)
+    errors = [row for row in spark.read.json(got).collect()
+              if row.error_kind == "memento access"]
+    assert [(e.urim, e.measure) for e in errors] == [(failed, None)]

@@ -12,7 +12,8 @@ What changed and what is pinned here:
 - connected_components(assume_distinct=True) labels equal the default.
 - prepare_pages' widen probe is plan-only: building the frame over a
   join/union input fires no Spark jobs.
-- the measure-suite pin caches scalars, not the first-anchor/top-20 arrays.
+- the measure-suite pin caches the enrichment its readers read, not the
+  html payload or the columns computed above it.
 """
 
 import re
@@ -176,10 +177,12 @@ def test_prepare_pages_probe_fires_no_jobs(spark):
     assert "tokens" in df.columns  # the frame is still the enriched one
 
 
-def test_measure_pin_caches_scalars_not_arrays(spark):
-    """The full-suite persist must not materialize the first-anchor token
-    array or the top-20 arrays — their algebra is scalarized before the
-    pin (cache bytes are corpus-sized at scale)."""
+def test_measure_pin_caches_what_its_readers_read(spark):
+    """The full-suite persist holds the enrichment its readers read —
+    tokens, top-20, the cosine tokens, the text's length — and neither the
+    html payload, the url nor the text, nor any column computed above it (the first-memento anchors,
+    Levenshtein, the scalar set algebra): cache bytes are corpus-sized at
+    scale."""
     from off_topic_memento_toolkit_spark.operators.measures import (
         score_timemap_measures,
     )
@@ -197,12 +200,11 @@ def test_measure_pin_caches_scalars_not_arrays(spark):
         mem = plan[plan.index("InMemoryRelation"):]
         mem = mem[:mem.index("\n")]
         # column refs print as `name#<exprId>` — match on that boundary
-        # (the scalar `_first_tokens_bad` contains "first_tokens" as a
-        # substring and must NOT trip the check)
-        for banned in (" first_tokens#", " top20#", " first_top20#",
-                       " html#"):
+        for banned in (" html#", " url#", " text#", " first_tokens#",
+                       " first_top20#", " _lev#", " _set_inter#",
+                       " _tf20_inter#"):
             assert banned not in mem, mem
-        for needed in ("_set_inter#", "_tf20_inter#", " tokens#"):
+        for needed in (" tokens#", " top20#", " tokens_cos#", " text_len#"):
             assert needed in mem, mem
     finally:
         release_session_pins()

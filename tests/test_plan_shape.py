@@ -13,7 +13,12 @@
   the hot-bucket cap;
 - no Python node evaluates a Python UDF over another Python UDF's output
   in the detect report, story's metadata or the dedup docs stage, so each
-  document crosses into Python once per pass.
+  document crosses into Python once per pass;
+- the detect report shuffles timelines once, into its enrichment pin, and
+  the anchor window and the group kernels read that pin with no exchange;
+  a ``pages:`` report's distributed write adds no window;
+- story ranks its rows once and shuffles them once by slice;
+- one ``detect`` and one ``story`` run stay within their Spark job counts.
 """
 
 import pathlib
@@ -48,15 +53,23 @@ def _seq(scala_seq):
     return [scala_seq.apply(i) for i in range(scala_seq.size())]
 
 
+def _unwrapped(node):
+    """``node``, or the plan an adaptive plan or a query stage runs."""
+    while True:
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        elif node.nodeName().endswith("QueryStage"):
+            node = node.plan()
+        else:
+            return node
+
+
 def _plan_nodes(plan):
-    """Every node of a JVM physical plan once, cached relations' plans and
-    adaptive plans included."""
+    """Every node of a JVM physical plan once, cached relations' plans,
+    adaptive plans and query stages included."""
     nodes, seen, stack = [], set(), [plan]
     while stack:
-        node = stack.pop()
-        if node.nodeName() == "AdaptiveSparkPlan":
-            stack.append(node.executedPlan())
-            continue
+        node = _unwrapped(stack.pop())
         if node.id() in seen:
             continue
         seen.add(node.id())
@@ -326,3 +339,156 @@ def test_chained_udf_guard_sees_nested_and_stacked_chains(spark):
     assert len(chained_python_udfs(_jplan(nested))) == 1
     assert len(chained_python_udfs(_jplan(stacked))) == 1
     assert chained_python_udfs(_jplan(windowed)) == []
+
+
+URIT_HASH = re.compile(r"hashpartitioning\(urit#\d+, \d+\)")
+
+
+def _reads_pin_directly(node):
+    """Whether ``node``'s one input chain reaches a cached relation with
+    no exchange (and no join or union) on the way."""
+    while True:
+        children = _seq(node.children())
+        if len(children) != 1:
+            return False
+        node = _unwrapped(children[0])
+        if node.nodeName() == "InMemoryTableScan":
+            return True
+        if node.nodeName() == "Exchange":
+            return False
+
+
+def test_detect_report_shuffles_timelines_once_into_the_pin(spark):
+    """The report's one urit shuffle is the enrichment pin's own
+    repartition; the first-memento window and the group kernels read the
+    pin with no exchange of their own (checked on the executed adaptive
+    plan: the pin's layout is known once it is filled)."""
+    from off_topic_memento_toolkit_spark.plans.pipeline import (
+        detect_off_topic,
+    )
+    from off_topic_memento_toolkit_spark.queries import ALL_MEASURES
+    from off_topic_memento_toolkit_spark.session import session_pins_scope
+    from off_topic_memento_toolkit_spark.sources.sinks import detect_report
+
+    pages = pages_from_documents(spark, SF_DIR)
+    with session_pins_scope():
+        result = detect_off_topic(pages, measures=ALL_MEASURES)
+        report = detect_report(result["scores"], result["meta"])
+        report.collect()
+        nodes = _plan_nodes(_jplan(report))
+        pinned = {node.id() for scan in nodes
+                  if scan.nodeName() == "InMemoryTableScan"
+                  for node in _plan_nodes(scan.relation().cachedPlan())}
+    urit = [node for node in nodes if node.nodeName() == "Exchange"
+            and URIT_HASH.fullmatch(node.outputPartitioning().toString())]
+    assert len(urit) == 1 and urit[0].id() in pinned, \
+        [node.toString() for node in urit]
+    readers = [node for node in nodes
+               if node.nodeName() == "FlatMapGroupsInPandas"
+               or node.nodeName() == "Window"
+               and [e.toString().split("#")[0]
+                    for e in _seq(node.partitionSpec())] == ["urit"]]
+    assert len(readers) == 2, [node.nodeName() for node in readers]
+    assert all(_reads_pin_directly(node) for node in readers), \
+        [node.toString() for node in readers]
+
+
+def test_pages_report_distributed_write_adds_no_window(
+        spark, tmp_path, monkeypatch):
+    """A ``pages:`` input has no access errors, so the ``json-dist``
+    writer writes the pinned report as it is: no window above the pin
+    (the collapse of access-error rows belongs to reports that have
+    them)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from off_topic_memento_toolkit_spark.plans.pipeline import (
+        detect_off_topic,
+    )
+    from off_topic_memento_toolkit_spark.session import (
+        pin_for_session,
+        session_pins_scope,
+    )
+    from off_topic_memento_toolkit_spark.sources.sinks import (
+        REPORT_WRITERS,
+        detect_report,
+    )
+
+    plans = []
+    write_json = DataFrameWriter.json
+
+    def capturing(self, *args, **kwargs):
+        plans.append(_executed_plan(self._df))
+        return write_json(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "json", capturing)
+    pages = pages_from_documents(spark, SF_DIR)
+    with session_pins_scope():
+        result = detect_off_topic(pages, measures=("wordcount", "cosine"))
+        report = pin_for_session(
+            detect_report(result["scores"], result["meta"]))
+        REPORT_WRITERS["json-dist"](report, str(tmp_path / "out"))
+    lines = plans[0].splitlines()
+    pin = next(i for i, line in enumerate(lines) if "InMemoryRelation" in line)
+    assert not [line for line in lines[:pin] if "Window" in line], plans[0]
+
+
+def test_story_ranks_once_and_shuffles_slices_once(spark):
+    """Story's clusters come from windows over one ``slice_id`` shuffle:
+    the ranked layout is read once (one ranking-offset aggregate, no
+    join of it with itself) and the cluster and representative windows
+    share that one exchange."""
+    from pyspark.sql import functions as F
+
+    from off_topic_memento_toolkit_spark.plans.pipeline import story_pipeline
+
+    meta = spark.range(600).select(
+        F.concat(F.lit("from-warc::20160101000000::http://news.example/"),
+                 F.format_string("%05d", F.col("id"))).alias("urim"),
+        F.concat(F.lit("t"), (F.col("id") % 40).cast("string")).alias("urit"),
+        (F.col("id") % 7 * 1_000_003).alias("simhash"),
+        F.timestamp_seconds(F.lit(1700000000) + (F.col("id") * 7919) % 100000)
+        .alias("memento_datetime"),
+    )
+    plan = _executed_plan(story_pipeline(meta))
+    offsets = re.findall(
+        r"HashAggregate\(keys=\[_pid#\d+L?\], functions=\[count\(1\)\]", plan)
+    assert len(offsets) == 1, plan
+    join_keys = re.findall(r"Join \[([^\]]*)\]", plan)
+    assert [keys.split("#")[0] for keys in join_keys] == ["_pid"], join_keys
+    assert len(re.findall(r"hashpartitioning\(slice_id#", plan)) == 1, plan
+
+
+# Spark jobs one run of each command fires on the fixture below, measured
+# with local[4] and 4 shuffle partitions; a plan change that adds jobs
+# must raise these on purpose
+DETECT_JOBS = 11
+STORY_JOBS = 11
+
+
+def test_detect_and_story_job_counts(spark, tmp_path):
+    from off_topic_memento_toolkit_spark import cli
+    from off_topic_memento_toolkit_spark.operators.measures import (
+        MEASURE_REGISTRY,
+    )
+    from off_topic_memento_toolkit_spark.sources.datagen import generate_pages
+
+    src = str(tmp_path / "pages")
+    generate_pages(spark, n_urls=12, mementos_per_url=4, skew=False,
+                   error_rows=False).write.parquet(src)
+    sc = spark.sparkContext
+
+    def jobs(group, argv):
+        sc.setJobGroup(group, group)
+        try:
+            cli.main(argv, spark=spark)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    detect = jobs("test-detect-jobs", [
+        "detect", "-i", f"pages:{src}", "-o", str(tmp_path / "scores"),
+        "-ot", "json-dist", "-tm", ",".join(sorted(MEASURE_REGISTRY)),
+        "--ontopic-list", str(tmp_path / "on")])
+    story = jobs("test-story-jobs", [
+        "story", "-i", f"pages:{src}", "-o", str(tmp_path / "story")])
+    assert detect <= DETECT_JOBS and story <= STORY_JOBS, (detect, story)
