@@ -40,6 +40,8 @@ def time_phase(spark, name, fn, runs=3):
 def dedup_phases(spark, runs):
     """Decompose dedup_clusters_cc (storeless path, same as bench)."""
     from off_topic_memento_toolkit_spark.operators.lsh import (
+        candidate_keys,
+        candidate_pairs,
         candidate_pairs_from_buckets,
         minhash_band_table,
         simhash_candidate_pairs,
@@ -111,10 +113,7 @@ def dedup_phases(spark, runs):
         cands.unpersist(False)
 
     def minhash_pairs_from(docs):
-        mh = candidate_pairs_from_buckets(bands_df(docs))
-        sh = simhash_candidate_pairs(
-            docs, id_col="nid", simhash_col="raw_simhash", max_hamming=3)
-        return mh.union(sh).distinct()
+        return candidate_pairs(candidate_keys(bands_df(docs), docs))
 
     out["6_through_verify"] = time_phase(
         spark, "through verify", staged, runs)

@@ -6,15 +6,17 @@ candidate pairs, and connected components over the WHOLE corpus.  At 10^12
 documents that is exactly what a daily ingest must not do: the increment is
 ~10^9 docs, the corpus 1000x that.  This module gives the delta path:
 
-1. ``incremental_candidate_pairs`` — candidate pairs TOUCHING the new batch,
-   computed by pruning the checkpointed base band table to only the buckets
-   the delta collides with (a broadcast semi-join on the delta's bucket keys
-   — the base table is scanned once, map-side, and everything outside the
-   delta's key space is discarded before any shuffle).  Output semantics are
-   the exact restriction of a full recompute over base ∪ new to pairs with
-   ≥1 new endpoint: bucket membership (and therefore the hot-bucket cap) is
-   evaluated over base ∪ new per bucket, identical to what the full run
-   would see.
+1. ``delta_bucket_rows`` + ``lsh.candidate_pairs`` — candidate pairs
+   TOUCHING the new batch, computed by pruning the base candidate table
+   (the checkpointed bands and the chunks of the stored simhashes) to only
+   the buckets the delta collides with (a broadcast semi-join on the
+   delta's bucket keys — the base table is scanned once, map-side, and
+   everything outside the delta's key space is discarded before any
+   shuffle).  ``incremental_candidate_pairs`` is the bands-only form.
+   Output semantics are the exact restriction of a full recompute over
+   base ∪ new to pairs with ≥1 new endpoint: bucket membership (and
+   therefore the hot-bucket cap) is evaluated over base ∪ new per bucket,
+   identical to what the full run would see.
 2. ``incremental_components`` — merge the new verified edges into the prior
    (id, component) assignment via CONTRACTION: each prior component is one
    node (its label), new edges connect contracted nodes, and connected
@@ -38,8 +40,8 @@ undone — which is the behavior an ingest pipeline wants; the property test
 monotonicity.
 
 Scale shape (10^12 corpus, 10^9 delta):
-- base bands live in a checkpointed/Iceberg table bucketed by
-  (band, band_hash); the broadcast semi-join prunes at the scan,
+- base bands live in a checkpointed/Iceberg table; the broadcast semi-join
+  prunes at the scan,
 - one shuffle on the bucket key over pruned-base ∪ new (delta-sized),
 - verification joins touch only pair endpoints (delta-sized),
 - the CC runs on the contracted graph (delta-sized),
@@ -53,10 +55,11 @@ from pyspark.sql import functions as F
 
 from .components import connected_components
 from .lsh import (
-    bucket_pairs,
-    chunks_for_hamming,
+    BUCKET_KEY,
+    band_keys,
+    candidate_keys,
+    candidate_pairs,
     minhash_band_table,
-    simhash_chunk_table,
 )
 from .verify import prune_docs_to_pair_endpoints, verified_pairs_jaccard
 
@@ -92,79 +95,24 @@ def delta_bucket_rows(
     )
 
 
-def _delta_touching_pairs(
-    base_rows: DataFrame,
-    new_rows: DataFrame,
-    key_cols: list,
-    max_bucket_size: int,
-    payload_cols: list = (),
-) -> DataFrame:
-    """Pair structs ``p: {u, v}`` (each carrying id, is_new and payloads)
-    of the delta-touched buckets where at least one endpoint is new — the
-    :func:`lsh.bucket_pairs` kernel over :func:`delta_bucket_rows`."""
-    member = F.struct(F.col("id"), F.col("is_new"),
-                      *[F.col(c) for c in payload_cols])
-    return bucket_pairs(
-        delta_bucket_rows(base_rows, new_rows, key_cols), key_cols, member,
-        max_bucket_size,
-    ).filter(F.col("p.u.is_new") | F.col("p.v.is_new"))
-
-
 def incremental_candidate_pairs(
     base_bands: DataFrame,
     new_bands: DataFrame,
     max_bucket_size: int = 64,
 ) -> DataFrame:
-    """MinHash-LSH candidate pairs with ≥1 endpoint in the new batch.
+    """MinHash-LSH candidate pairs with ≥1 endpoint in the new batch:
+    :func:`lsh.candidate_pairs` over the :func:`delta_bucket_rows` of both
+    sides' band keys.
 
     ``base_bands`` / ``new_bands``: (id, band, band_hash) as produced by
     lsh.py::minhash_band_table — the base side read back from the
     checkpointed ``bands`` stage table, NOT recomputed.  The cap's
     exclusions are counted by ``lsh.dropped_bucket_stats`` over
     ``delta_bucket_rows(base_bands, new_bands, ["band", "band_hash"])``."""
-    pairs = _delta_touching_pairs(
-        base_bands, new_bands, ["band", "band_hash"], max_bucket_size)
-    return (
-        pairs.select(
-            F.least("p.u.id", "p.v.id").alias("id_a"),
-            F.greatest("p.u.id", "p.v.id").alias("id_b"),
-        )
-        # a re-ingested id present on BOTH sides would pair with itself
-        .filter(F.col("id_a") != F.col("id_b"))
-        .distinct()
-    )
-
-
-def incremental_simhash_pairs(
-    base_chunks: DataFrame,
-    new_chunks: DataFrame,
-    max_hamming: int = 3,
-    max_bucket_size: int = 64,
-) -> DataFrame:
-    """SimHash Hamming-ball pairs with ≥1 endpoint in the new batch.
-
-    ``*_chunks``: (id, simhash, chunk, chunk_value) as produced by
-    lsh.py::simhash_chunk_table — built with ≥ max_hamming+1 slices
-    (``lsh.chunks_for_hamming``), or the pigeonhole is not exhaustive and
-    pairs are silently missed; the exact ``bit_count`` verify runs
-    JVM-side on the expanded pairs, exactly like the batch path."""
-    pairs = _delta_touching_pairs(
-        base_chunks, new_chunks, ["chunk", "chunk_value"], max_bucket_size,
-        payload_cols=["simhash"],
-    )
-    return (
-        pairs.filter(
-            F.bit_count(
-                F.col("p.u.simhash").bitwiseXOR(F.col("p.v.simhash"))
-            ) <= max_hamming
-        )
-        .select(
-            F.least("p.u.id", "p.v.id").alias("id_a"),
-            F.greatest("p.u.id", "p.v.id").alias("id_b"),
-        )
-        .filter(F.col("id_a") != F.col("id_b"))
-        .distinct()
-    )
+    return candidate_pairs(
+        delta_bucket_rows(band_keys(base_bands), band_keys(new_bands),
+                          BUCKET_KEY),
+        max_bucket_size=max_bucket_size)
 
 
 def incremental_components(
@@ -360,7 +308,6 @@ def incremental_dedup_update(
     bands: int = 32,
     min_jaccard: float = 0.8,
     max_hamming: int = 3,
-    use_simhash_channel: bool = True,
     max_bucket_size: int = 64,
     input_scan_expensive: bool = False,
     with_delta: bool = False,
@@ -417,25 +364,15 @@ def incremental_dedup_update(
     new_bands = stage("inc_bands", build_bands)
 
     def build_candidates():
-        minhash_pairs = incremental_candidate_pairs(
-            base_bands, new_bands, max_bucket_size=max_bucket_size)
-        if not use_simhash_channel:
-            return minhash_pairs
-        # the simhash chunk table is cheap column math over the stored
-        # raw_simhash — derived on the fly from the docs tables (map-only;
-        # the broadcast semi-join prune then discards everything outside the
-        # delta's chunk-key space before any shuffle), matching the batch
-        # pipeline's dual-channel candidates.  Pigeonhole precondition:
-        # ≥ max_hamming+1 slices, same derivation as the batch channel
-        # (silent recall loss otherwise)
-        n_chunks = chunks_for_hamming(max_hamming)
-        simhash_pairs = incremental_simhash_pairs(
-            simhash_chunk_table(base_docs, id_col="nid",
-                                simhash_col="raw_simhash", chunks=n_chunks),
-            simhash_chunk_table(new_docs, id_col="nid",
-                                simhash_col="raw_simhash", chunks=n_chunks),
-            max_hamming=max_hamming, max_bucket_size=max_bucket_size)
-        return minhash_pairs.union(simhash_pairs).distinct()
+        # the batch candidate table on both sides: the base keys are the
+        # stored bands plus the chunks of the stored raw_simhash (cheap
+        # column math, map-only), pruned to the delta's buckets
+        return candidate_pairs(
+            delta_bucket_rows(
+                candidate_keys(base_bands, base_docs, max_hamming),
+                candidate_keys(new_bands, new_docs, max_hamming),
+                BUCKET_KEY),
+            max_hamming, max_bucket_size)
 
     candidates = stage("inc_candidates", build_candidates)
 

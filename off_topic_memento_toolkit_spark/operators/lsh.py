@@ -4,20 +4,23 @@ North-rule core (SURVEY §2.9 "New"): these produce the ``candidate_edges``
 that connected components (components.py) resolves into duplicate clusters.
 
 Scale design:
-- LSH bucket join is an equi-join on (band_index, band_hash) — shuffle on the
-  band key only; no O(n²) anywhere.
+- One candidate table for both channels: (id, key, value, simhash) rows,
+  a MinHash band row keyed on its band index (NULL simhash) and a SimHash
+  chunk row keyed on ``-1 - chunk``, so the two channels never share a
+  bucket.  One shuffle on the bucket key (key, value) groups the whole
+  table; no join and no O(n²) anywhere.
 - :func:`bucket_pairs` is the one bucket → pair kernel every channel uses
-  (MinHash bands, SimHash chunks, the incremental delta buckets, SRP
-  embedding buckets).  Hot buckets (boilerplate-heavy shingles, viral
-  hosts) are CAPPED at ``max_bucket_size`` before pair expansion — a bucket
-  of B rows expands to B²/2 pairs, so one mega-bucket can dominate the job;
-  the cap bounds the blowup and :func:`dropped_bucket_stats` counts the
-  exclusions (no silent truncation).
+  (the candidate table, batch or delta, and SRP embedding buckets).  Hot
+  buckets (boilerplate-heavy shingles, viral hosts) are CAPPED at
+  ``max_bucket_size`` before pair expansion — a bucket of B rows expands
+  to B²/2 pairs, so one mega-bucket can dominate the job; the cap bounds
+  the blowup and :func:`dropped_bucket_stats` counts the exclusions (no
+  silent truncation).
 - SimHash channel: split the 64-bit value into ``chunks`` equal bit-slices;
   by pigeonhole any pair with hamming ≤ chunks-1 collides on at least one
-  slice, so an equi-join per slice finds all candidates for distance
-  ≤ chunks-1; the exact ``bit_count(a^b) <= max_hamming`` verify runs
-  JVM-side after the join.
+  slice, so grouping per slice finds all candidates for distance
+  ≤ chunks-1; the exact Hamming check runs JVM-side on the chunk-bucket
+  pairs (:func:`candidate_pairs`).
 """
 
 from pyspark.sql import DataFrame, Window
@@ -74,9 +77,10 @@ def bucket_pairs(
     member,
     max_bucket_size: int,
 ) -> DataFrame:
-    """The one bucket-table → candidate-pair kernel: every channel (MinHash
-    bands, SimHash chunks, delta buckets, SRP embedding buckets) groups its
-    rows on ``key_cols`` and expands each bucket's ``member`` values into a
+    """The one bucket-table → candidate-pair kernel: the candidate table
+    (MinHash bands and SimHash chunks, batch or delta) and the SRP
+    embedding buckets group their rows on ``key_cols`` and expand each
+    bucket's ``member`` values into a
     ``p: struct<u, v>`` column, one row per unordered member pair.  Callers
     keep only their own filters and the id projection.
 
@@ -138,52 +142,13 @@ def dropped_bucket_stats(
     rows: DataFrame, key_cols: list, max_bucket_size: int = 64,
 ) -> DataFrame:
     """Observability for the cap: how many buckets/rows were excluded.
-    Run it over the same rows the channel pairs — the band or chunk table,
-    an incremental channel's ``delta_bucket_rows``, or the SRP bucket
-    table."""
+    Run it over the same rows that are paired — a candidate table (or one
+    channel's rows of it), an increment's ``delta_bucket_rows``, or the SRP
+    bucket table."""
     return overflowing_buckets(rows, key_cols, max_bucket_size).agg(
         F.count("*").alias("dropped_buckets"),
         F.coalesce(F.sum("count"), F.lit(0)).alias("dropped_rows"),
     )
-
-
-def candidate_pairs_from_buckets(
-    bucketed: DataFrame,
-    max_bucket_size: int = 64,
-    distinct_pairs: bool = True,
-) -> DataFrame:
-    """Equal (band, band_hash) buckets → (id_a < id_b) candidate pairs, via
-    :func:`bucket_pairs`.
-
-    ``distinct_pairs=False``: emit the expanded pairs without the final
-    pair-level ``distinct()`` — for callers that union several candidate
-    channels and distinct the union anyway (dedup_pipeline), where the
-    per-channel distinct would be a redundant extra exchange at every
-    scale.  Multiset differs (overlapping member sets emit a pair once per
-    set); the SET of pairs is identical.
-    """
-    pairs = bucket_pairs(
-        bucketed, ["band", "band_hash"], F.col("id"), max_bucket_size,
-    ).select(
-        F.least("p.u", "p.v").alias("id_a"),
-        F.greatest("p.u", "p.v").alias("id_b"),
-    )
-    return pairs.distinct() if distinct_pairs else pairs
-
-
-def minhash_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "urim",
-    tokens_col: str = "tokens",
-    num_perm: int = 128,
-    shingle_words: int = 5,
-    bands: int = 32,
-    seed: int = 1234567,
-    max_bucket_size: int = 64,
-) -> DataFrame:
-    bucketed = minhash_band_table(
-        df, id_col, tokens_col, num_perm, shingle_words, bands, seed)
-    return candidate_pairs_from_buckets(bucketed, max_bucket_size)
 
 
 def chunks_for_hamming(max_hamming: int, chunks: int = 4) -> int:
@@ -237,6 +202,121 @@ def simhash_chunk_table(
     )
 
 
+# the bucket key of the candidate table: band rows key on their band index
+# (≥ 0) and chunk rows on -1 - chunk, so the channels never share a bucket
+BUCKET_KEY = ["key", "value"]
+
+
+def band_keys(bands: DataFrame) -> DataFrame:
+    """The MinHash channel's rows of the candidate table: (id, key, value,
+    simhash) of a :func:`minhash_band_table`, keyed on the band index, with
+    a NULL simhash.  The stored ``bands`` stage keeps its
+    (id, band, band_hash) schema; this is a projection of it."""
+    return bands.select(
+        "id", F.col("band").alias("key"), F.col("band_hash").alias("value"),
+        F.lit(None).cast("long").alias("simhash"))
+
+
+def chunk_keys(
+    df: DataFrame,
+    id_col: str = "urim",
+    simhash_col: str = "simhash",
+    max_hamming: int = 3,
+    chunks: int = 4,
+) -> DataFrame:
+    """The SimHash channel's rows of the candidate table: (id, key, value,
+    simhash) slices of :func:`simhash_chunk_table`, as many as
+    ``max_hamming`` needs (:func:`chunks_for_hamming`), keyed on
+    ``-1 - chunk``."""
+    table = simhash_chunk_table(df, id_col, simhash_col,
+                                chunks_for_hamming(max_hamming, chunks))
+    return table.select(
+        "id", (-1 - F.col("chunk")).alias("key"),
+        F.col("chunk_value").alias("value"), "simhash")
+
+
+def candidate_keys(bands: DataFrame, docs: DataFrame,
+                   max_hamming: int = 3) -> DataFrame:
+    """Both channels' keys of the dedup ``docs`` stage as one candidate
+    table: the band rows of ``bands`` and the chunk rows of ``docs``'
+    (nid, raw_simhash)."""
+    return band_keys(bands).unionByName(
+        chunk_keys(docs, "nid", "raw_simhash", max_hamming))
+
+
+def _canonical_pairs(keys: DataFrame, max_hamming: int = 3,
+                     max_bucket_size: int = 64) -> DataFrame:
+    """(id_a < id_b) pairs of a candidate table, before the pair distinct
+    (overlapping member sets emit a pair once per set)."""
+    delta = "is_new" in keys.columns
+    member = F.struct("id", "simhash", *(["is_new"] if delta else []))
+    # chunk buckets hold only non-NULL simhashes, band buckets only NULL ones
+    keep = F.col("p.u.simhash").isNull() | (F.bit_count(
+        F.col("p.u.simhash").bitwiseXOR(F.col("p.v.simhash"))) <= max_hamming)
+    if delta:
+        keep = keep & (F.col("p.u.is_new") | F.col("p.v.is_new"))
+    return (
+        bucket_pairs(keys, BUCKET_KEY, member, max_bucket_size)
+        .filter(keep)
+        .select(F.least("p.u.id", "p.v.id").alias("id_a"),
+                F.greatest("p.u.id", "p.v.id").alias("id_b"))
+        # a re-ingested id on both sides of a delta would pair with itself
+        .filter(F.col("id_a") < F.col("id_b"))
+    )
+
+
+def candidate_pairs(
+    keys: DataFrame,
+    max_hamming: int = 3,
+    max_bucket_size: int = 64,
+) -> DataFrame:
+    """Distinct (id_a < id_b) candidate pairs of a candidate table — the one
+    pairing of both channels, batch and delta: one :func:`bucket_pairs`
+    call over (key, value) buckets with ``struct(id, simhash)`` members,
+    the Hamming check ``≤ max_hamming`` on chunk-bucket pairs only, and one
+    pair distinct.
+
+    ``keys``: rows of :func:`band_keys` / :func:`chunk_keys` (or their
+    union, :func:`candidate_keys`), or ``incremental.delta_bucket_rows``
+    over such rows; with the latter's ``is_new`` column only pairs with a
+    new endpoint are kept."""
+    return _canonical_pairs(keys, max_hamming, max_bucket_size).distinct()
+
+
+def candidate_pairs_from_buckets(
+    bucketed: DataFrame,
+    max_bucket_size: int = 64,
+    distinct_pairs: bool = True,
+) -> DataFrame:
+    """Equal (band, band_hash) buckets of a :func:`minhash_band_table` →
+    (id_a < id_b) candidate pairs: :func:`candidate_pairs` over its
+    :func:`band_keys`.
+
+    ``distinct_pairs=False``: emit the expanded pairs without the final
+    pair-level ``distinct()`` — for callers that union several candidate
+    frames and distinct the union anyway.  Multiset differs (overlapping
+    member sets emit a pair once per set); the SET of pairs is identical.
+    """
+    pairs = _canonical_pairs(band_keys(bucketed),
+                             max_bucket_size=max_bucket_size)
+    return pairs.distinct() if distinct_pairs else pairs
+
+
+def minhash_candidate_pairs(
+    df: DataFrame,
+    id_col: str = "urim",
+    tokens_col: str = "tokens",
+    num_perm: int = 128,
+    shingle_words: int = 5,
+    bands: int = 32,
+    seed: int = 1234567,
+    max_bucket_size: int = 64,
+) -> DataFrame:
+    bucketed = minhash_band_table(
+        df, id_col, tokens_col, num_perm, shingle_words, bands, seed)
+    return candidate_pairs_from_buckets(bucketed, max_bucket_size)
+
+
 def simhash_candidate_pairs(
     df: DataFrame,
     id_col: str = "urim",
@@ -246,29 +326,11 @@ def simhash_candidate_pairs(
     max_bucket_size: int = 64,
     distinct_pairs: bool = True,
 ) -> DataFrame:
-    """All pairs with hamming(simhash) ≤ max_hamming, found via chunk-bucket
-    grouping (exhaustive when max_hamming ≤ chunks-1 by pigeonhole).
-
-    Same :func:`bucket_pairs` kernel as the MinHash path (a pair within
-    hamming ≤ chunks-1 can collide on up to ``chunks`` slices, so the
-    member-set dedup divides the expanded row count by that duplication);
-    the exact ``bit_count`` verify runs on the expanded pairs, all
-    JVM-side."""
-    # the contract is ALL pairs ≤ max_hamming: widen the slice count when
-    # the caller's max_hamming outgrows it (pigeonhole needs ≥ h+1 slices)
-    chunks = chunks_for_hamming(max_hamming, chunks)
-    table = simhash_chunk_table(df, id_col, simhash_col, chunks)
-    pairs = (
-        bucket_pairs(table, ["chunk", "chunk_value"],
-                     F.struct("id", "simhash"), max_bucket_size)
-        .filter(
-            F.bit_count(
-                F.col("p.u.simhash").bitwiseXOR(F.col("p.v.simhash"))
-            ) <= max_hamming
-        )
-        .select(
-            F.least("p.u.id", "p.v.id").alias("id_a"),
-            F.greatest("p.u.id", "p.v.id").alias("id_b"),
-        )
-    )
+    """All pairs with hamming(simhash) ≤ max_hamming: :func:`candidate_pairs`
+    over the :func:`chunk_keys` of ``df`` (exhaustive by pigeonhole: the
+    slice count is widened to ≥ max_hamming + 1).  ``distinct_pairs`` as
+    in :func:`candidate_pairs_from_buckets`."""
+    pairs = _canonical_pairs(
+        chunk_keys(df, id_col, simhash_col, max_hamming, chunks),
+        max_hamming, max_bucket_size)
     return pairs.distinct() if distinct_pairs else pairs

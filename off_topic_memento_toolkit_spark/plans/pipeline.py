@@ -5,9 +5,11 @@ Physical shapes (SURVEY §3.1/§4.3):
 - detect_off_topic: scan → window (one hash shuffle on urit) → kernels
   (pipelined) → labels → overall agg (reuses urit clustering) — a single
   exchange for the whole measure suite.
-- dedup: signatures (map-only) → band explode + bucket join (shuffle on band
-  key) → verify (pair join) → CC loop (checkpointed per iteration) →
-  clusters; every stage is a named checkpoint table so a relaunch resumes.
+- dedup: signatures (map-only) → one candidate table of MinHash band and
+  SimHash chunk keys → one shuffle on the bucket key, pairs expanded per
+  bucket (no join) → verify (pair join) → CC loop (checkpointed per
+  iteration) → clusters; every stage is a named checkpoint table so a
+  relaunch resumes.
 """
 
 from pyspark.sql import DataFrame
@@ -21,11 +23,7 @@ from ..operators.curation import (
     select_representatives,
     slice_by_datetime,
 )
-from ..operators.lsh import (
-    candidate_pairs_from_buckets,
-    minhash_band_table,
-    simhash_candidate_pairs,
-)
+from ..operators.lsh import candidate_keys, candidate_pairs, minhash_band_table
 from ..operators.measures import overall_status, scores_with_metadata
 from ..operators.timeline import prepare_pages
 from ..operators.verify import verified_pairs_jaccard, verified_pairs_lcs
@@ -139,11 +137,6 @@ def dedup_docs(pages: DataFrame,
     )
 
 
-# storeless dedup_pipeline fills its docs pin eagerly at or above this
-# optimizer size estimate (see the comment at the fill)
-_EAGER_FILL_MIN_BYTES = 2 * 1024 * 1024
-
-
 def dedup_pipeline(
     pages: DataFrame,
     store=None,
@@ -152,7 +145,6 @@ def dedup_pipeline(
     bands: int = 32,
     min_jaccard: float = 0.8,
     max_hamming: int = 3,
-    use_simhash_channel: bool = True,
     verify: bool = True,
     verify_method: str = "jaccard",
     min_lcs_ratio: float = 0.6,
@@ -171,6 +163,10 @@ def dedup_pipeline(
     ``merge`` — rewriting only the touched buckets, never the corpus.  At
     10^12 docs size ``state_buckets`` so one bucket is a few GB.
     """
+    # before any stage runs: a store-backed call must not commit stages
+    # for a run that cannot finish
+    if verify_method not in ("jaccard", "lcs"):
+        raise ValueError(f"unknown verify_method {verify_method!r}")
     # key-clustered layouts for the mutable corpus state; intermediate
     # stages (candidates, CC iterations) are write-once → unbucketed
     bucket_specs = {
@@ -191,10 +187,13 @@ def dedup_pipeline(
     if store is None:
         # downstream stages (minhash bands, simhash chunks, verify join) each
         # traverse docs; without the checkpoint table, cache it so the
-        # extract/tokenize/simhash UDF lineage runs once.  Pinned in the
-        # session registry, the one place package pins live: an enclosing
-        # session_pins_scope releases it on exit, release_session_pins
-        # drains it.
+        # extract/tokenize/simhash UDF lineage runs once.  Its first reader
+        # is the map side of the candidate table's one bucket exchange (the
+        # band and the chunk rows), so the pin fills there with no eager
+        # job; the verify prune and CC read it after the candidates, behind
+        # their broadcast.  Pinned in the session registry, the one place
+        # package pins live: an enclosing session_pins_scope releases it on
+        # exit, release_session_pins drains it.
         #
         # Project before the pin (guide §2.3): the jaccard verify path never
         # reads `text`, so caching it would materialize the corpus text for
@@ -207,26 +206,6 @@ def dedup_pipeline(
         if verify and verify_method == "lcs":
             pin_cols.insert(2, "text")
         docs = pin_for_session(docs.select(*pin_cols))
-        # Materialize the pin NOW when the corpus is big enough: the cache
-        # has two consumers whose shuffle map stages AQE submits
-        # CONCURRENTLY (the minhash-band exchange and the simhash-chunk
-        # exchange), and concurrent first readers of an unfilled cache each
-        # compute the partitions themselves — the whole extract/tokenize/
-        # simhash enrichment ran twice in parallel (event log: two
-        # identical 32-task stages, 2×2.1 s at sf1).  The duplicated work
-        # grows with the corpus while the eager fill costs one ~fixed
-        # sequential job, so the fill is gated on the optimizer's input
-        # size estimate (the crossover was measured between sf0.1 — docs
-        # estimate 0.6 MiB, racing stages overlap on idle cores and the
-        # fill's serialization costs more than the duplication — and sf1 —
-        # 5.7 MiB, duplication 2×2.1 s vs 1.8 s fill).  (The measures pin
-        # needs no fill: its branches are separated by an exchange
-        # barrier, so the first reader always finishes before the second
-        # starts.)
-        est = int(str(docs._jdf.queryExecution().optimizedPlan()
-                      .stats().sizeInBytes()))
-        if est >= _EAGER_FILL_MIN_BYTES:
-            docs.count()
 
     def build_bands():
         # checkpointed as its OWN stage: the band table is the corpus state
@@ -241,19 +220,10 @@ def dedup_pipeline(
     band_table = stage("bands", build_bands)
 
     def build_candidates():
-        # single-channel: the channel's own pair-distinct is the stage's
-        # dedup; two channels: distinct the UNION once — per-channel
-        # distincts would be redundant exchanges (the union distinct
-        # collapses within-channel duplicates too)
-        if not use_simhash_channel:
-            return candidate_pairs_from_buckets(band_table)
-        minhash_pairs = candidate_pairs_from_buckets(
-            band_table, distinct_pairs=False)
-        simhash_pairs = simhash_candidate_pairs(
-            docs, id_col="nid", simhash_col="raw_simhash",
-            max_hamming=max_hamming, distinct_pairs=False,
-        )
-        return minhash_pairs.union(simhash_pairs).distinct()
+        # both channels' keys in one table: one bucket exchange, one pair
+        # distinct
+        return candidate_pairs(candidate_keys(band_table, docs, max_hamming),
+                               max_hamming)
 
     candidates = stage("candidate_edges", build_candidates)
     if store is None and verify:
@@ -285,8 +255,6 @@ def dedup_pipeline(
                 candidates, pruned_docs, id_col="nid", text_col="text",
                 min_ratio=min_lcs_ratio,
             ).select("id_a", "id_b")
-        if verify_method != "jaccard":
-            raise ValueError(f"unknown verify_method {verify_method!r}")
         return verified_pairs_jaccard(
             candidates, pruned_docs, id_col="nid", tokens_col="tokens",
             min_jaccard=min_jaccard,

@@ -61,7 +61,7 @@ from off_topic_memento_toolkit_spark.operators.components import (
 from off_topic_memento_toolkit_spark.operators.incremental import (
     incremental_dedup_update)
 from off_topic_memento_toolkit_spark.operators.lsh import (
-    candidate_pairs_from_buckets, minhash_band_table)
+    candidate_keys, candidate_pairs, minhash_band_table)
 from off_topic_memento_toolkit_spark.operators.timeline import prepare_pages
 from off_topic_memento_toolkit_spark.operators.verify import (
     verified_pairs_jaccard)
@@ -113,7 +113,7 @@ def docs_of(pages):
 def batch_cluster(docs):
     bands = minhash_band_table(docs, id_col="nid", tokens_col="tokens")
     verified = verified_pairs_jaccard(
-        candidate_pairs_from_buckets(bands), docs,
+        candidate_pairs(candidate_keys(bands, docs)), docs,
         id_col="nid", tokens_col="tokens", min_jaccard=0.8
     ).select("id_a", "id_b")
     return attach_components(
@@ -143,8 +143,7 @@ else:
 
     start = time.time()
     result = incremental_dedup_update(
-        base_docs, base_bands, prior, delta_pages,
-        use_simhash_channel=False)
+        base_docs, base_bands, prior, delta_pages)
     noop_write(result["assignments"])
     elapsed = time.time() - start
 

@@ -106,6 +106,44 @@ def detect_writer_plans(spark, sf_dir: str) -> dict:
             "detect_ontopic_list": (plans["text"], jobs["text"])}
 
 
+def without_cached_plans(plan: str) -> str:
+    """``plan`` without the plans of the cached relations it reads: what
+    runs above them."""
+    out, cut = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-|"))
+        if cut is not None and depth > cut:
+            continue
+        cut = depth if "InMemoryRelation" in line else None
+        out.append(line)
+    return "\n".join(out)
+
+
+def dedup_candidates_plan(spark, sf_dir: str):
+    """The executed candidate stage of one storeless ``dedup_pipeline`` run
+    over the sf docs — the plan that fills the pipeline's candidates pin,
+    without the docs pin it reads — and the Spark jobs the run fires."""
+    from off_topic_memento_toolkit_spark import session
+    from off_topic_memento_toolkit_spark.plans.pipeline import dedup_pipeline
+    from off_topic_memento_toolkit_spark.queries import pages_from_documents
+
+    with session.session_pins_scope():
+        earlier = list(session._SESSION_PINS)
+        jobs = count_jobs(
+            spark, "plan-audit-dedup_candidates",
+            lambda: dedup_pipeline(pages_from_documents(spark, sf_dir))
+            .write.format("noop").mode("overwrite").save())
+        (candidates,) = [df for df in session._SESSION_PINS
+                         if not any(df is e for e in earlier)
+                         and df.columns == ["id_a", "id_b"]]
+        scan = candidates._jdf.queryExecution().executedPlan().executedPlan()
+        plan = scan.relation().cachedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            # its string holds the initial plan too; keep the final one
+            plan = plan.executedPlan()
+    return without_cached_plans(plan.toString()), jobs
+
+
 def main():
     from off_topic_memento_toolkit_spark.queries import (
         full_suite_query,
@@ -173,6 +211,18 @@ def main():
             "CC, corpus relabeled by ONE broadcast join — no corpus-sized "
             "shuffle anywhere in the merge."),
         "simhash_hamming_pairs": "same shape over 4x16-bit chunk buckets.",
+        "dedup_candidates": (
+            "the storeless dedup pipeline's candidate stage, taken after "
+            "the run (the final adaptive plan; the pipeline's CC runs it "
+            "while the plan is built), without the docs pin it reads; jobs "
+            "count the whole pipeline run. Both channels' keys are one "
+            "table: band rows and 4x16-bit chunk rows meet in ONE hash "
+            "exchange on the bucket key (key, value), which feeds the size "
+            "gate and the collect_list; the member-set distinct and the "
+            "pair distinct are the other two. The two-channel form it "
+            "replaced had 5: two bucket exchanges, two member-set "
+            "distincts and the union distinct. The band UDF is the one "
+            "Python node."),
         "curation_story": (
             "W3 global order via the lazy two-phase ranking: range "
             "repartition + per-partition mono-id, offsets from the "
@@ -218,7 +268,8 @@ def main():
              f"partitions, materialization off (scripts/plan_audit.py). "
              f"Counts are plan-node occurrences in the plan taken before "
              f"the query runs; the detect_* rows count what each writer runs "
-             f"above the pinned report. `python UDFs` "
+             f"above the pinned report, and dedup_candidates the executed "
+             f"candidate stage of a storeless dedup run. `python UDFs` "
              f"counts the UDF calls the Python nodes evaluate, a UDF chained "
              f"over another counted once per call: each call is its own "
              f"pass over the rows. `jobs` counts the Spark jobs one build and "
@@ -241,6 +292,8 @@ def main():
         with session_pins_scope():
             jobs[name] = count_jobs(spark, f"plan-audit-{name}",
                                     build_and_run)
+    plans["dedup_candidates"], jobs["dedup_candidates"] = \
+        dedup_candidates_plan(spark, SF_DIR)
     for name, (plan, n_jobs) in detect_writer_plans(spark, SF_DIR).items():
         plans[name], jobs[name] = above_cache(plan), n_jobs
     details = []
@@ -268,7 +321,9 @@ def main():
         "measure suite = exactly one keyed exchange / one fused "
         "ArrowEvalPython / one sort on wide input; LSH candidate generation "
         "is join-free with the size gate below the collect, and only "
-        "operators/lsh.py builds it; scans prune "
+        "operators/lsh.py builds it; the storeless dedup candidate stage "
+        "has one bucket exchange for both channels and 3 hash exchanges, "
+        "and its band UDF runs once; scans prune "
         "columns; bucketed-table joins are Exchange-free "
         "(tests/test_bucketing.py); no Python UDF runs over another's "
         "output in the detect report, story's metadata or the dedup docs "

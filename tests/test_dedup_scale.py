@@ -235,6 +235,25 @@ def test_dedup_pipeline_lcs_verify_channel(spark):
         dedup_pipeline(pages, verify_method="nope").collect()
 
 
+def test_dedup_pipeline_rejects_unknown_verify_method_before_any_stage(
+        spark, tmp_path):
+    """An unknown verify method fails the call before a store-backed run
+    commits anything: no docs/bands/candidate stage for a run that cannot
+    finish."""
+    from off_topic_memento_toolkit_spark.plans.checkpoints import (
+        CheckpointStore,
+    )
+    from off_topic_memento_toolkit_spark.plans.pipeline import dedup_pipeline
+    from off_topic_memento_toolkit_spark.sources.datagen import generate_pages
+
+    pages = generate_pages(spark, n_urls=4, mementos_per_url=2, skew=False,
+                           error_rows=False)
+    store = CheckpointStore(spark, str(tmp_path / "ckpt"), run_id="t")
+    with pytest.raises(ValueError, match="verify_method"):
+        dedup_pipeline(pages, store=store, verify_method="nope")
+    assert not store.is_committed("docs")
+
+
 def test_dedup_recall_vs_reference_chain_assignments(spark):
     """North acceptance: dup-pair recall >= 0.99 against the REFERENCE
     CHAIN'S assignments (D3 cluster_by_simhash groups) at identical configs —

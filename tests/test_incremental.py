@@ -16,14 +16,16 @@ from off_topic_memento_toolkit_spark.operators.incremental import (
     incremental_candidate_pairs,
     incremental_components,
     incremental_dedup_update,
-    incremental_simhash_pairs,
 )
 from off_topic_memento_toolkit_spark.operators.lsh import (
+    BUCKET_KEY,
+    candidate_keys,
+    candidate_pairs,
     candidate_pairs_from_buckets,
+    chunk_keys,
     dropped_bucket_stats,
     minhash_band_table,
     simhash_candidate_pairs,
-    simhash_chunk_table,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -158,11 +160,76 @@ def test_incremental_simhash_pairs_match_full_restriction(spark):
     full = _pairs_set(simhash_candidate_pairs(
         df, id_col="id", simhash_col="simhash", max_hamming=3))
     expected = {p for p in full if p[0] in new_ids or p[1] in new_ids}
-    got = _pairs_set(incremental_simhash_pairs(
-        simhash_chunk_table(base_df, id_col="id", simhash_col="simhash"),
-        simhash_chunk_table(new_df, id_col="id", simhash_col="simhash"),
-        max_hamming=3))
+    got = _pairs_set(candidate_pairs(delta_bucket_rows(
+        chunk_keys(base_df, id_col="id", simhash_col="simhash"),
+        chunk_keys(new_df, id_col="id", simhash_col="simhash"),
+        BUCKET_KEY), max_hamming=3))
     assert got == expected and expected
+
+
+def _flip(value, bits):
+    """``value`` with the given bit positions flipped, as a signed long."""
+    for bit in bits:
+        value ^= 1 << bit
+    return value - (1 << 64) if value >= 1 << 63 else value
+
+
+def _chunks16(value):
+    return {(c, (value >> (16 * c)) & 0xFFFF) for c in range(4)}
+
+
+def test_one_key_table_pairs_equal_the_channel_union(spark):
+    """One candidate table pairs both channels exactly as the two channel
+    functions do: a SimHash-only pair (hamming 2, no shared band) is kept,
+    a pair that shares a 16-bit chunk at hamming 8 and no band is not, and
+    a pair both channels find is found once — batch, and restricted to
+    pairs touching a new id for the delta."""
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(400)]
+    rows = []
+    for i in range(24):
+        tokens = [rng.choice(vocab) for _ in range(50)]
+        rows.append((i, tokens, _flip(rng.getrandbits(64), ())))
+    # 100/101: SimHash only — disjoint vocabularies, hamming 2
+    sim = rng.getrandbits(64)
+    rows.append((100, [f"a{i}" for i in range(50)], _flip(sim, ())))
+    rows.append((101, [f"b{i}" for i in range(50)], _flip(sim, (3, 40))))
+    # 200/201: one shared chunk (bits 0-15), hamming 8 — a chunk bucket
+    # pair the Hamming check must drop; no shared band
+    far = rng.getrandbits(64)
+    rows.append((200, [f"c{i}" for i in range(50)], _flip(far, ())))
+    rows.append((201, [f"d{i}" for i in range(50)],
+                 _flip(far, (17, 21, 33, 37, 49, 53, 60, 62))))
+    # 300/301: both channels — equal tokens, hamming 1
+    both = rng.getrandbits(64)
+    shared = [rng.choice(vocab) for _ in range(50)]
+    rows.append((300, shared, _flip(both, ())))
+    rows.append((301, shared, _flip(both, (9,))))
+    docs = spark.createDataFrame(
+        rows, "nid long, tokens array<string>, raw_simhash long")
+    bands = minhash_band_table(docs, id_col="nid", tokens_col="tokens")
+
+    band_pairs = _pairs_set(candidate_pairs_from_buckets(bands))
+    union = band_pairs | _pairs_set(simhash_candidate_pairs(
+        docs, id_col="nid", simhash_col="raw_simhash", max_hamming=3))
+    assert (100, 101) in union and (100, 101) not in band_pairs
+    assert (300, 301) in union and (300, 301) in band_pairs
+    sims = {r[0]: r[2] & ((1 << 64) - 1) for r in rows}
+    assert _chunks16(sims[200]) & _chunks16(sims[201])
+    assert (200, 201) not in union
+
+    assert _pairs_set(candidate_pairs(candidate_keys(bands, docs))) == union
+
+    is_new = F.col("nid").isin(101, 201, 301) | (F.col("nid") % 4 == 0)
+    new_docs, base_docs = docs.filter(is_new), docs.filter(~is_new)
+    new_ids = {r.nid for r in new_docs.collect()}
+    got = _pairs_set(candidate_pairs(delta_bucket_rows(
+        candidate_keys(bands.join(base_docs, bands.id == base_docs.nid,
+                                  "left_semi"), base_docs),
+        candidate_keys(bands.join(new_docs, bands.id == new_docs.nid,
+                                  "left_semi"), new_docs),
+        BUCKET_KEY)))
+    assert got == {p for p in union if p[0] in new_ids or p[1] in new_ids}
 
 
 # --------------------------------------------------------------- components
@@ -476,8 +543,7 @@ def test_incremental_update_reingest_verify_uses_new_tokens(spark):
     prior = base_docs.select(F.col("nid"), F.col("nid").alias("component"))
 
     result = incremental_dedup_update(
-        base_docs, base_bands, prior, new_pages,
-        use_simhash_channel=False, min_jaccard=0.9)
+        base_docs, base_bands, prior, new_pages, min_jaccard=0.9)
 
     nid_x = base_docs.filter(F.col("urim").contains("x.example")) \
         .first()["nid"]
@@ -499,15 +565,14 @@ def test_incremental_update_reingest_verify_uses_new_tokens(spark):
 
 def test_incremental_update_matches_batch_recompute(spark, tmp_path):
     """Full e2e on sf0.001 pages: base batch deduped, delta folded in via
-    incremental_dedup_update == batch dedup_pipeline over base ∪ delta.
-    (Exact equivalence holds because no delta-touched bucket crosses the
-    cap at this SF — asserted inside.)"""
+    incremental_dedup_update == batch dedup_pipeline over base ∪ delta,
+    both candidate channels on both sides.  (Exact equivalence holds
+    because no delta-touched bucket crosses the cap at this SF — asserted
+    inside, over band and chunk buckets.)"""
     from off_topic_memento_toolkit_spark.operators.timeline import prepare_pages
-    from off_topic_memento_toolkit_spark.operators.verify import (
-        verified_pairs_jaccard,
-    )
     from off_topic_memento_toolkit_spark.plans.pipeline import dedup_pipeline
     from off_topic_memento_toolkit_spark.queries import pages_from_documents
+    from off_topic_memento_toolkit_spark.session import session_pins_scope
 
     pages = pages_from_documents(spark, SF_DIR)
     # deterministic split on the embedded doc timestamp (pages carry no
@@ -516,43 +581,35 @@ def test_incremental_update_matches_batch_recompute(spark, tmp_path):
     new_pages = pages.filter(delta_pred)
     base_pages = pages.filter(~delta_pred)
 
-    base_docs = prepare_pages(base_pages, need_tf_simhash=False).select(
-        F.xxhash64("urim").alias("nid"), "urim", "text", "tokens",
-        "raw_simhash").persist()
-    base_bands = minhash_band_table(
-        base_docs, id_col="nid", tokens_col="tokens").persist()
-    base_candidates = candidate_pairs_from_buckets(base_bands)
-    base_verified = verified_pairs_jaccard(
-        base_candidates, base_docs, id_col="nid", tokens_col="tokens",
-        min_jaccard=0.8).select("id_a", "id_b")
-    prior = attach_components(
-        base_docs.select("nid"), base_verified.select(
-            F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        id_col="nid").select(F.col("nid"), "component") \
-        .withColumnRenamed("nid", "id") \
-        .select(F.col("id").alias("nid"), "component")
+    def docs_of(df):
+        return prepare_pages(df, need_tf_simhash=False).select(
+            F.xxhash64("urim").alias("nid"), "urim", "text", "tokens",
+            "raw_simhash")
 
-    result = incremental_dedup_update(
-        base_docs, base_bands, prior, new_pages, use_simhash_channel=False)
-    got = {r.nid: r.component for r in result["assignments"].collect()}
+    with session_pins_scope():
+        base_docs = docs_of(base_pages).persist()
+        base_bands = minhash_band_table(
+            base_docs, id_col="nid", tokens_col="tokens").persist()
+        # the prior is a batch dedup of the base: both channels
+        prior = dedup_pipeline(base_pages).select(
+            F.xxhash64("urim").alias("nid"), "component")
 
-    # batch recompute over the union, minhash channel only (the incremental
-    # path under test is the minhash one)
-    full = dedup_pipeline(pages, use_simhash_channel=False)
-    all_docs = prepare_pages(pages, need_tf_simhash=False).select(
-        F.xxhash64("urim").alias("nid"), F.col("urim"))
-    want = {
-        r.nid: r.component
-        for r in full.join(all_docs, "urim").select("nid", "component").collect()
-    }
+        result = incremental_dedup_update(
+            base_docs, base_bands, prior, new_pages)
+        got = {r.nid: r.component for r in result["assignments"].collect()}
+
+        full = dedup_pipeline(pages)
+        want = {r.nid: r.component for r in full.select(
+            F.xxhash64("urim").alias("nid"), "component").collect()}
     assert got == want
 
-    # cap-precondition: no bucket over the union crosses max_bucket_size
-    union_bands = minhash_band_table(
-        prepare_pages(pages, need_tf_simhash=False).select(
-            F.xxhash64("urim").alias("nid"), "tokens"),
-        id_col="nid", tokens_col="tokens")
-    max_bucket = (union_bands.groupBy("band", "band_hash").count()
+    # cap-precondition: no band or chunk bucket over the union crosses
+    # max_bucket_size
+    union_docs = docs_of(pages)
+    union_keys = candidate_keys(
+        minhash_band_table(union_docs, id_col="nid", tokens_col="tokens"),
+        union_docs)
+    max_bucket = (union_keys.groupBy(*BUCKET_KEY).count()
                   .agg(F.max("count")).first()[0])
     assert max_bucket <= 64
     base_docs.unpersist()

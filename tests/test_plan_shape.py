@@ -11,6 +11,10 @@
 - LSH candidate generation contains no join (collect+expand shape), and
   operators/lsh.py is the only module that builds that shape or applies
   the hot-bucket cap;
+- the storeless dedup pipeline pairs both candidate channels through one
+  bucket exchange (3 hash exchanges in its candidate stage), and its band
+  UDF runs once over the docs pin with no inferred filter below the
+  exchange;
 - no Python node evaluates a Python UDF over another Python UDF's output
   in the detect report, story's metadata or the dedup docs stage, so each
   document crosses into Python once per pass;
@@ -23,6 +27,8 @@
 
 import pathlib
 import re
+
+import pytest
 
 import off_topic_memento_toolkit_spark as package
 from off_topic_memento_toolkit_spark.operators.lsh import (
@@ -192,6 +198,100 @@ def test_lsh_candidates_no_join(spark):
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 3
     # the spill-safe gate sits BEFORE the collect: Window below HashAggregate
     assert plan.index("HashAggregate") < plan.index("Window")  # printed top-down
+
+
+BUCKET_HASH = re.compile(r"hashpartitioning\(key#\d+, value#\d+L?, \d+\)")
+
+
+def _stage_nodes(plan):
+    """Every node of a JVM physical plan once, adaptive plans and query
+    stages included, stopping at cached relations (their own plans are
+    not part of the stage)."""
+    nodes, seen, stack = [], set(), [plan]
+    while stack:
+        node = _unwrapped(stack.pop())
+        if node.id() in seen:
+            continue
+        seen.add(node.id())
+        nodes.append(node)
+        if node.nodeName() != "InMemoryTableScan":
+            stack += _seq(node.children())
+    return nodes
+
+
+def _feeding_exchange(node):
+    """The first exchange down ``node``'s one input chain."""
+    while node.nodeName() != "Exchange":
+        (child,) = _seq(node.children())
+        node = _unwrapped(child)
+    return node
+
+
+@pytest.fixture(scope="module")
+def dedup_candidate_stage(spark):
+    """The nodes of the executed candidate stage of one storeless
+    ``dedup_pipeline`` run: the plan that fills its candidates pin, down to
+    the docs pin."""
+    from off_topic_memento_toolkit_spark.plans.pipeline import dedup_pipeline
+    from off_topic_memento_toolkit_spark.session import (
+        _SESSION_PINS,
+        session_pins_scope,
+    )
+    from off_topic_memento_toolkit_spark.sources.datagen import generate_pages
+
+    pages = generate_pages(spark, n_urls=12, mementos_per_url=4, skew=False,
+                           error_rows=False, dup_rate=0.6)
+    with session_pins_scope():
+        earlier = list(_SESSION_PINS)
+        dedup_pipeline(pages).collect()
+        (candidates,) = [df for df in _SESSION_PINS
+                         if not any(df is e for e in earlier)
+                         and df.columns == ["id_a", "id_b"]]
+        assert candidates.count()  # AQE prunes the stages of empty inputs
+        scan = _unwrapped(_jplan(candidates))
+        return _stage_nodes(scan.relation().cachedPlan())
+
+
+def test_dedup_candidates_one_bucket_exchange(dedup_candidate_stage):
+    """Both channels' keys go through one exchange on the bucket key, which
+    feeds the size-gate window and the collect_list; the member-set and
+    pair distincts are the stage's only other hash exchanges."""
+    nodes = dedup_candidate_stage
+    hashed = [node for node in nodes if node.nodeName() == "Exchange"
+              and node.outputPartitioning().toString()
+              .startswith("hashpartitioning")]
+    assert len(hashed) == 3, [n.outputPartitioning().toString()
+                              for n in hashed]
+    bucket = [node for node in hashed
+              if BUCKET_HASH.fullmatch(node.outputPartitioning().toString())]
+    assert len(bucket) == 1, [n.outputPartitioning().toString()
+                              for n in hashed]
+    gates = [node for node in nodes if node.nodeName() == "Window"]
+    collects = [node for node in nodes
+                if node.nodeName().endswith("HashAggregate")
+                and "collect_list(" in node.simpleString(25)]
+    assert len(gates) == 1 and collects
+    assert all(_feeding_exchange(node).id() == bucket[0].id()
+               for node in gates + collects)
+
+
+def test_dedup_band_udf_runs_once_over_the_docs_pin(dedup_candidate_stage):
+    """Guards the session's InferFiltersFromGenerate exclusion: without it
+    the optimizer infers a non-empty filter on the band UDF's array below
+    the band explode and pushes it onto the docs pin, so the band UDF is
+    evaluated twice per document."""
+    nodes = dedup_candidate_stage
+    band_nodes = [node for node in nodes
+                  if node.nodeName() == "ArrowEvalPython"
+                  and any("minhash_bands_udf" in udf.toString()
+                          for udf in _seq(node.udfs()))]
+    assert len(band_nodes) == 1, [n.simpleString(25) for n in band_nodes]
+    (bucket,) = [node for node in nodes if node.nodeName() == "Exchange"
+                 and BUCKET_HASH.fullmatch(
+                     node.outputPartitioning().toString())]
+    filters = [node.simpleString(25) for node in _stage_nodes(bucket)
+               if node.nodeName() == "Filter"]
+    assert not filters, filters
 
 
 def test_only_lsh_turns_buckets_into_pairs():
