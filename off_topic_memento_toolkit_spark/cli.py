@@ -17,6 +17,7 @@ from pyspark.sql import SparkSession
 from .operators.measures import MEASURE_REGISTRY
 from .plans.checkpoints import CheckpointStore
 from .plans.pipeline import dedup_pipeline, detect_off_topic, story_pipeline
+from .plans.promote import SIG_PARAMS, check_params, write_params
 from .session import get_spark, pin_for_session, session_pins_scope
 from .sources.sinks import (
     REPORT_WRITERS,
@@ -132,91 +133,6 @@ def _make_store(spark, checkpoint_dir, catalog, run_id, required_by=None):
             f"{required_by} needs a checkpoint backend: pass "
             f"--base-checkpoint-dir (parquet) or --base-catalog (Iceberg)")
     return None
-
-
-_SIG_PARAMS = ("num_perm", "bands", "shingle_words")
-
-
-def _write_params_stage(spark, store, args):
-    """Pin the signature hyperparameters into the checkpoint as a one-row
-    `params` stage (works on both backends): an ingest with mismatched
-    --num-perm/--bands/--shingle-words would compute delta band hashes in
-    a DIFFERENT space than the stored base table and silently find zero
-    base-delta duplicates."""
-    if store is None or store.is_committed("params"):
-        return
-    row = [tuple(int(getattr(args, p)) for p in _SIG_PARAMS)]
-    store.write(
-        spark.createDataFrame(row, ", ".join(f"{p} int"
-                                             for p in _SIG_PARAMS)),
-        "params")
-
-
-def _check_params_stage(store, args, command):
-    if not store.is_committed("params"):
-        print(f"warning: base checkpoint has no `params` stage (built by "
-              f"an older dedup); cannot verify that --num-perm/--bands/"
-              f"--shingle-words match the stored band table",
-              file=sys.stderr)
-        return
-    stored = store.read("params").first()
-    mismatches = [
-        f"--{p.replace('_', '-')} {getattr(args, p)} != stored {stored[p]}"
-        for p in _SIG_PARAMS if int(getattr(args, p)) != int(stored[p])
-    ]
-    if mismatches:
-        raise SystemExit(
-            f"{command}: signature parameters do not match the base "
-            f"checkpoint's band table ({'; '.join(mismatches)}) — delta "
-            f"hashes would live in a different space and find no "
-            f"base-delta duplicates; pass the stored values")
-
-
-def _check_promote_consistency(store):
-    """O(1) mid-promote crash detection: promote writes docs first and
-    clusters last, so any partial promote leaves their committed row
-    counts unequal (each individual write is atomic; the four-stage
-    sequence is not)."""
-    docs_rows = store.marker("docs").get("rows")
-    clusters_rows = store.marker("clusters").get("rows")
-    if docs_rows is not None and clusters_rows is not None \
-            and docs_rows != clusters_rows:
-        raise SystemExit(
-            f"base checkpoint is mid-promote inconsistent (docs has "
-            f"{docs_rows} rows, clusters {clusters_rows}) — a previous "
-            f"--promote crashed between stage commits; re-run the "
-            f"interrupted ingest/takedown with the SAME batch plus "
-            f"--repair to finish it (the re-ingest guards make the retry "
-            f"converge)")
-
-
-def _promote_stages_bucketed(store) -> bool:
-    """True when every promote-mutated stage carries a bucketed layout —
-    the row-level merge path (O(touched buckets) writes).  Legacy
-    checkpoints written before bucketing fall back to full rewrites."""
-    try:
-        return all(store.marker(s).get("bucket_by")
-                   for s in ("docs", "bands", "verified_edges", "clusters"))
-    except Exception:  # noqa: BLE001 — missing marker → legacy path
-        return False
-
-
-def _pin_promote_frames(store, frames: dict) -> dict:
-    """Pin EVERY frame a multi-stage promote will write, BEFORE the first
-    write.  Two Iceberg hazards force this: (a) createOrReplace of a table
-    the plan also scans is a self-referencing RTAS with runtime-dependent
-    snapshot semantics, and (b) a later write's plan may scan a table an
-    EARLIER write already replaced (Iceberg reads resolve at execution
-    time, so e.g. the bands write would see the post-replace docs table
-    and anti-join the whole batch away).  localCheckpoint materializes
-    each plan against the PRE-promote state.  The parquet store is immune
-    — its read() pins a version directory at call time — so frames pass
-    through lazily there."""
-    from .plans.checkpoints import IcebergCheckpointStore
-
-    if isinstance(store, IcebergCheckpointStore):
-        return {name: df.localCheckpoint() for name, df in frames.items()}
-    return frames
 
 
 def main(argv=None, spark=None):
@@ -413,11 +329,7 @@ def main(argv=None, spark=None):
         if not _os.path.isdir(args.checkpoint_dir):
             raise SystemExit(
                 f"no such checkpoint dir: {args.checkpoint_dir}")
-
-        class _Root:
-            root = args.checkpoint_dir
-
-        print(_json.dumps(pipeline_metrics(_Root()), indent=2))
+        print(_json.dumps(pipeline_metrics(args.checkpoint_dir), indent=2))
         return
 
     owns_session = spark is None
@@ -464,15 +376,15 @@ def _run(args, spark):
         pages = _apply_consider(spark, pages, args.consider)
         store = _make_store(spark, args.checkpoint_dir, args.catalog,
                             args.run_id)
+        sig = {p: getattr(args, p) for p in SIG_PARAMS}
         if store is not None and store.is_committed("params"):
             # a resumed run REUSES committed stages, so its effective
             # signature space is the first run's — flags that disagree
             # with the pinned params would silently mix band spaces
-            _check_params_stage(store, args, "dedup (resume)")
-        _write_params_stage(spark, store, args)
+            check_params(store, sig, "dedup (resume)")
+        write_params(store, sig)
         clusters = dedup_pipeline(
-            pages, store=store, num_perm=args.num_perm, bands=args.bands,
-            shingle_words=args.shingle_words, min_jaccard=args.min_jaccard,
+            pages, store=store, **sig, min_jaccard=args.min_jaccard,
             verify_method=args.verify_method,
             input_scan_expensive=args.input.startswith("warc:"),
             state_buckets=args.state_buckets,
@@ -480,237 +392,28 @@ def _run(args, spark):
         clusters.write.mode("overwrite").parquet(args.output)
 
     elif args.command == "ingest":
-        from pyspark.sql import functions as F
-
-        from .operators.incremental import incremental_dedup_update
+        from .plans.promote import ingest
 
         new_pages, _ = _read_pages(spark, args.input)
         base = _make_store(spark, args.base_checkpoint_dir,
                            args.base_catalog, args.base_run_id,
                            required_by="ingest")
-        required_stages = ["docs", "bands", "clusters"]
-        if args.promote:
-            # the promoted state must stay takedown-ready: the increment's
-            # verified edges are appended into the base evidence table
-            required_stages.append("verified_edges")
-        for required in required_stages:
-            if not base.is_committed(required):
-                raise SystemExit(
-                    f"base checkpoint has no committed {required!r} stage — "
-                    f"run `dedup --checkpoint-dir` over the corpus first")
-        _check_params_stage(base, args, "ingest")
-        if not args.repair:
-            _check_promote_consistency(base)
-        base_docs = base.read("docs")
-        base_bands = base.read("bands")
-        prior = base.read("clusters").select(
-            F.xxhash64("urim").alias("nid"), "component")
-        inc_store = _make_store(spark, args.checkpoint_dir,
-                                getattr(args, "catalog", None), args.run_id)
-        result = incremental_dedup_update(
-            base_docs, base_bands, prior, new_pages, store=inc_store,
-            num_perm=args.num_perm, bands=args.bands,
-            shingle_words=args.shingle_words, min_jaccard=args.min_jaccard,
-            input_scan_expensive=args.input.startswith("warc:"),
-            with_delta=args.promote and _promote_stages_bucketed(base))
-        # dropDuplicates guards the re-ingest case (a urim present in BOTH
-        # base and batch would otherwise fan the join out to duplicate
-        # output rows; the assignment itself already lists each id once)
-        urims = base_docs.select("nid", "urim").unionByName(
-            result["docs"].select("nid", "urim")).dropDuplicates(["nid"])
-        merged = result["assignments"].join(urims, "nid") \
-            .select("urim", "component")
-        merged.write.mode("overwrite").parquet(args.output)
-        if args.promote:
-            # same guard for the promoted state: re-ingested ids must not
-            # duplicate their docs/bands rows.  Each stage's known set is
-            # derived from THAT stage's own table (base ∩ batch ids, found
-            # map-only: broadcast semi over the base table, batch-sized
-            # result) — NOT from docs alone: a crash between the docs and
-            # bands commits leaves the batch present in docs but absent
-            # from bands, and a docs-derived guard would make the --repair
-            # rerun drop the batch's band rows forever (bands would then
-            # silently miss every future near-dup against this batch).
-            # Re-ingest content assumption: urim ≡ (url, warc_ts), so a
-            # re-ingested id names the SAME capture and its payload is
-            # assumed identical — the promote keeps the base's existing
-            # docs/bands rows.  (The increment's own candidate/verify
-            # stages use the new rows either way; see
-            # operators/incremental.py's re-ingest rule.)
-            batch_ids = result["docs"].select("nid").distinct()
-            known_doc_ids = base_docs.select("nid").join(
-                F.broadcast(batch_ids), "nid", "left_semi")
-            fresh_docs = result["docs"].join(
-                F.broadcast(known_doc_ids), "nid", "left_anti")
-            known_band_ids = base_bands.select("id").join(
-                F.broadcast(batch_ids.withColumnRenamed("nid", "id")),
-                "id", "left_semi").distinct()
-            fresh_bands = result["bands"].join(
-                F.broadcast(known_band_ids), "id", "left_anti")
-            # evidence table too — a later `takedown` repairs clusters from
-            # verified_edges, and the delta's pairs must be in it or a
-            # takedown inside the merged clusters would silently drop the
-            # increment's connectivity.  ALL frames are pinned BEFORE the
-            # first write: a later write's plan must never re-read a table
-            # an earlier write already replaced.
-            if _promote_stages_bucketed(base):
-                # row-level merge path: each stage write touches only the
-                # buckets the batch's keys hash into — the promote is
-                # O(delta), never a corpus rewrite.  Order (docs first,
-                # clusters last) preserves the mid-promote crash detector.
-                frames = _pin_promote_frames(base, {
-                    "docs": fresh_docs,
-                    "bands": fresh_bands,
-                    "verified_edges":
-                        result["verified"].select("id_a", "id_b"),
-                    # changed base labels + the batch — O(delta)
-                    "clusters": result["assignments_delta"]
-                        .join(urims, "nid").select("urim", "component"),
-                })
-                base.merge("docs", changes=frames["docs"],
-                           insert_only=True)
-                base.merge("bands", changes=frames["bands"],
-                           insert_only=True)
-                # insert-if-absent on the full pair key: a re-ingested
-                # pair may be rediscovered and must not duplicate
-                base.merge("verified_edges",
-                           changes=frames["verified_edges"],
-                           insert_only=True, on=["id_a", "id_b"])
-                base.merge("clusters", changes=frames["clusters"])
-            else:
-                frames = _pin_promote_frames(base, {
-                    "docs": base_docs.unionByName(fresh_docs),
-                    "bands": base_bands.unionByName(fresh_bands),
-                    "verified_edges":
-                        base.read("verified_edges").select("id_a", "id_b")
-                        .unionByName(result["verified"]
-                                     .select("id_a", "id_b"))
-                        .distinct(),
-                    "clusters": merged,
-                })
-                for stage_name in ("docs", "bands", "verified_edges",
-                                   "clusters"):
-                    base.write(frames[stage_name], stage_name)
+        ingest(base, new_pages, args.output,
+               inc_store=_make_store(spark, args.checkpoint_dir,
+                                     args.catalog, args.run_id),
+               num_perm=args.num_perm, bands=args.bands,
+               shingle_words=args.shingle_words, min_jaccard=args.min_jaccard,
+               input_scan_expensive=args.input.startswith("warc:"),
+               promote=args.promote, repair=args.repair)
 
     elif args.command == "takedown":
-        from pyspark.sql import functions as F
-
-        from .operators.incremental import incremental_remove
+        from .plans.promote import takedown
 
         base = _make_store(spark, args.base_checkpoint_dir,
                            args.base_catalog, args.base_run_id,
                            required_by="takedown")
-        # the label repair itself reads only clusters + verified_edges;
-        # docs/bands are touched (purged) only under --promote
-        required_stages = ["verified_edges", "clusters"]
-        if args.promote:
-            required_stages += ["docs", "bands"]
-        for required in required_stages:
-            if not base.is_committed(required):
-                raise SystemExit(
-                    f"base checkpoint has no committed {required!r} stage — "
-                    f"run `dedup --checkpoint-dir` over the corpus first")
-        if not args.repair:
-            # even a label-only repair reads clusters + verified_edges,
-            # which a crashed promote leaves mutually inconsistent (edges
-            # referencing nids the stale clusters never assigned); the
-            # check needs the docs marker, present whenever dedup built
-            # the checkpoint
-            if base.is_committed("docs"):
-                _check_promote_consistency(base)
-        removed_urims = _read_consider(spark, args.remove)
-        removed_nids = removed_urims.select(
-            F.xxhash64("urim").alias("id")).distinct()
-        clusters = base.read("clusters")
-        assignments = clusters.select(
-            F.xxhash64("urim").alias("id"), "component")
-        # a deletion command must not silently no-op: report the match
-        # rate, and hard-fail when NOTHING matched (stale list, wrong
-        # file, or a formatting issue the trim did not cover)
-        n_listed = removed_urims.count()
-        n_matched = assignments.join(
-            F.broadcast(removed_nids), "id", "left_semi").count()
-        if n_listed and not n_matched:
-            raise SystemExit(
-                f"takedown: 0 of {n_listed} removal entries match any "
-                f"document in the base clusters — nothing would be "
-                f"deleted; check the list against the corpus URI-Ms")
-        print(f"takedown: {n_matched} of {n_listed} removal entries "
-              f"matched", file=sys.stderr)
-        result = incremental_remove(
-            assignments, base.read("verified_edges"), removed_nids,
-            with_delta=True)
-        updated = result["assignments"]
-        id_to_urim = clusters.select(F.xxhash64("urim").alias("id"), "urim")
-        merged = updated.join(id_to_urim, "id").select("urim", "component")
-        merged.write.mode("overwrite").parquet(args.output)
-        if args.promote:
-            # the actual deletion: purge the document payloads and
-            # signatures, not just the labels.  Dead edges MUST go too: an
-            # edge with one deleted endpoint would, in a later takedown's
-            # cluster repair, reconnect survivors through a ghost node
-            # (incremental_remove assumes the edges table references only
-            # live documents).
-            if _promote_stages_bucketed(base):
-                # row-level merge path: deletes + the repaired members'
-                # relabels touch only their hash buckets — O(touched
-                # clusters), never a corpus rewrite.  The dead-edge key
-                # set is found with a map-only pass (broadcast semi-joins
-                # on either endpoint; both endpoints of a verified edge
-                # share a component, so the result is takedown-sized) —
-                # the pair keys then localize the deletes to the id_a
-                # buckets.
-                edges_now = base.read("verified_edges")
-                rm_a = removed_nids.withColumnRenamed("id", "id_a")
-                rm_b = removed_nids.withColumnRenamed("id", "id_b")
-                dead_edges = (
-                    edges_now.join(F.broadcast(rm_a), "id_a", "left_semi")
-                    .unionByName(
-                        edges_now.join(F.broadcast(rm_b), "id_b",
-                                       "left_semi"))
-                    .select("id_a", "id_b").distinct()
-                )
-                frames = _pin_promote_frames(base, {
-                    "clusters_delta": result["delta"]
-                        .join(id_to_urim, "id").select("urim", "component"),
-                    "dead_edges": dead_edges,
-                    "removed_nids": removed_nids,
-                    "removed_urims": removed_urims,
-                })
-                base.merge("docs",
-                           delete_keys=frames["removed_nids"]
-                           .withColumnRenamed("id", "nid"))
-                base.merge("bands", delete_keys=frames["removed_nids"])
-                base.merge("verified_edges",
-                           delete_keys=frames["dead_edges"],
-                           on=["id_a", "id_b"])
-                base.merge("clusters", changes=frames["clusters_delta"],
-                           delete_keys=frames["removed_urims"]
-                           .select("urim"))
-            else:
-                purged_docs = base.read("docs").join(
-                    F.broadcast(removed_urims), "urim", "left_anti")
-                purged_bands = base.read("bands").join(
-                    F.broadcast(removed_nids.withColumnRenamed("id", "nid")),
-                    F.col("id") == F.col("nid"), "left_anti")
-                purged_edges = (
-                    base.read("verified_edges")
-                    .join(F.broadcast(removed_nids
-                                      .withColumnRenamed("id", "id_a")),
-                          "id_a", "left_anti")
-                    .join(F.broadcast(removed_nids
-                                      .withColumnRenamed("id", "id_b")),
-                          "id_b", "left_anti")
-                )
-                frames = _pin_promote_frames(base, {
-                    "docs": purged_docs,
-                    "bands": purged_bands,
-                    "verified_edges": purged_edges,
-                    "clusters": merged,
-                })
-                for stage_name in ("docs", "bands", "verified_edges",
-                                   "clusters"):
-                    base.write(frames[stage_name], stage_name)
+        takedown(base, _read_consider(spark, args.remove), args.output,
+                 promote=args.promote, repair=args.repair)
 
     elif args.command == "stats":
         from pyspark.sql import functions as F
@@ -795,29 +498,19 @@ def _run(args, spark):
             spark, args.input, watermark=args.watermark,
             outputs=MODE_OUTPUTS[args.mode])
         if args.mode == "candidates":
+            from .plans.promote import check_base_stages, stored_params
             from .streaming.ingest import streaming_incremental_candidates
 
             base = _make_store(spark, args.base_checkpoint_dir,
                                args.base_catalog, args.base_run_id,
                                required_by="stream --mode candidates")
-            if not base.is_committed("bands"):
-                raise SystemExit(
-                    "base checkpoint has no committed 'bands' stage — run "
-                    "`dedup --checkpoint-dir` over the corpus first")
+            check_base_stages(base, ["bands"])
             # the delta's band hashes MUST live in the base table's
             # signature space: read the pinned hyperparameters from the
-            # checkpoint (there is exactly one right answer, so no flags)
-            sig = {}
-            if base.is_committed("params"):
-                stored = base.read("params").first()
-                sig = {p: int(stored[p]) for p in _SIG_PARAMS}
-            else:
-                print("warning: base checkpoint has no `params` stage "
-                      "(older dedup); assuming default signature "
-                      "parameters — a non-default base yields zero "
-                      "candidates", file=sys.stderr)
+            # checkpoint (there is exactly one right answer, so no flags;
+            # an older base without them gets the defaults)
             out = streaming_incremental_candidates(
-                enriched, base.read("bands"), **sig)
+                enriched, base.read("bands"), **(stored_params(base) or {}))
         elif args.mode == "dedup":
             out = streaming_sequential_dedup(enriched)
         elif args.mode == "rates":

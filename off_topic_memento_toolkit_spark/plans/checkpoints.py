@@ -214,8 +214,8 @@ class CheckpointStore:
         if not bucket_by:
             raise ValueError(
                 f"stage {stage!r} is not bucketed — merge needs a layout "
-                f"written with write(..., bucket_by=...); use write() for "
-                f"a full rewrite")
+                f"written with write(..., bucket_by=...); rebuild the stage "
+                f"bucketed (for the corpus state: `dedup --checkpoint-dir`)")
         on = list(on or bucket_by)
         missing = [c for c in bucket_by if c not in on]
         if missing:

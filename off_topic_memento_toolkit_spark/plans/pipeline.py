@@ -27,6 +27,7 @@ from ..operators.lsh import candidate_keys, candidate_pairs, minhash_band_table
 from ..operators.measures import overall_status, scores_with_metadata
 from ..operators.timeline import prepare_pages
 from ..operators.verify import verified_pairs_jaccard, verified_pairs_lcs
+from .promote import STATE_STAGES
 
 
 def detect_off_topic(
@@ -158,7 +159,7 @@ def dedup_pipeline(
     ``store``: optional :class:`..plans.checkpoints.CheckpointStore`; when
     given, each stage becomes a committed, resumable table.  The four
     corpus-state stages an ingest/takedown promote later mutates
-    (docs/bands/verified_edges/clusters) are written hash-BUCKETED on their
+    (:data:`.promote.STATE_STAGES`) are written hash-BUCKETED on their
     key (``state_buckets`` buckets) so the promote runs as a row-level
     ``merge`` — rewriting only the touched buckets, never the corpus.  At
     10^12 docs size ``state_buckets`` so one bucket is a few GB.
@@ -167,20 +168,13 @@ def dedup_pipeline(
     # for a run that cannot finish
     if verify_method not in ("jaccard", "lcs"):
         raise ValueError(f"unknown verify_method {verify_method!r}")
-    # key-clustered layouts for the mutable corpus state; intermediate
-    # stages (candidates, CC iterations) are write-once → unbucketed
-    bucket_specs = {
-        "docs": ["nid"],
-        "bands": ["id"],
-        "verified_edges": ["id_a"],
-        "clusters": ["urim"],
-    }
-
     def stage(name, build):
         if store is None:
             return build()
+        # key-clustered layouts for the mutable corpus state; intermediate
+        # stages (candidates, CC iterations) are write-once → unbucketed
         return store.run_stage(name, build,
-                               bucket_by=bucket_specs.get(name),
+                               bucket_by=STATE_STAGES.get(name),
                                num_buckets=state_buckets)
 
     docs = stage("docs", lambda: dedup_docs(pages, input_scan_expensive))
@@ -293,9 +287,10 @@ def dedup_pipeline(
     return stage("clusters", build_clusters)
 
 
-def pipeline_metrics(store) -> list:
-    """Per-stage metrics table from the committed markers (north_rule
-    "per-partition lineage + metrics"): one dict per committed stage with
+def pipeline_metrics(root: str) -> list:
+    """Per-stage metrics table from the committed markers of the parquet
+    checkpoint directory ``root`` (north_rule "per-partition lineage +
+    metrics"): one dict per committed stage with
     rows, partitions, snapshot version, commit order, and the min/max
     per-partition row counts (skew visibility)."""
     import glob
@@ -303,7 +298,7 @@ def pipeline_metrics(store) -> list:
     import os
 
     out = []
-    for marker_path in glob.glob(os.path.join(store.root, "*._COMMIT.json")):
+    for marker_path in glob.glob(os.path.join(root, "*._COMMIT.json")):
         with open(marker_path) as fh:
             marker = json.load(fh)
         per_part = [p["rows"] for p in marker.get("per_partition_rows", [])]

@@ -850,7 +850,7 @@ def test_partitioned_layout_prunes_and_metrics_surface(spark, tmp_path):
 
     store = CheckpointStore(spark, str(tmp_path / "ck"), run_id="r1")
     dedup_pipeline(pages, store=store).collect()
-    metrics = pipeline_metrics(store)
+    metrics = pipeline_metrics(store.root)
     stages = [m["stage"] for m in metrics]
     assert {"docs", "candidate_edges", "verified_edges", "clusters"} \
         <= set(stages)
