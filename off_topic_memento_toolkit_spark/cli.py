@@ -135,6 +135,23 @@ def _make_store(spark, checkpoint_dir, catalog, run_id, required_by=None):
     return None
 
 
+def _consider_argument(parser):
+    parser.add_argument("-c", "--consider",
+                        help="consideration list (text of URI-Ms, e.g. from "
+                             "the filter subcommand); restricts processing "
+                             "to the listed mementos (F4 broadcast "
+                             "semi-join)")
+
+
+def _signature_arguments(parser):
+    """The MinHash signature and verify settings a dedup base and every
+    ingest into it share."""
+    parser.add_argument("--num-perm", type=int, default=128)
+    parser.add_argument("--bands", type=int, default=32)
+    parser.add_argument("--shingle-words", type=int, default=5)
+    parser.add_argument("--min-jaccard", type=float, default=0.8)
+
+
 def main(argv=None, spark=None):
     """``spark=None`` creates (and stops) its own session — the spark-submit
     path; tests pass their shared session, which is left running."""
@@ -143,11 +160,7 @@ def main(argv=None, spark=None):
 
     detect = sub.add_parser("detect", help="off-topic detection")
     detect.add_argument("-i", "--input", required=True)
-    detect.add_argument("-c", "--consider",
-                        help="consideration list (text of URI-Ms, e.g. from "
-                             "the filter subcommand); restricts processing "
-                             "to the listed mementos (F4 broadcast "
-                             "semi-join)")
+    _consider_argument(detect)
     detect.add_argument("-o", "--output", required=True)
     detect.add_argument("-ot", "--output-type", default="json",
                         choices=list(REPORT_WRITERS))
@@ -157,11 +170,7 @@ def main(argv=None, spark=None):
 
     dedup = sub.add_parser("dedup", help="near-duplicate clustering at scale")
     dedup.add_argument("-i", "--input", required=True)
-    dedup.add_argument("-c", "--consider",
-                        help="consideration list (text of URI-Ms, e.g. from "
-                             "the filter subcommand); restricts processing "
-                             "to the listed mementos (F4 broadcast "
-                             "semi-join)")
+    _consider_argument(dedup)
     dedup.add_argument("-o", "--output", required=True)
     dedup.add_argument("--checkpoint-dir")
     dedup.add_argument("--catalog",
@@ -169,11 +178,7 @@ def main(argv=None, spark=None):
                             "(needs the runtime jar; same snapshot "
                             "contract as --checkpoint-dir)")
     dedup.add_argument("--run-id", default="run-0")
-    dedup.add_argument("--num-perm", type=int, default=128)
-    dedup.add_argument("--bands", type=int, default=32)
-    dedup.add_argument("--shingle-words", type=int, default=5)
-    dedup.add_argument("--min-jaccard", type=float, default=0.8)
-
+    _signature_arguments(dedup)
     dedup.add_argument("--verify-method", default="jaccard",
                        choices=["jaccard", "lcs"])
     dedup.add_argument("--state-buckets", type=int, default=32,
@@ -185,22 +190,14 @@ def main(argv=None, spark=None):
 
     story = sub.add_parser("story", help="curation chain (dedup/slice/cluster/pick)")
     story.add_argument("-i", "--input", required=True)
-    story.add_argument("-c", "--consider",
-                        help="consideration list (text of URI-Ms, e.g. from "
-                             "the filter subcommand); restricts processing "
-                             "to the listed mementos (F4 broadcast "
-                             "semi-join)")
+    _consider_argument(story)
     story.add_argument("-o", "--output", required=True)
 
     stats = sub.add_parser(
         "stats", help="training-data text screens: language-ID, quality "
                       "features, token counts, fingerprints")
     stats.add_argument("-i", "--input", required=True)
-    stats.add_argument("-c", "--consider",
-                        help="consideration list (text of URI-Ms, e.g. from "
-                             "the filter subcommand); restricts processing "
-                             "to the listed mementos (F4 broadcast "
-                             "semi-join)")
+    _consider_argument(stats)
     stats.add_argument("-o", "--output", required=True)
     stats.add_argument("--quality-only", action="store_true",
                        help="emit only rows passing the quality screens")
@@ -251,10 +248,7 @@ def main(argv=None, spark=None):
                         help="Iceberg catalog[.namespace] for the "
                              "increment's own stages")
     ingest.add_argument("--run-id", default="inc-0")
-    ingest.add_argument("--num-perm", type=int, default=128)
-    ingest.add_argument("--bands", type=int, default=32)
-    ingest.add_argument("--shingle-words", type=int, default=5)
-    ingest.add_argument("--min-jaccard", type=float, default=0.8)
+    _signature_arguments(ingest)
     ingest.add_argument("--repair", action="store_true",
                         help="bypass the mid-promote-inconsistency guard "
                              "when RE-RUNNING the interrupted batch (the "

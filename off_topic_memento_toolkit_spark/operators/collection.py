@@ -18,6 +18,7 @@ extraction get error rows and do NOT contribute tokens.
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .measures_constants import ROW_BP_ERROR_MSG
 from .timeline import prepare_pages
 
 COLLECTION_THRESHOLDS = {  # otmt/collection_measures.py:195-214
@@ -55,7 +56,7 @@ def score_collection_measures(
 
     error = F.when(
         F.col("tokens").isNull(),
-        F.lit("Boilerplate could not be removed from memento"),
+        F.lit(ROW_BP_ERROR_MSG),
     )
     entries = []
     for measure in measures:

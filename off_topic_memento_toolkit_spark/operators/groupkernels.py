@@ -1,10 +1,15 @@
-"""Per-timeline group kernels: TF-IDF cosine and LSI similarity-to-first.
+"""Per-timeline group kernels: TF-IDF cosine, LSI and LDA similarity-to-first.
 
-These are the two measures whose fit spans the WHOLE timeline (vocabulary /
+These are the three measures whose fit spans the WHOLE timeline (vocabulary /
 IDF / SVD over all documents of a url), so they run as grouped-map pandas
 kernels over ``groupBy(urit)`` (``applyInPandas``) — the one place the
 reference's buffering design (otmt/timemap_measures.py:628,647,792,814) is
 semantically required.
+
+Per timeline the kernel sorts, gates on the first memento and applies the
+document cap once, then builds one term-count matrix per token column
+(:func:`_count_matrix`) that every measure fitting over that column shares;
+each fit is a function of the count matrix (:data:`GROUP_MEASURES`).
 
 Numerics:
 - cosine reproduces sklearn ``TfidfVectorizer(tokenizer=full_tokenize)`` +
@@ -31,16 +36,18 @@ pairwise functions gate on token emptiness.  Do not "unify" the two gates;
 parity requires mirroring each family's own rule.
 """
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .measures_constants import (
     FIRST_BP_ERROR_MSG,
     FIRST_EMPTY_MSG,
     GROUP_SCORES_SCHEMA,
+    ROW_BP_ERROR_MSG,
 )
 
 _SCHEMA = GROUP_SCORES_SCHEMA
@@ -61,59 +68,51 @@ def _rows(urit, urims, measure, scores=None, error=None):
     })
 
 
-def _tfidf_cosine(token_lists):
-    """sklearn-formula TF-IDF + cosine of row 0 vs all rows."""
-    vocab = sorted({t for tokens in token_lists for t in tokens})
-    if not vocab:
+def _count_matrix(token_lists):
+    """Dense n×V float64 term counts of a timeline's token lists, columns in
+    sorted-vocabulary order: ONE hash factorization of all its tokens (only
+    the V distinct terms are sorted) and one ``bincount`` — the single
+    place a vocabulary is built."""
+    lengths = [len(tokens) for tokens in token_lists]
+    if not sum(lengths):
         raise ValueError("empty vocabulary")
-    index = {t: i for i, t in enumerate(vocab)}
-    n = len(token_lists)
-    X = np.zeros((n, len(vocab)), dtype=np.float64)
-    for row, tokens in enumerate(token_lists):
-        for t in tokens:
-            X[row, index[t]] += 1.0
-    df = (X > 0).sum(axis=0)
-    idf = np.log((1.0 + n) / (1.0 + df)) + 1.0
-    X *= idf
-    norms = np.linalg.norm(X, axis=1)
-    norms[norms == 0] = 1.0
-    X /= norms[:, None]
-    return X @ X[0]
+    codes, vocab = pd.factorize(
+        np.concatenate([np.asarray(t, dtype=object) for t in token_lists]),
+        sort=True)
+    n, v = len(token_lists), len(vocab)
+    rows = np.repeat(np.arange(n), lengths)
+    return np.bincount(rows * v + codes, minlength=n * v) \
+        .reshape(n, v).astype(np.float64)
 
 
-def _lsi_similarity(token_lists, num_topics):
-    """Exact truncated-SVD projection; cosine of each doc to doc 0."""
-    vocab = sorted({t for tokens in token_lists for t in tokens})
-    if not vocab:
-        raise ValueError("empty vocabulary")
-    index = {t: i for i, t in enumerate(vocab)}
-    n = len(token_lists)
-    X = np.zeros((n, len(vocab)), dtype=np.float64)
-    for row, tokens in enumerate(token_lists):
-        for t in tokens:
-            X[row, index[t]] += 1.0
-    k = min(num_topics, min(X.shape))
-    # exact SVD; projection onto top-k right-singular basis
-    _, _, vt = np.linalg.svd(X, full_matrices=False)
-    proj = X @ vt[:k].T
-    norms = np.linalg.norm(proj, axis=1)
+def _cosine_to_first(vectors):
+    """Cosine of every row of ``vectors`` to row 0 (zero rows score 0)."""
+    norms = np.linalg.norm(vectors, axis=1)
     norms[norms == 0] = 1.0
-    unit = proj / norms[:, None]
+    unit = vectors / norms[:, None]
     return unit @ unit[0]
 
 
-def _lda_similarity(token_lists, num_topics, seed=42, iterations=50):
+def _tfidf_cosine(counts):
+    """sklearn-formula TF-IDF + cosine of row 0 vs all rows."""
+    n = counts.shape[0]
+    df = (counts > 0).sum(axis=0)
+    idf = np.log((1.0 + n) / (1.0 + df)) + 1.0
+    return _cosine_to_first(counts * idf)
+
+
+def _lsi_similarity(counts, num_topics):
+    """Exact truncated-SVD projection; cosine of each doc to doc 0."""
+    k = min(num_topics, min(counts.shape))
+    # exact SVD; projection onto top-k right-singular basis
+    _, _, vt = np.linalg.svd(counts, full_matrices=False)
+    return _cosine_to_first(counts @ vt[:k].T)
+
+
+def _lda_similarity(counts, num_topics, seed=42, iterations=50):
     """Deterministic seeded LDA-ish topic mixture + cosine to doc 0.
     Parity with gensim is explicitly out of scope (non-deterministic there)."""
-    vocab = sorted({t for tokens in token_lists for t in tokens})
-    if not vocab:
-        raise ValueError("empty vocabulary")
-    index = {t: i for i, t in enumerate(vocab)}
-    n, v = len(token_lists), len(vocab)
-    X = np.zeros((n, v), dtype=np.float64)
-    for row, tokens in enumerate(token_lists):
-        for t in tokens:
-            X[row, index[t]] += 1.0
+    n, v = counts.shape
     rng = np.random.RandomState(seed)
     phi = rng.dirichlet(np.ones(v), size=num_topics)          # topic-word
     theta = np.full((n, num_topics), 1.0 / num_topics)        # doc-topic
@@ -124,15 +123,23 @@ def _lda_similarity(token_lists, num_topics, seed=42, iterations=50):
         resp_sum = resp.sum(axis=1, keepdims=True)
         resp_sum[resp_sum == 0] = 1.0
         resp /= resp_sum
-        weighted = resp * X[:, None, :]
+        weighted = resp * counts[:, None, :]
         theta = weighted.sum(axis=2) + 1e-9
         theta /= theta.sum(axis=1, keepdims=True)
         phi = weighted.sum(axis=0) + 1e-9
         phi /= phi.sum(axis=1, keepdims=True)
-    norms = np.linalg.norm(theta, axis=1)
-    norms[norms == 0] = 1.0
-    unit = theta / norms[:, None]
-    return unit @ unit[0]
+    return _cosine_to_first(theta)
+
+
+# the whole-timeline measures: the token column each fits over (sklearn
+# lowercases before tokenizing, so cosine reads its own stream) and its fit
+# over that column's count matrix, with the reference's topic counts
+# (otmt/timemap_measures.py:879-893)
+GROUP_MEASURES = {
+    "cosine": ("tokens_cos", _tfidf_cosine),
+    "gensim_lsi": ("tokens", partial(_lsi_similarity, num_topics=10)),
+    "gensim_lda": ("tokens", partial(_lda_similarity, num_topics=2)),
+}
 
 
 # past the cap, mementos get an error row instead of a silently-wrong fit
@@ -144,10 +151,9 @@ CAP_ERROR_MSG = ("Timeline exceeds the per-timeline document cap for whole-"
 DEFAULT_MAX_DOCS_PER_TIMELINE = 20_000
 
 
-def make_group_kernel(measures, num_topics_overrides=None,
+def make_group_kernel(measures,
                       max_docs_per_timeline=DEFAULT_MAX_DOCS_PER_TIMELINE):
     measures = list(measures)
-    overrides = num_topics_overrides or {}
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         # NULLS FIRST, matching the pairwise path's Spark window ordering
@@ -157,56 +163,46 @@ def make_group_kernel(measures, num_topics_overrides=None,
         pdf = pdf.sort_values(["warc_ts", "urim"], kind="mergesort",
                               na_position="first")
         urit = pdf["urit"].iloc[0]
+        urims = pdf["urim"].tolist()
         text_len = pdf["text_len"]
+        first_len = text_len.iloc[0]
+        if pd.isna(first_len) or first_len == 0:
+            error = FIRST_BP_ERROR_MSG if pd.isna(first_len) else FIRST_EMPTY_MSG
+            out = [_rows(urit, urims, m, error=error) for m in measures]
+            return pd.concat(out, ignore_index=True) if out \
+                else _rows(urit, [], "cosine")
+
+        has_text = text_len.notna()
+        keep = (has_text.cumsum() <= max_docs_per_timeline
+                if max_docs_per_timeline else has_text)
+        ok_mask, capped_mask = has_text & keep, has_text & ~keep
+        ok_urims = pdf.loc[ok_mask, "urim"].tolist()
+        bad_urims = pdf.loc[~has_text, "urim"].tolist()
+        capped_urims = pdf.loc[capped_mask, "urim"].tolist()
+
+        # tokens were computed ONCE upstream (enrich_pages) — the kernel
+        # consumes arrays, it never re-runs treebank+porter (the
+        # reference's 12x-reprocess bug); each token column's count matrix
+        # is built once, on first use, and shared by the measures fitting
+        # over it (LSI and LDA both read ``tokens``)
+        counts = {}
         out = []
         for measure in measures:
-            urims = pdf["urim"].tolist()
-            first_len = text_len.iloc[0]
-            if pd.isna(first_len):
-                out.append(_rows(urit, urims, measure, error=FIRST_BP_ERROR_MSG))
-                continue
-            if first_len == 0:
-                out.append(_rows(urit, urims, measure, error=FIRST_EMPTY_MSG))
-                continue
-
-            ok_mask = text_len.notna()
-            capped_mask = ok_mask & False
-            if max_docs_per_timeline and ok_mask.sum() > max_docs_per_timeline:
-                keep = ok_mask.cumsum() <= max_docs_per_timeline
-                capped_mask = ok_mask & ~keep
-                ok_mask &= keep
-            ok_urims = pdf.loc[ok_mask, "urim"].tolist()
-            bad_urims = pdf.loc[~(ok_mask | capped_mask), "urim"].tolist()
-            capped_urims = pdf.loc[capped_mask, "urim"].tolist()
-
-            # tokens were computed ONCE upstream (enrich_pages) — the kernel
-            # consumes arrays, it never re-runs treebank+porter (the
-            # reference's 12x-reprocess bug)
-            column = "tokens_cos" if measure == "cosine" else "tokens"
-            docs = [list(v) for v in pdf.loc[ok_mask, column]]
-
+            column, fit = GROUP_MEASURES[measure]
             try:
-                if measure == "cosine":
-                    sims = _tfidf_cosine(docs)
-                elif measure == "gensim_lsi":
-                    sims = _lsi_similarity(docs, overrides.get(measure, 10))
-                elif measure == "gensim_lda":
-                    sims = _lda_similarity(docs, overrides.get(measure, 2))
-                else:
-                    raise ValueError(measure)
+                if column not in counts:
+                    counts[column] = _count_matrix(
+                        pdf.loc[ok_mask, column].tolist())
+                sims = fit(counts[column])
             except ValueError as exc:
                 out.append(_rows(urit, urims, measure, error=repr(exc)))
                 continue
 
             out.append(_rows(urit, ok_urims, measure, scores=[float(s) for s in sims]))
-            if bad_urims:
-                out.append(_rows(
-                    urit, bad_urims, measure,
-                    error="Boilerplate could not be removed from memento",
-                ))
-            if capped_urims:
-                out.append(_rows(urit, capped_urims, measure,
-                                 error=CAP_ERROR_MSG))
+            for rest, error in ((bad_urims, ROW_BP_ERROR_MSG),
+                                (capped_urims, CAP_ERROR_MSG)):
+                if rest:
+                    out.append(_rows(urit, rest, measure, error=error))
         return pd.concat(out, ignore_index=True) if out else _rows(urit, [], "cosine")
 
     return kernel
@@ -215,25 +211,23 @@ def make_group_kernel(measures, num_topics_overrides=None,
 def score_group_measures(
     enriched: DataFrame,
     measures,
-    num_topics_overrides=None,
     max_docs_per_timeline=DEFAULT_MAX_DOCS_PER_TIMELINE,
 ) -> DataFrame:
     """Run the grouped kernels; input must carry urit, urim, warc_ts, text
-    (or its length as ``text_len``) and tokens (LSI/LDA consume the shared
-    ``tokens`` column), and for cosine ``tokens_cos`` — sklearn lowercases before tokenizing, so its
-    token stream genuinely differs (``enrich_pages`` computes it in the
-    same Python pass as ``tokens``)."""
+    (or its length as ``text_len``) and the token columns the measures fit
+    over (:data:`GROUP_MEASURES`): ``tokens`` for LSI/LDA, ``tokens_cos``
+    for cosine — sklearn lowercases before tokenizing, so its token stream
+    genuinely differs (``enrich_pages`` computes it in the same Python pass
+    as ``tokens``)."""
     measures = list(measures)
-    kernel = make_group_kernel(measures, num_topics_overrides,
-                               max_docs_per_timeline)
+    kernel = make_group_kernel(measures, max_docs_per_timeline)
+    read = {GROUP_MEASURES[m][0] for m in measures}
     none = F.lit(None).cast("array<string>")
     cols = [F.col("urit"), F.col("urim"), F.col("warc_ts"),
             F.col("text_len") if "text_len" in enriched.columns
-            else F.length("text").alias("text_len"),
-            F.col("tokens") if any(m != "cosine" for m in measures)
-            else none.alias("tokens"),
-            F.col("tokens_cos") if "cosine" in measures
-            else none.alias("tokens_cos")]
+            else F.length("text").alias("text_len")]
+    cols += [F.col(c) if c in read else none.alias(c)
+             for c in ("tokens", "tokens_cos")]
     return (
         enriched.select(*cols)
         .groupBy("urit")

@@ -27,6 +27,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.udfs import token_levenshtein_udf
+from .groupkernels import GROUP_MEASURES, score_group_measures
+from .measures_constants import (
+    FIRST_BP_ERROR_MSG,
+    FIRST_EMPTY_MSG,
+    ROW_BP_ERROR_MSG,
+)
 from .timeline import enrich_pages, first_over_timeline
 
 # otmt/timemap_measures.py:895-970; preproc flags per compute_* wrappers
@@ -39,19 +45,16 @@ MEASURE_REGISTRY = {
     "sorensen":      {"direction": ">", "threshold": 0.93,  "flags": (True, True, True)},
     "raw_simhash":   {"direction": ">", "threshold": 38.0,  "flags": (False, False, False)},
     "tf_simhash":    {"direction": ">", "threshold": 34.0,  "flags": (True, True, True)},
-    "gensim_lsi":    {"direction": "<", "threshold": 0.07,  "flags": (True, True, True), "num_topics": 10},
-    "gensim_lda":    {"direction": "<", "threshold": 0.15,  "flags": (True, True, True), "num_topics": 2},
+    "gensim_lsi":    {"direction": "<", "threshold": 0.07,  "flags": (True, True, True)},
+    "gensim_lda":    {"direction": "<", "threshold": 0.15,  "flags": (True, True, True)},
     "levenshtein":   {"direction": ">", "threshold": 0.05,  "flags": (True, True, True)},
     "nlevenshtein":  {"direction": ">", "threshold": 0.05,  "flags": (True, True, True)},
 }
 
 DEFAULT_MEASURES = ("cosine",)  # bin/detect_off_topic:62 — default is cosine only
 
-from .measures_constants import FIRST_BP_ERROR_MSG, FIRST_EMPTY_MSG  # noqa: E402
-
-ROW_BP_ERROR_MSG = "Boilerplate could not be removed from memento"
-
-_GROUP_KERNELS = ("cosine", "gensim_lsi", "gensim_lda")
+# the whole-timeline measures run as the grouped kernels
+_GROUP_KERNELS = tuple(GROUP_MEASURES)
 
 
 _SCALARIZED = ("_set_inter", "_set_union", "_set_a_n", "_set_b_n",
@@ -92,6 +95,11 @@ def _pairwise_score_column(name):
     inter = F.col("_set_inter")
     union = F.col("_set_union")
 
+    # the token-family gate; only bytecount and raw_simhash, which read
+    # the raw page, gate on their own columns
+    first_bad = F.col("_first_tokens_bad")
+    first_empty = F.col("first_n_tokens") == 0
+    row_bad = F.col("tokens").isNull()
     if name == "bytecount":
         score = (F.col("raw_len") / F.col("first_raw_len") - 1).cast("double")
         first_bad = F.col("first_raw_len").isNull()
@@ -99,38 +107,20 @@ def _pairwise_score_column(name):
         row_bad = F.col("raw_len").isNull()
     elif name == "wordcount":
         score = (F.col("n_tokens") / F.col("first_n_tokens") - 1).cast("double")
-        first_bad = F.col("_first_tokens_bad")
-        first_empty = F.col("first_n_tokens") == 0
-        row_bad = F.col("tokens").isNull()
     elif name == "jaccard":
         score = (F.lit(1.0) - inter / union).cast("double")
-        first_bad = F.col("_first_tokens_bad")
-        first_empty = F.col("first_n_tokens") == 0
-        row_bad = F.col("tokens").isNull()
     elif name == "sorensen":
         score = (F.lit(1.0) - (F.lit(2.0) * inter)
                  / (F.col("_set_a_n") + F.col("_set_b_n"))).cast("double")
-        first_bad = F.col("_first_tokens_bad")
-        first_empty = F.col("first_n_tokens") == 0
-        row_bad = F.col("tokens").isNull()
     elif name == "levenshtein":
         # `_lev` computed once upstream and shared with nlevenshtein
         score = F.col("_lev").cast("double")
-        first_bad = F.col("_first_tokens_bad")
-        first_empty = F.col("first_n_tokens") == 0
-        row_bad = F.col("tokens").isNull()
     elif name == "nlevenshtein":
         longest = F.greatest("first_n_tokens", "n_tokens")
         score = F.when(longest == 0, F.lit(0.0)) \
                  .otherwise(F.col("_lev") / longest).cast("double")
-        first_bad = F.col("_first_tokens_bad")
-        first_empty = F.col("first_n_tokens") == 0
-        row_bad = F.col("tokens").isNull()
     elif name == "tfintersection":
         score = F.col("_tf20_inter").cast("double")
-        first_bad = F.col("_first_tokens_bad")
-        first_empty = F.col("first_n_tokens") == 0
-        row_bad = F.col("tokens").isNull()
     elif name == "raw_simhash":
         score = F.bit_count(
             F.col("first_raw_simhash").bitwiseXOR(F.col("raw_simhash"))
@@ -142,9 +132,6 @@ def _pairwise_score_column(name):
         score = F.bit_count(
             F.col("first_tf_simhash").bitwiseXOR(F.col("tf_simhash"))
         ).cast("double")
-        first_bad = F.col("_first_tokens_bad")
-        first_empty = F.col("first_n_tokens") == 0
-        row_bad = F.col("tokens").isNull()
     else:
         raise ValueError(f"unknown pairwise measure {name}")
 
@@ -254,7 +241,8 @@ def _scores_and_enrichment(pages, measures, thresholds, metadata):
     need = {"raw_simhash": metadata or "raw_simhash" in pairwise,
             "tf_simhash": "tf_simhash" in pairwise,
             "top20": "tfintersection" in pairwise,
-            "tokens_cos": "cosine" in grouped}
+            "tokens_cos": any(GROUP_MEASURES[m][0] == "tokens_cos"
+                              for m in grouped)}
     optional = [name for name, needed in need.items() if needed]
     df = enrich_pages(pages, ["text", "tokens"] + optional)
     if bool(pairwise) + bool(grouped) + metadata > 1:
@@ -323,8 +311,6 @@ def _scores_and_enrichment(pages, measures, thresholds, metadata):
         )
 
     if grouped:
-        from .groupkernels import score_group_measures  # local import, avoids cycle
-
         long_parts.append(score_group_measures(df, grouped))
 
     scores = long_parts[0]

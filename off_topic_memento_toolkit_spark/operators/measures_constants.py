@@ -11,6 +11,7 @@ FIRST_EMPTY_MSG = (
     "After processing content, the first memento in TimeMap is now empty, "
     "cannot effectively compare memento content"
 )
+ROW_BP_ERROR_MSG = "Boilerplate could not be removed from memento"
 
 # otmt/measuremodel.py:247-336 — three mutually exclusive error classes;
 # CSV labels from measuremodel.py:681-717

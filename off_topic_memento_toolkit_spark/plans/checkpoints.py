@@ -305,15 +305,15 @@ class CheckpointStore:
         The data path derives from THIS store's root + the marker's version
         — never from the write-time path string — so a relocated checkpoint
         tree (copied root, different cwd for a relative root) resumes in
-        place.  Markers from the pre-versioned format (no ``version`` key)
-        fall back to the legacy flat ``<root>/<stage>`` layout."""
+        place.  A marker without a ``version`` (the pre-versioned flat
+        layout) is refused: rebuild that checkpoint."""
         if version is None:
             version = self.marker(stage).get("version")
-            if version is None:  # legacy flat layout
-                return (
-                    self.spark.read.parquet(self._stage_dir(stage))
-                    .drop(*_LINEAGE_COLS)
-                )
+            if version is None:
+                raise ValueError(
+                    f"stage {stage!r} was committed in the pre-versioned "
+                    f"flat layout, which is no longer read — rebuild the "
+                    f"checkpoint with `dedup --checkpoint-dir`")
             path = self._version_dir(stage, version)
         else:
             path = self._version_dir(stage, version)

@@ -146,7 +146,6 @@ def dedup_pipeline(
     bands: int = 32,
     min_jaccard: float = 0.8,
     max_hamming: int = 3,
-    verify: bool = True,
     verify_method: str = "jaccard",
     min_lcs_ratio: float = 0.6,
     cc_small_graph_threshold: int = 1 << 20,
@@ -197,7 +196,7 @@ def dedup_pipeline(
         from ..session import pin_for_session
 
         pin_cols = ["nid", "urim", "tokens", "raw_simhash"]
-        if verify and verify_method == "lcs":
+        if verify_method == "lcs":
             pin_cols.insert(2, "text")
         docs = pin_for_session(docs.select(*pin_cols))
 
@@ -220,7 +219,7 @@ def dedup_pipeline(
                                max_hamming)
 
     candidates = stage("candidate_edges", build_candidates)
-    if store is None and verify:
+    if store is None:
         # the verify stage traverses candidates TWICE (endpoint prune +
         # pair join).  With a store that second traversal is a cheap
         # re-read of the committed stage table; without one it would
@@ -232,8 +231,6 @@ def dedup_pipeline(
         candidates = pin_for_session(candidates)
 
     def build_verified():
-        if not verify:
-            return candidates
         # prune the corpus to the pair endpoints before the payload joins —
         # candidates is a materialized stage here, so the prune's second
         # traversal of it is a cheap re-read (see

@@ -144,18 +144,86 @@ def test_lsi_kernel_analytic_goldens():
     import math
 
     from off_topic_memento_toolkit_spark.operators.groupkernels import (
+        _count_matrix,
         _lsi_similarity,
     )
 
     docs = [["a", "a", "b"], ["a", "b", "b"], ["a", "a", "a"]]
 
-    sims = _lsi_similarity(docs, num_topics=2)
+    sims = _lsi_similarity(_count_matrix(docs), num_topics=2)
     assert abs(sims[0] - 1.0) < 1e-9
     assert abs(sims[1] - 0.8) < 1e-9
     assert abs(sims[2] - 2.0 / math.sqrt(5.0)) < 1e-9
 
-    sims1 = _lsi_similarity(docs, num_topics=1)
+    sims1 = _lsi_similarity(_count_matrix(docs), num_topics=1)
     assert all(abs(s - 1.0) < 1e-9 for s in sims1)
+
+
+def _timeline(tokens, tokens_cos, urit="t"):
+    """One timeline as the group kernel receives it: the urit group of the
+    enrichment, rows out of order (the kernel sorts them)."""
+    import numpy as np
+    import pandas as pd
+
+    n = len(tokens)
+    frame = pd.DataFrame({
+        "urit": [urit] * n,
+        "urim": [f"{urit}/m{i}" for i in range(n)],
+        "warc_ts": pd.date_range("2020-01-01", periods=n, freq="D"),
+        "text_len": [100.0] * n,
+        "tokens": [np.array(t, dtype=object) for t in tokens],
+        "tokens_cos": [np.array(t, dtype=object) for t in tokens_cos],
+    })
+    return frame.iloc[::-1].reset_index(drop=True)
+
+
+def test_group_kernel_builds_one_count_matrix_per_token_column(monkeypatch):
+    """cosine fits over ``tokens_cos``; LSI and LDA share ONE count matrix
+    of ``tokens``: two builds per timeline for the three measures, each
+    over its column's token lists in timeline order."""
+    from off_topic_memento_toolkit_spark.operators import groupkernels
+
+    built = []
+    real = groupkernels._count_matrix
+
+    def counting(token_lists):
+        built.append([list(t) for t in token_lists])
+        return real(token_lists)
+
+    monkeypatch.setattr(groupkernels, "_count_matrix", counting)
+    kernel = groupkernels.make_group_kernel(
+        ["cosine", "gensim_lsi", "gensim_lda"])
+    tokens = [["a", "b"], ["b", "c", "c"], ["d"]]
+    tokens_cos = [["x"], ["x", "y"], ["z", "z"]]
+    for timeline in ("t1", "t2"):
+        built.clear()
+        out = kernel(_timeline(tokens, tokens_cos, urit=timeline))
+        assert sorted(built) == sorted([tokens, tokens_cos])
+        assert out["error_msg"].isna().all()
+        assert sorted(out["measure"].value_counts().items()) == [
+            ("cosine", 3), ("gensim_lda", 3), ("gensim_lsi", 3)]
+
+
+def test_group_kernel_empty_tokens_vocabulary_errors_only_its_measures():
+    """An all-empty ``tokens`` column fails LSI and LDA with the
+    empty-vocabulary error row for every memento, while cosine still
+    scores from ``tokens_cos``."""
+    from off_topic_memento_toolkit_spark.operators.groupkernels import (
+        make_group_kernel,
+    )
+
+    out = make_group_kernel(["gensim_lsi", "cosine", "gensim_lda"])(
+        _timeline([[], [], []], [["x"], ["x", "y"], ["z"]]))
+    by_measure = {m: rows for m, rows in out.groupby("measure")}
+    for measure in ("gensim_lsi", "gensim_lda"):
+        rows = by_measure[measure]
+        assert len(rows) == 3
+        assert (rows["error_msg"] == "ValueError('empty vocabulary')").all()
+        assert rows["comparison_score"].isna().all()
+    cosine = by_measure["cosine"].set_index("urim")
+    assert cosine["error_msg"].isna().all()
+    assert cosine.loc["t/m0", "comparison_score"] == pytest.approx(1.0)
+    assert cosine.loc["t/m2", "comparison_score"] == 0.0
 
 
 def test_porter_short_word_case_preserved():

@@ -312,6 +312,27 @@ def test_only_lsh_turns_buckets_into_pairs():
     assert not sites, sites
 
 
+def test_only_count_matrix_builds_a_vocabulary():
+    """The whole-timeline measures share one count build per token column:
+    in groupkernels.py only _count_matrix factorizes tokens into a
+    vocabulary and counts them; the fits and the kernel loop over no
+    tokens."""
+    import ast
+
+    path = pathlib.Path(package.__file__).parent / "operators" / "groupkernels.py"
+    lines = path.read_text().splitlines()
+    build = next(node for node in ast.parse(path.read_text()).body
+                 if isinstance(node, ast.FunctionDef)
+                 and node.name == "_count_matrix")
+    own = range(build.lineno, build.end_lineno + 1)
+    pattern = re.compile(
+        r"factorize\(|np\.unique\(|bincount\(|sorted\(\{|\bfor \w+ in tokens\b")
+    sites = [n for n, line in enumerate(lines, 1)
+             if pattern.search(line) and n not in own]
+    assert not sites, sites
+    assert any(pattern.search(lines[n - 1]) for n in own)
+
+
 def test_slice_by_datetime_no_single_partition_sort(spark):
     """W3's global rank must come from the distributed two-phase ranking:
     no Exchange SinglePartition (the old all-to-one Window) anywhere, and

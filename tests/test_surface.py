@@ -715,9 +715,10 @@ def test_streaming_stateful_dedup_state_survives_restart(spark, tmp_path):
     assert got == want and len(got) > len(run1) > 0
 
 
-def test_checkpoint_reads_legacy_flat_layout(spark, tmp_path):
-    """Markers written before the versioned-snapshot format (no 'version'
-    key, data in a flat <root>/<stage> dir) must still resume."""
+def test_checkpoint_refuses_legacy_flat_layout(spark, tmp_path):
+    """A marker from before the versioned-snapshot format (no 'version'
+    key, data in a flat <root>/<stage> dir) is refused, naming the stage
+    and the rebuild, not read; versioned stages beside it still read."""
     import json as _json
 
     from off_topic_memento_toolkit_spark.plans.checkpoints import (
@@ -735,11 +736,13 @@ def test_checkpoint_reads_legacy_flat_layout(spark, tmp_path):
 
     store = CheckpointStore(spark, root, run_id="r1")
     assert store.is_committed("t")
-    assert store.read("t").count() == 7
-    assert store.run_stage("t", lambda: 1 / 0).count() == 7  # pure read
-    # a fresh commit upgrades the stage to the versioned layout in place
+    for read in (lambda: store.read("t"),
+                 lambda: store.run_stage("t", lambda: 1 / 0)):
+        with pytest.raises(ValueError, match=r"'t'.*dedup --checkpoint-dir"):
+            read()
     store.write(spark.range(3).selectExpr("id"), "t2")
     assert store.marker("t2")["version"] == 1
+    assert store.read("t2").count() == 3
 
 
 def test_cli_filter_consideration_lists(spark, tmp_path):
