@@ -60,7 +60,10 @@ def _rows(urit, urims, measure, scores=None, error=None):
         "urim": list(urims),
         "measuretype": ["timemap measures"] * n,
         "measure": [measure] * n,
-        "comparison_score": list(scores) if scores is not None else [None] * n,
+        # float64 either way: error rows carry NaN (null in Arrow), so a
+        # timeline mixing scored and error rows concatenates to float64
+        "comparison_score": np.full(n, np.nan) if scores is None
+        else np.asarray(scores, dtype=np.float64),
         "tokenized": [True] * n,
         "stemmed": [True] * n,
         "removed_boilerplate": [True] * n,
@@ -198,7 +201,7 @@ def make_group_kernel(measures,
                 out.append(_rows(urit, urims, measure, error=repr(exc)))
                 continue
 
-            out.append(_rows(urit, ok_urims, measure, scores=[float(s) for s in sims]))
+            out.append(_rows(urit, ok_urims, measure, scores=sims))
             for rest, error in ((bad_urims, ROW_BP_ERROR_MSG),
                                 (capped_urims, CAP_ERROR_MSG)):
                 if rest:

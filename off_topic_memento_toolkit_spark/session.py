@@ -6,6 +6,7 @@ here assumes single-node execution.
 """
 
 import os
+import re
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
@@ -80,19 +81,38 @@ def release_session_pins() -> int:
     return release_persisted(_SESSION_PINS)
 
 
-def get_spark(
-    app_name: str = "otmt-spark",
+# Generated classes a session keeps compiled.  Spark's default cap (100, a
+# static conf) is below one detect + story operation's 127 classes, so each
+# warm operation recompiled ~119 of them with Janino and the JIT compiled
+# them again.  scripts/codegen_census.py counts 734 distinct classes over
+# every CLI command in one session.  Guava splits the cap over 4 LRU
+# segments; at 1000 the fullest segment's share of the census (~220) stays
+# under its 250.
+CODEGEN_CACHE_ENTRIES = 1000
+
+# The worker daemon for masters get_spark picks itself: it imports pyspark
+# from site-packages instead of Spark's zips (see worker_daemon.py).  Other
+# masters keep Spark's daemon, since their workers' PYTHONPATH may not hold
+# this package.
+WORKER_DAEMON = "off_topic_memento_toolkit_spark.worker_daemon"
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+
+
+def session_conf(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
-) -> SparkSession:
+) -> tuple[str | None, dict]:
+    """The master :func:`get_spark` sets (None: left to ``SPARK_MASTER`` or
+    spark-submit) and its conf, the caller's ``extra_conf`` winning."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.appName(app_name)
+    if not master and not os.environ.get("SPARK_MASTER"):
+        master = f"local[{cpus}]"
+    conf = {
         # AQE: runtime coalescing, skew-join splitting, dynamic join strategy
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
         # InferFiltersFromGenerate synthesizes size(arr)>0 filters above
         # every Generate; when the array is a Python-UDF column the filter
         # is then pushed below the enrichment exchange and re-evaluates the
@@ -101,30 +121,29 @@ def get_spark(
         # minhash pass per band-table build).  Every explode in this engine
         # runs over derived/UDF arrays where the inferred filter can never
         # reach a file scan, so the rule only costs here.
-        .config(
-            "spark.sql.optimizer.excludedRules",
+        "spark.sql.optimizer.excludedRules":
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
         # Arrow transfer for every pandas UDF / applyInPandas kernel
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions if shuffle_partitions else max(int(cpus) * 2, 8)),
-        )
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
+        "spark.sql.shuffle.partitions":
+            str(shuffle_partitions or max(int(cpus) * 2, 8)),
         # keep partition sizes bounded when scanning wide binary (html) columns
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-    )
+        "spark.sql.files.maxPartitionBytes": "134217728",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+    }
+    if master and _LOCAL_MASTER.fullmatch(master):
+        conf["spark.python.daemon.module"] = WORKER_DAEMON
     # shuffle/spill scratch on tmpfs when available: the sandbox's virtio
     # disk has bursty throughput that shows up as bimodal shuffle times;
     # a real cluster provisions local NVMe for exactly this reason
     shm = os.environ.get("SPARK_LOCAL_DIRS_OVERRIDE", "/dev/shm/spark-local")
     try:
         os.makedirs(shm, exist_ok=True)
-        builder = builder.config("spark.local.dir", shm)
+        conf["spark.local.dir"] = shm
     except OSError:
         pass
     # Python workers unpickle the package's UDFs by module path, but only
@@ -133,15 +152,24 @@ def get_spark(
     # directory to the workers, ahead of any PYTHONPATH they inherit
     package_parent = os.path.dirname(
         os.path.dirname(os.path.abspath(__file__)))
-    worker_path = os.pathsep.join(
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         p for p in (package_parent, os.environ.get("PYTHONPATH")) if p)
     # pre-session settings (executor memory/env for local-cluster or a real
     # cluster manager) must land before getOrCreate; the caller's values win
-    conf = {"spark.executorEnv.PYTHONPATH": worker_path, **(extra_conf or {})}
+    conf.update(extra_conf or {})
+    return master, conf
+
+
+def get_spark(
+    app_name: str = "otmt-spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict | None = None,
+) -> SparkSession:
+    master, conf = session_conf(master, shuffle_partitions, extra_conf)
+    builder = SparkSession.builder.appName(app_name)
     for key, value in conf.items():
         builder = builder.config(key, value)
     if master:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
     return builder.getOrCreate()

@@ -8,7 +8,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Per-run isolation: this process runs BOTH the Spark queries (which write
 # the materialized intermediates) and the DuckDB oracles (which read them),

@@ -2,8 +2,10 @@
 test constants (tests/timemap_measures_test.py in /root/reference) — these are
 environment-independent regression anchors."""
 
+import warnings
 from datetime import datetime
 
+import numpy as np
 import pytest
 
 from off_topic_memento_toolkit_spark.functions.seqdist import (
@@ -207,13 +209,17 @@ def test_group_kernel_builds_one_count_matrix_per_token_column(monkeypatch):
 def test_group_kernel_empty_tokens_vocabulary_errors_only_its_measures():
     """An all-empty ``tokens`` column fails LSI and LDA with the
     empty-vocabulary error row for every memento, while cosine still
-    scores from ``tokens_cos``."""
+    scores from ``tokens_cos``.  The mixed timeline concatenates scored and
+    error rows with no dtype warning, into a float64 score column."""
     from off_topic_memento_toolkit_spark.operators.groupkernels import (
         make_group_kernel,
     )
 
-    out = make_group_kernel(["gensim_lsi", "cosine", "gensim_lda"])(
-        _timeline([[], [], []], [["x"], ["x", "y"], ["z"]]))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        out = make_group_kernel(["gensim_lsi", "cosine", "gensim_lda"])(
+            _timeline([[], [], []], [["x"], ["x", "y"], ["z"]]))
+    assert out["comparison_score"].dtype == np.float64
     by_measure = {m: rows for m, rows in out.groupby("measure")}
     for measure in ("gensim_lsi", "gensim_lda"):
         rows = by_measure[measure]
